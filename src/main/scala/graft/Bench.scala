@@ -112,31 +112,23 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
     // Local-iteration conf overrides (semicolon-separated k=v): lets an
-    // optimization pass A/B a runtime setting without recompiling. The
-    // driver never sets this — the measured bench runs on the defaults
-    // above.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v.trim)
-        case _ if kv.trim.nonEmpty =>
-          // loud, not silent: a malformed entry (missing '=') that
-          // quietly no-ops would make an A/B "no effect" conclusion
-          // wrong
-          System.err.println(s"[bench] ignoring malformed SPARK_GRAFT_CONF entry: '$kv'")
-        case _ =>
+    // optimization pass A/B a runtime setting without recompiling.
+    // Measured runs leave it unset and use the Harness defaults.
+    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(';')).flatMap { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
+          case _ =>
+            // loud, not silent: a malformed entry (missing '=') that
+            // quietly no-ops would make an A/B "no effect" conclusion
+            // wrong
+            if (kv.trim.nonEmpty)
+              System.err.println(s"[bench] ignoring malformed SPARK_GRAFT_CONF entry: '$kv'")
+            None
+        }
       }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCores, overrides)
     // untimed warmup: JIT/codegen/parquet-reader init, so query 1
     // doesn't carry ~5s of JVM cold start (fixed cheap query — Map
     // .head would pick an arbitrary, possibly expensive one)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection surface: dumps `explain("formatted")` for every
   * registered query (or the names passed as args) so plan properties
   * — PushedFilters reaching the parquet scan, broadcast joins on the
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4)
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

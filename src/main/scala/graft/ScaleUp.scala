@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-cliff probe data generator: replicates an existing testdata
@@ -31,15 +31,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCores)
     // events.ts is TIMESTAMP(NANOS); read it as a plain long (same
     // nanos value) — Tables.events applies `ts div 1000` on the long
     // form identically, so the scaled copy stays loader-compatible.

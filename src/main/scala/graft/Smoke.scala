@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke: drives SparkEntry.entry the way the driver does
   * (rows>0 on sf0.001) and prints the result.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(8)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, false)

@@ -33,7 +33,12 @@ object Par {
     * with the second thunk's early stages. Failures propagate to the
     * caller like the sequential form's would.
     */
-  def run[A](thunks: Seq[() => A]): Seq[A] = {
+  def run[A](thunks: Seq[() => A]): Seq[A] = run(thunks, DrainTimeoutMs)
+
+  /** How long a failed call waits for cancelled siblings to stop. */
+  private val DrainTimeoutMs = 60000L
+
+  private[graft] def run[A](thunks: Seq[() => A], drainMs: Long): Seq[A] = {
     // strict copy: a lazy Seq (Stream/view) would defer submission
     // into the result map — one-at-a-time execution, or submission
     // after pool shutdown
@@ -48,9 +53,10 @@ object Par {
         t.setDaemon(true)
         t
       })
+    val done = new java.util.concurrent.ExecutorCompletionService[A](pool)
     try {
       val futs = ts.zipWithIndex.map { case (t, i) =>
-        pool.submit(new java.util.concurrent.Callable[A] {
+        done.submit(new java.util.concurrent.Callable[A] {
           override def call(): A = {
             // a pool thread has no inherited active session; Dataset
             // methods resolve it from the frame, but functions built
@@ -67,34 +73,36 @@ object Par {
           }
         })
       }
-      var failure: Throwable = null
-      val out = futs.map { f =>
-        if (failure != null) null.asInstanceOf[A]
-        else try f.get()
-        catch {
-          case e: Throwable =>
-            failure = e match {
-              case ee: java.util.concurrent.ExecutionException => ee.getCause
-              case other => other
-            }
-            // A failed thunk must not leave siblings running detached
-            // (a store WRITE landing after the caller saw the failure
-            // and started cleanup/retry would corrupt the new state —
-            // sequentially, later work never started). Interrupt the
-            // threads, cancel their Spark job groups, and WAIT for
-            // the pool to drain before rethrowing.
-            futs.foreach(_.cancel(true))
-            session.foreach { s =>
-              ts.indices.foreach(j =>
-                s.sparkContext.cancelJobGroup(s"$groupPrefix-$j"))
-            }
-            pool.shutdownNow()
-            pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-            null.asInstanceOf[A]
-        }
+      // completion order, not submission order: a thunk that fails
+      // fast must not wait behind a slow sibling submitted before it
+      try ts.indices.foreach(_ => done.take().get())
+      catch {
+        case e: Throwable =>
+          val failure = e match {
+            case ee: java.util.concurrent.ExecutionException => ee.getCause
+            case other => other
+          }
+          // A failed thunk must not leave siblings running detached
+          // (a store WRITE landing after the caller saw the failure
+          // and started cleanup/retry would corrupt the new state —
+          // sequentially, later work never started). Interrupt the
+          // threads, cancel their Spark job groups, and WAIT for
+          // the pool to drain before rethrowing.
+          futs.foreach(_.cancel(true))
+          session.foreach { s =>
+            ts.indices.foreach(j =>
+              s.sparkContext.cancelJobGroup(s"$groupPrefix-$j"))
+          }
+          pool.shutdownNow()
+          if (!pool.awaitTermination(drainMs,
+              java.util.concurrent.TimeUnit.MILLISECONDS))
+            throw new IllegalStateException(
+              s"graft.Par: a thunk failed and its siblings are still " +
+                s"running $drainMs ms after cancellation — state they " +
+                "write (e.g. a store) may be mid-write", failure)
+          throw failure
       }
-      if (failure != null) throw failure
-      out
+      futs.map(_.get())
     } finally pool.shutdown()
   }
 

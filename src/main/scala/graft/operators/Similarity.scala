@@ -328,10 +328,35 @@ object Similarity {
     */
   private def subSlices(e: DataFrame, id: String, vcol: String,
                         xcol: String): DataFrame =
-    e.select(col(id), posexplode(expr(
-      s"transform(sequence(0, ${PqM - 1}), " +
-        s"m -> slice($vcol, m * $PqSubDim + 1, $PqSubDim))"))
-      .as(Seq("m", xcol)))
+    e.select(col(id), posexplode(slicesOf(vcol)).as(Seq("m", xcol)))
+
+  /** The PqM subspace slices of array column `vcol`, as one array. */
+  private def slicesOf(vcol: String): Column =
+    expr(s"transform(sequence(0, ${PqM - 1}), " +
+      s"m -> slice($vcol, m * $PqSubDim + 1, $PqSubDim))")
+
+  /** The sampled fine codebook (code, m, c): the "c" seed sample's
+    * sub-vectors. It is the plain ADC LUT's table and, as
+    * (m, code, c), pqCodes' encode target and the code store's `.pq`
+    * sidecar.
+    */
+  private def sampledCodebook(e: DataFrame): DataFrame =
+    subSlices(hashSample(e, "c", CentCount)
+        .select(col("vec_id").as("code"), col("v").as("cv")),
+      "code", "cv", "c")
+
+  /** Per-query plain ADC lookup table (query_id, m, code, qp): each
+    * query sub-vector of `queries(vec_id, v)` dotted with every entry
+    * of `cs(m, code, c)` in its subspace, micro-unit-quantized so the
+    * candidate sums are exact integers.
+    */
+  private def adcLut(queries: DataFrame, cs: DataFrame): DataFrame =
+    subSlices(queries.withColumnRenamed("vec_id", "query_id"),
+      "query_id", "v", "qx")
+      .join(cs, Seq("m"))
+      .select(col("query_id"), col("m"), col("code"),
+        round(dotFast(col("qx"), col("c")) * lit(1000000.0d))
+          .cast("long").as("qp"))
 
   /** PQ code assignment: for each vector and subspace, the nearest
     * codebook entry by squared L2 distance. The codebook is the
@@ -353,11 +378,8 @@ object Similarity {
     */
   def pqCodes(emb: DataFrame): DataFrame = {
     val e = vecs(emb)
-    val cent = hashSample(e, "c", CentCount)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
     pqEncodeAgainst(subSlices(e, "vec_id", "v", "x"),
-      subSlices(cent, "cent_id", "cv", "c")
-        .select(col("m"), col("cent_id").as("code"), col("c")))
+      sampledCodebook(e).select("m", "code", "c"))
   }
 
   /** The ONE float-space PQ encode: per (vector, subspace), the
@@ -485,44 +507,98 @@ object Similarity {
     cent
   }
 
+  /** The integer residual r = x − cv of columns `v` and `cv`, as an
+    * int64 micro-unit array. x and the centroid quantize SEPARATELY
+    * (x via the established raw-value rounding; the centroid recovers
+    * the codebook's exact integer micro-units, since cv = cq/10⁶ with
+    * |cq| ≪ 2⁵² makes round(cv·10⁶) = cq in any IEEE engine) and
+    * subtract in int64. Subtracting in DOUBLE first would manufacture
+    * values the raw corpus never exhibits, including 6-decimal
+    * half-ties on which Spark (BigDecimal on the shortest decimal
+    * repr) and DuckDB (multiplicative) can disagree.
+    */
+  private def residualQ: Column =
+    expr("zip_with(v, cv, (a, b) -> " +
+      "cast(round(a * 1000000.0D) as bigint) - " +
+      "cast(round(b * 1000000.0D) as bigint))")
+
   /** Residual micro-quantized slices (vec_id, cell, m, q): r = x − cv
     * of the home cell under the SHARED coarse codebook, sliced per
     * subspace — FAISS IVFPQ's actual encoding input (PQ on residuals
     * removes the coarse variance the cell id already carries, so the
     * fine codebook spends its bits on what the coarse one missed).
-    * The residual is PURE INTEGER: x and the centroid quantize
-    * SEPARATELY (x via the established raw-value rounding; the
-    * centroid recovers the codebook's exact integer micro-units,
-    * since cv = cq/10⁶ with |cq| ≪ 2⁵² makes round(cv·10⁶) = cq in
-    * any IEEE engine) and subtract in int64. The round-6 form
-    * round((a−b)·10⁶) subtracted in DOUBLE first, which manufactures
-    * values the raw corpus never exhibits — including 6-decimal
-    * half-ties where Spark (BigDecimal on the shortest decimal
-    * repr) and DuckDB (multiplicative) can disagree; that was the
-    * prime suspect in the round-6 driver-gate hash flake, and the
-    * integer form removes the float subtraction entirely.
     */
-  /** The (vec_id, home cell) relation of a residual slice stream:
-    * cell is constant per vector, so the m=0 slice IS the distinct
-    * (vec_id, cell) relation minus the distinct's exchange (round-13
-    * optimization pass; one definition for the three res-chain
-    * consumers so the m=0 invariant lives in one place).
-    */
-  private def homeCells(xqmFull: DataFrame): DataFrame =
-    xqmFull.filter(col("m") === 0).select(col("vec_id"), col("cell"))
-
   private def residualSlicesQ(emb: DataFrame, cents: DataFrame,
                               asnOpt: Option[DataFrame] = None): DataFrame =
     asnOpt.getOrElse(ivfAssign(emb, Some(cents)))
       .join(broadcast(cents), col("cell") === col("cent_id"))
+      .select(col("vec_id"), col("cell"), residualQ.as("rq"))
       .select(col("vec_id"), col("cell"),
-        expr("zip_with(v, cv, (a, b) -> " +
-          "cast(round(a * 1000000.0D) as bigint) - " +
-          "cast(round(b * 1000000.0D) as bigint))").as("rq"))
-      .select(col("vec_id"), col("cell"), posexplode(expr(
-        s"transform(sequence(0, ${PqM - 1}), " +
-          s"m -> slice(rq, m * $PqSubDim + 1, $PqSubDim))"))
-        .as(Seq("m", "q")))
+        posexplode(slicesOf("rq")).as(Seq("m", "q")))
+
+  /** The residual IVF-PQ chain, built once for every residual
+    * consumer: coarse codebook → residual slices `xqmFull(vec_id,
+    * cell, m, q)` → fine codebook `cb(m, cell, cq)` trained on the
+    * residuals → every vector's residual code `codes(vec_id, m,
+    * code)`. `coarse` yields the coarse codebook and optionally its
+    * corpus assignment; it is evaluated inside the overlapped thunk.
+    */
+  private def residualChain(emb: DataFrame,
+                            coarse: => (DataFrame, Option[DataFrame]))
+  : (DataFrame, DataFrame, DataFrame) = {
+    // The fine training DEPENDS on the coarse codebook (it trains on
+    // residuals), so the two ladders cannot overlap. The seed sample
+    // (a corpus count + a TakeOrdered pass) is independent of the
+    // coarse chain: run it beside the coarse ladder + residual-slice
+    // materialization (guide §2.6).
+    val (xqmFull, seeds) = Par.run2(
+      () => {
+        val (cents, asnOpt) = coarse
+        residualSlicesQ(emb, cents, asnOpt).localCheckpoint(true)
+      },
+      () => pqSeedIds(emb).localCheckpoint(true))
+    val xqm = xqmFull.select("vec_id", "m", "q")
+    val cb = trainSubspaces(xqm, seeds, IvfTrainRounds)
+      .localCheckpoint(false) // codes + LUT
+    val codes = pqAssign(xqm, cb)
+      .select(col("vec_id"), col("m"), col("cell").as("code"))
+    (xqmFull, cb, codes)
+  }
+
+  /** The residual ADC top-k tail: the LUT partials `part` of the
+    * query side `qres(query_id, qcell, m, rq)` against the chain's
+    * fine codebook (`part` reads rq, cq and cc = |cq|²), summed per
+    * (query, candidate) over the candidates whose home cell is the
+    * probed cell, ranked by (adc_q, nbr_id). A candidate has one home
+    * cell, so a (query, candidate) pair meets in at most one probed
+    * cell — no dedup pass.
+    */
+  private def resAdcTopK(chain: (DataFrame, DataFrame, DataFrame),
+                         qres: DataFrame, part: Column,
+                         k: Int): DataFrame = {
+    val (xqmFull, cb, codes) = chain
+    val lut = qres
+      .join(broadcast(cb.withColumn("cc", dotiFast(col("cq"), col("cq")))),
+        Seq("m"))
+      .select(col("query_id"), col("qcell"), col("m"),
+        col("cell").as("code"), part.as("part"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("adc_q"), col("nbr_id"))
+    // the home cell is constant per vector, so the m=0 slice IS the
+    // distinct (vec_id, cell) relation without the distinct's exchange
+    codes.join(xqmFull.filter(col("m") === 0)
+        .select(col("vec_id"), col("cell")), Seq("vec_id"))
+      .join(broadcast(lut), Seq("m", "code"))
+      .filter(col("cell") === col("qcell") &&
+        col("vec_id") =!= col("query_id"))
+      .groupBy(col("query_id"), col("vec_id").as("nbr_id"))
+      .agg(sum(col("part")).as("adc_q"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank").cast("long").as("rank"),
+        col("nbr_id"), col("adc_q"))
+  }
 
   /** V14: residual-encoded IVF-PQ retrieval — the FAISS default
     * billion-scale composite: coarse cell from the trained IVF
@@ -537,120 +613,48 @@ object Similarity {
   def knnIvfPqRes(emb: DataFrame, k: Int = K,
                   coarseOpt: Option[(DataFrame, DataFrame)] = None)
   : DataFrame = {
-    // The fine (PQ) training here DEPENDS on the coarse codebook —
-    // it trains on residuals r = x − c(home cell) — so the two
-    // ladders cannot overlap (round-14 finding, contra the r13
-    // verdict's top-ask premise). What IS independent of the coarse
-    // chain is the seed-sample derivation (a corpus count + a
-    // TakeOrdered pass): run it beside the coarse ladder +
-    // residual-slice materialization (guide §2.6).
-    val (xqmFull, seeds) = Par.run2(
-      () => {
-        val cents = coarseOpt.map(_._1)
-          .getOrElse(ivfCodebook(emb).localCheckpoint(false))
-        residualSlicesQ(emb, cents, coarseOpt.map(_._2))
-          .localCheckpoint(true)
-      },
-      () => pqSeedIds(emb).localCheckpoint(true))
-    val xqm = xqmFull.select("vec_id", "m", "q")
-    val cb = trainSubspaces(xqm, seeds, IvfTrainRounds)
-      .localCheckpoint(false) // codes + LUT
-    val codes = pqAssign(xqm, cb)
-      .select(col("vec_id"), col("m"), col("cell").as("code"))
-    val qres = xqmFull
+    val chain = residualChain(emb, coarseOpt
+      .map { case (cents, asn) => (cents, Some(asn)) }
+      .getOrElse((ivfCodebook(emb).localCheckpoint(false), None)))
+    val qres = chain._1
       .join(broadcast(hashSample(vecs(emb), "q", QueryCount)
         .select("vec_id")), Seq("vec_id"), "left_semi")
       .select(col("vec_id").as("query_id"), col("cell").as("qcell"),
         col("m"), col("q").as("rq"))
-    val lut = qres
-      .join(broadcast(cb.withColumn("cc", dotiFast(col("cq"), col("cq")))),
-        Seq("m"))
-      .select(col("query_id"), col("qcell"), col("m"),
-        col("cell").as("code"),
-        (col("cc") - lit(2L) * dotiFast(col("rq"), col("cq"))).as("part"))
-    val cellOf = homeCells(xqmFull)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adc_q"), col("nbr_id"))
-    codes.join(cellOf, Seq("vec_id"))
-      .join(broadcast(lut), Seq("m", "code"))
-      .filter(col("cell") === col("qcell") &&
-        col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id").as("nbr_id"))
-      .agg(sum(col("part")).as("adc_q"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("nbr_id"), col("adc_q"))
+    resAdcTopK(chain, qres,
+      col("cc") - lit(2L) * dotiFast(col("rq"), col("cq")), k)
   }
 
-  /** V16 (round 7): residual IVF-PQ with nprobe — the recall lever
-    * of the FAISS default composite, with the semantics FAISS
-    * actually implements: each query probes its `probes` nearest
-    * cells and its residual is recomputed AGAINST EACH PROBED
-    * CENTROID (r_q = x_q − c_p; a residual is only meaningful
-    * relative to the cell it probes). Because the dropped |r_q|²
-    * constant now DIFFERS per probed cell, the score keeps it:
-    * s = |r_q|² + |c|² − 2·r_q·c — the full squared ADC distance,
-    * still exact 64-bit integer arithmetic, comparable across cells.
-    * Candidates stay in their one home cell, so a (query, candidate)
-    * pair meets in at most one probed cell — no dedup pass. The fine
-    * codebook is the SAME home-cell-residual-trained one knnIvfPqRes
-    * uses (FAISS trains one PQ for the index, not per probe).
+  /** V16: residual IVF-PQ with nprobe — the recall lever of the FAISS
+    * default composite, with the semantics FAISS actually implements:
+    * each query probes its `probes` nearest cells and its residual is
+    * recomputed AGAINST EACH PROBED CENTROID (r_q = x_q − c_p; a
+    * residual is only meaningful relative to the cell it probes).
+    * Because the dropped |r_q|² constant now DIFFERS per probed cell,
+    * the score keeps it: s = |r_q|² + |c|² − 2·r_q·c — the full
+    * squared ADC distance, still exact 64-bit integer arithmetic,
+    * comparable across cells. The fine codebook is the SAME
+    * home-cell-residual-trained one knnIvfPqRes uses (FAISS trains one
+    * PQ for the index, not per probe). Probe cells rank under the same
+    * integer surrogate as the home-cell assignment.
     */
   def knnIvfPqResProbe(emb: DataFrame, k: Int = K,
                        probes: Int = 2): DataFrame = {
-    val cents = ivfCodebook(emb).localCheckpoint(false)
-    // seed sample beside the coarse+residual chain (guide §2.6 — see
-    // knnIvfPqRes); cents materializes inside the left thunk and is
+    // cents materializes inside the chain's overlapped thunk and is
     // reused below already persisted
-    val (xqmFull, seeds) = Par.run2(
-      () => residualSlicesQ(emb, cents).localCheckpoint(true),
-      () => pqSeedIds(emb).localCheckpoint(true))
-    val xqm = xqmFull.select("vec_id", "m", "q")
-    val cb = trainSubspaces(xqm, seeds, IvfTrainRounds)
-      .localCheckpoint(false)
-    val codes = pqAssign(xqm, cb)
-      .select(col("vec_id"), col("m"), col("cell").as("code"))
-    // query side: ranked probe cells with centroids kept, residual
-    // per (query, probed cell) in pure integer micro-units; probe
-    // cells rank under the SAME integer surrogate as the home-cell
-    // assignment (round 9 — one metric across the whole tier)
+    val cents = ivfCodebook(emb).localCheckpoint(false)
+    val chain = residualChain(emb, (cents, None))
     val e = vecs(emb)
-    val ranked = ivfRankCells(
+    val qres = ivfRankCells(
       e.join(broadcast(hashSample(e, "q", QueryCount).select("vec_id")),
         Seq("vec_id"), "left_semi"), cents)
       .filter(col("rn") <= probes)
-    val qres = ranked
       .select(col("vec_id").as("query_id"), col("cent_id").as("qcell"),
-        expr("zip_with(v, cv, (a, b) -> " +
-          "cast(round(a * 1000000.0D) as bigint) - " +
-          "cast(round(b * 1000000.0D) as bigint))").as("rq"))
-      .select(col("query_id"), col("qcell"), posexplode(expr(
-        s"transform(sequence(0, ${PqM - 1}), " +
-          s"m -> slice(rq, m * $PqSubDim + 1, $PqSubDim))"))
-        .as(Seq("m", "rq")))
-    val lut = qres
-      .join(broadcast(cb.withColumn("cc", dotiFast(col("cq"), col("cq")))),
-        Seq("m"))
-      .select(col("query_id"), col("qcell"), col("m"),
-        col("cell").as("code"),
-        (dotiFast(col("rq"), col("rq")) + col("cc")
-          - lit(2L) * dotiFast(col("rq"), col("cq"))).as("part"))
-    val cellOf = homeCells(xqmFull)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adc_q"), col("nbr_id"))
-    codes.join(cellOf, Seq("vec_id"))
-      .join(broadcast(lut), Seq("m", "code"))
-      .filter(col("cell") === col("qcell") &&
-        col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id").as("nbr_id"))
-      .agg(sum(col("part")).as("adc_q"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("nbr_id"), col("adc_q"))
+        residualQ.as("rq"))
+      .select(col("query_id"), col("qcell"),
+        posexplode(slicesOf("rq")).as(Seq("m", "rq")))
+    resAdcTopK(chain, qres, dotiFast(col("rq"), col("rq")) + col("cc")
+      - lit(2L) * dotiFast(col("rq"), col("cq")), k)
   }
 
   /** V14's monitor: total reconstruction distortion of plain trained
@@ -661,22 +665,18 @@ object Similarity {
     */
   def ivfPqResDistortion(emb: DataFrame): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    // the PLAIN side (pqDistortion: sampled + trained PQ over plain
-    // slices) and the RESIDUAL side (coarse ladder → residual slices
-    // → fine ladder) never meet before the final crossJoin — two
-    // independent training chains, overlapped per guide §2.6
+    // the PLAIN side (pqDistortion) and the RESIDUAL side (coarse
+    // ladder → residual slices → fine ladder) never meet before the
+    // final crossJoin — two independent training chains, overlapped
+    // per guide §2.6
     val (plain, res) = Par.run2(
       () => pqDistortion(emb)
         .select(col("n_subvecs"), col("trained_e12").as("pq_trained_e12"))
         .localCheckpoint(true),
       () => {
-        val cents = ivfCodebook(emb).localCheckpoint(false)
-        val xqm = residualSlicesQ(emb, cents).select("vec_id", "m", "q")
-          .localCheckpoint(false)
-        val cb = trainSubspaces(xqm, pqSeedIds(emb), IvfTrainRounds)
-        // pqAssignQ keeps the winning slice — the xqm read-back join
-        // is gone (round 14)
-        pqAssignQ(xqm, cb)
+        val (xqmFull, cb, _) = residualChain(emb,
+          (ivfCodebook(emb).localCheckpoint(false), None))
+        pqAssignQ(xqmFull.select("vec_id", "m", "q"), cb)
           .select((dotiFast(col("q"), col("q")) + col("s")).as("d2"))
           .agg(round(sum(col("d2").cast(dec38)).cast("double") / 1.0e12, 6)
             .as("ivfpq_res_e12"))
@@ -685,24 +685,39 @@ object Similarity {
     plain.crossJoin(res)
   }
 
+  /** The per-query recall fold over the bounded query batch: mean of
+    * |approx ∩ exact| / |exact| over the queries of
+    * `base(query_id, n_exact)`, round-6, as column `name` beside
+    * n_queries. Counts of deterministic top-k sets — engine-exact.
+    */
+  private def recallFold(base: DataFrame, exact: DataFrame,
+                         approx: DataFrame, name: String): DataFrame = {
+    val hits = exact.join(approx.select("query_id", "nbr_id"),
+        Seq("query_id", "nbr_id"), "left_semi")
+      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
+    base.join(hits, Seq("query_id"), "left")
+      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
+      .agg(count(lit(1)).as("n_queries"),
+        round(avg(col("n_hit").cast("double") / col("n_exact")), 6)
+          .as(name))
+  }
+
   /** V14's closing honesty number: recall@k of the residual IVF-PQ
     * vs the PLAIN IVF-PQ at the SAME coarse quantizer and the same
     * nprobe (= 1, home cell only), both against the exact cosine
     * baseline — the comparison that says whether residual encoding's
     * distortion win (sim_ivfpq_res_distortion) actually buys
     * retrieval quality, or only reconstruction fidelity. The exact
-    * brute baseline is computed ONCE and shared by both sides (the
-    * sim_nprobe_sweep share-the-candidates discipline on the
-    * baseline axis); each index side is the already-audited
-    * composite. Everything downstream is counts of deterministic
-    * top-k sets over the 5³ query batch — engine-exact recalls.
+    * brute baseline is computed ONCE and shared by both sides; each
+    * index side is the already-audited composite. Everything
+    * downstream is counts of deterministic top-k sets over the 5³
+    * query batch — engine-exact recalls.
     */
   def ivfPqResVsPlainRecall(emb: DataFrame, k: Int = K): DataFrame = {
     // the exact brute baseline and the shared coarse training chain
     // (codebook + corpus assignment) are independent — overlap them
     // (guide §2.6): the Lloyd ladder runs at parallelism ≈ 1 and the
-    // CPU-heavy brute pass back-fills its idle cores. Same three
-    // checkpoints as before, overlapped instead of sequential.
+    // CPU-heavy brute pass back-fills its idle cores
     val (ex, coarse) = Par.run2(
       () => knnBrute(emb, k).select("query_id", "nbr_id")
         .localCheckpoint(true),
@@ -715,228 +730,20 @@ object Similarity {
     // must be materialized before the fork (Par contract)
     val base = ex.groupBy(col("query_id")).agg(count(lit(1)).as("n_exact"))
       .localCheckpoint()
-    def recallOf(ap: DataFrame, name: String): DataFrame = {
-      val hits = ex.join(ap.select("query_id", "nbr_id"),
-          Seq("query_id", "nbr_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-      base.join(hits, Seq("query_id"), "left")
-        .agg(count(lit(1)).as("n_queries"),
-          round(avg(coalesce(col("n_hit"), lit(0L)).cast("double")
-            / col("n_exact")), 6).as(name))
-    }
-    // ONE coarse quantizer AND one corpus assignment for both
-    // composites (round-13 optimization pass): the docstring's "SAME
-    // coarse quantizer" was previously enforced by determinism (two
-    // identical Lloyd trainings + two identical argmin passes), now by
-    // construction — both are derived once and threaded into both
-    // index paths.
-    val (cents, asn) = coarse
-    // given the shared coarse quantizer, the PLAIN composite (shallow
-    // sampled-PQ scoring) and the RESIDUAL composite (its own fine
-    // training ladder) are independent until the final crossJoin —
-    // overlap them too, CONSTRUCTING each composite inside its thunk
-    // (knnIvfPqRes runs eager work while building — review finding,
-    // round 14); each side is a 1-row recall aggregate
+    // ONE coarse quantizer AND one corpus assignment, threaded into
+    // both composites: "the SAME coarse quantizer" holds by
+    // construction. Given it, the plain and residual composites are
+    // independent until the final crossJoin — overlap them too,
+    // CONSTRUCTING each composite inside its thunk (knnIvfPqRes runs
+    // eager work while building); each side is a 1-row recall
+    // aggregate.
     val Seq(plainR, resR) = Par.run[DataFrame](Seq(
-      () => recallOf(knnIvfPq(emb, k, Some((cents, asn))),
+      () => recallFold(base, ex, knnIvfPq(emb, k, Some(coarse)),
         "plain_recall").localCheckpoint(true),
-      () => recallOf(knnIvfPqRes(emb, k, Some((cents, asn))),
+      () => recallFold(base, ex, knnIvfPqRes(emb, k, Some(coarse)),
         "res_recall").drop("n_queries").localCheckpoint(true)))
     plainR.crossJoin(resR)
   }
-
-  /** Fixed probe-batch size for the ADC stage-bisect probe: a
-    * 5-query md5 sub-sample of the standard bounded query batch —
-    * small enough that the windowless per-candidate emission stays a
-    * few hundred rows at any SF, large enough that a home-cell
-    * divergence for ANY probed query shows as a value mismatch.
-    */
-  val AdcProbeQueries = 5
-
-  /** Round-10 stage-bisect probes. CORRECTNESS_r07–r09 background:
-    * sim_knn_ivfpq_res / _probe hash-fail the driver's DuckDB gate
-    * four (three) consecutive rounds while the same recipe passes
-    * locally, and every AUDITED stage agrees cross-engine on the
-    * driver — sim_rounding_canary (data-free float devices) green,
-    * sim_ivfpq_res_distortion (shares residualSlicesQ +
-    * trainSubspaces + pqAssign) green, sim_ivfpq_res_vs_plain
-    * (consumes knnIvfPqRes's top-k as a SET) green. What remained
-    * unaudited is the full ranked emission. These three probes emit
-    * the chain's intermediate relations VERBATIM, each oracle-mirrored
-    * on the SAME shared CTE text (resTrainSql/resAdcSql), so the next
-    * CORRECTNESS row pattern names the diverging stage instead of the
-    * composite.
-    *
-    * OUTCOME (CORRECTNESS_r10): the bisect worked — codebook and
-    * codes probes driver-GREEN, the adc probe driver-RED (rows/schema
-    * true, 34/34, hash false) while green on the judge's identical
-    * local re-run. That NAMES the divergence to the scr score-sum
-    * stage and FALSIFIES the round-9 "rank assembly alone" theory
-    * (the SimilaritySpec case proves re-ranking the probe's rows
-    * reproduces the composite, so if the pre-rank rows differ the
-    * ranked emission must too). The round-11 sub-probes below
-    * (resQresProbe/resLutProbe/resPartProbe) bisect inside that
-    * stage; the adc probe itself is rows-only since round 11 (the r7
-    * known-red contract), its oracle text living on in their CTEs.
-    */
-  /** Probe (a): the trained residual fine codebook, long form
-    * (m, cell, idx, cqi) — one row per (subspace, code, dimension),
-    * exact integer micro-units. Mirrors oracle CTE rpm<rounds>.
-    */
-  def resCodebookProbe(emb: DataFrame): DataFrame = {
-    // seed sample beside the coarse+residual chain (guide §2.6 — see
-    // knnIvfPqRes)
-    val (xqm, seeds) = Par.run2(
-      () => {
-        val cents = ivfCodebook(emb).localCheckpoint(false)
-        residualSlicesQ(emb, cents).select("vec_id", "m", "q")
-          .localCheckpoint(true)
-      },
-      () => pqSeedIds(emb).localCheckpoint(true))
-    trainSubspaces(xqm, seeds, IvfTrainRounds)
-      .select(col("m"), col("cell"),
-        posexplode(col("cq")).as(Seq("idx", "cqi")))
-  }
-
-  /** Probe (b): the residual PQ code assignment for EVERY vector
-    * (vec_id, m, code) — queries and candidates alike, since the ADC
-    * score consumes both sides' codes. Mirrors oracle CTE rpaF.
-    */
-  def resCodesProbe(emb: DataFrame): DataFrame = {
-    // seed sample beside the coarse+residual chain (guide §2.6 — see
-    // knnIvfPqRes)
-    val (xqm, seeds) = Par.run2(
-      () => {
-        val cents = ivfCodebook(emb).localCheckpoint(false)
-        residualSlicesQ(emb, cents).select("vec_id", "m", "q")
-          .localCheckpoint(true)
-      },
-      () => pqSeedIds(emb).localCheckpoint(true))
-    val cb = trainSubspaces(xqm, seeds, IvfTrainRounds)
-    pqAssign(xqm, cb)
-      .select(col("vec_id"), col("m"), col("cell").as("code"))
-  }
-
-  /** The `nq`-query md5 sub-sample of the standard query batch that
-    * every ADC-stage probe restricts to — one derivation, shared, so
-    * the probes bisect the SAME five queries' rows.
-    */
-  private def adcProbeIds(emb: DataFrame, nq: Int): DataFrame =
-    hashSample(vecs(emb), "q", QueryCount).select("vec_id")
-      .orderBy(md5(concat(lit("p"), col("vec_id").cast("string"))),
-        col("vec_id"))
-      .limit(nq)
-
-  /** The residual ADC chain's intermediate relations, computed ONCE
-    * and shared by every stage probe: the full residual slices
-    * (vec_id, cell, m, q), the corpus code assignment
-    * (vec_id, m, code), and the probe sample's LUT
-    * (query_id, qcell, m, code, part) with part = cc − 2·rq·cq.
-    * Factoring this out is what makes the round-11 sub-probes emit
-    * the EXACT relations the failing adc probe consumed — not
-    * re-derivations that could accidentally diverge from it.
-    */
-  private def resAdcRelations(emb: DataFrame, nq: Int)
-  : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // seed sample beside the coarse+residual chain (guide §2.6 — see
-    // knnIvfPqRes)
-    val (xqmFull, seeds) = Par.run2(
-      () => {
-        val cents = ivfCodebook(emb).localCheckpoint(false)
-        residualSlicesQ(emb, cents).localCheckpoint(true)
-      },
-      () => pqSeedIds(emb).localCheckpoint(true))
-    val xqm = xqmFull.select("vec_id", "m", "q")
-    val cb = trainSubspaces(xqm, seeds, IvfTrainRounds)
-      .localCheckpoint(false)
-    val codes = pqAssign(xqm, cb)
-      .select(col("vec_id"), col("m"), col("cell").as("code"))
-    val qres = xqmFull
-      .join(broadcast(adcProbeIds(emb, nq)), Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("query_id"), col("cell").as("qcell"),
-        col("m"), col("q").as("rq"))
-    val lut = qres
-      .join(broadcast(cb.withColumn("cc", dotiFast(col("cq"), col("cq")))),
-        Seq("m"))
-      .select(col("query_id"), col("qcell"), col("m"),
-        col("cell").as("code"),
-        (col("cc") - lit(2L) * dotiFast(col("rq"), col("cq"))).as("part"))
-    (xqmFull, codes, qres, lut)
-  }
-
-  /** The pre-aggregation join emission of the ADC stage: one row per
-    * (probed query, home-cell candidate, subspace) with its LUT
-    * partial — exactly the rows resAdcProbe's final SUM folds.
-    */
-  private def resPartRows(emb: DataFrame, nq: Int): DataFrame = {
-    val (xqmFull, codes, _, lut) = resAdcRelations(emb, nq)
-    val cellOf = homeCells(xqmFull)
-    codes.join(cellOf, Seq("vec_id"))
-      .join(broadcast(lut), Seq("m", "code"))
-      .filter(col("cell") === col("qcell") &&
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("nbr_id"), col("m"),
-        col("part"))
-  }
-
-  /** Probe (c): the WINDOWLESS per-candidate integer ADC scores
-    * (query_id, nbr_id, adc_q) for a fixed `nq`-query md5 sub-sample
-    * of the standard query batch — knnIvfPqRes up to and including
-    * the score aggregation, with no rank window and no top-k cut.
-    * Per-query score sets are independent, so restricting the query
-    * side up front emits exactly the failing composite's pre-rank
-    * rows for those queries. Mirrors oracle CTE scr filtered to the
-    * same sub-sample.
-    */
-  def resAdcProbe(emb: DataFrame, nq: Int = AdcProbeQueries): DataFrame =
-    resPartRows(emb, nq)
-      .groupBy(col("query_id"), col("nbr_id"))
-      .agg(sum(col("part")).as("adc_q"))
-
-  /** Round-11 sub-probes: bisect INSIDE the ADC stage. Round-10
-    * driver evidence (CORRECTNESS_r10): sim_res_codebook_probe and
-    * sim_res_codes_probe driver-GREEN, sim_res_adc_probe driver-RED
-    * (rows/schema true, 34/34, hash false) while passing the
-    * identical recipe locally — so the five-round residual
-    * divergence is confined to the scr score-sum stage, and the two
-    * relations it consumes that were never value-audited are the
-    * query-side residuals rq (only argmin- and aggregate-audited)
-    * and the LUT partials part = cc − 2·rq·cq. These probes emit
-    * both at value level, plus the pre-SUM join emission, mirrored
-    * on the SAME shared CTE text — the next driver row pattern names
-    * the diverging VALUE: qres red → residual quantization of
-    * specific vectors; lut red with qres green → the integer dot
-    * surface; part red with both green → the join emission; all
-    * green while adc_q would differ → the grouped SUM itself.
-    */
-  /** Probe (d): the query-side residual VALUES for the probe sample,
-    * long form (query_id, m, idx, rq_i) — exact integer micro-units,
-    * exploded from the SAME qres relation the LUT consumes (the
-    * shared resAdcRelations derivation, not a re-derivation — review
-    * fix: a plan-sensitive divergence could otherwise slip between a
-    * fresh plan and the one the red stage actually read). Mirrors
-    * oracle CTE rxqm filtered to psel.
-    */
-  def resQresProbe(emb: DataFrame, nq: Int = AdcProbeQueries): DataFrame =
-    resAdcRelations(emb, nq)._3
-      .select(col("query_id"), col("m"),
-        posexplode(col("rq")).as(Seq("idx", "rq_i")))
-
-  /** Probe (e): the probe sample's LUT partials (query_id, m, code,
-    * part) — every per-subspace score summand the ADC stage can ever
-    * fold for these queries, before any candidate join. Mirrors
-    * oracle CTE lutr filtered to psel.
-    */
-  def resLutProbe(emb: DataFrame, nq: Int = AdcProbeQueries): DataFrame =
-    resAdcRelations(emb, nq)._4
-      .select(col("query_id"), col("m"), col("code"), col("part"))
-
-  /** Probe (f): the pre-SUM join emission (query_id, nbr_id, m,
-    * part) — scr's input rows verbatim. Mirrors the scr join with
-    * the GROUP BY removed.
-    */
-  def resPartProbe(emb: DataFrame, nq: Int = AdcProbeQueries): DataFrame =
-    resPartRows(emb, nq)
 
   /** PQ codes against the TRAINED codebook — the production encode
     * pass (pqCodes' sampled codebook is the round-0 shortcut; this is
@@ -968,9 +775,7 @@ object Similarity {
     // eager: both overlapped sides below read it, so it must be
     // materialized before the fork (Par contract)
     val xqm = subSlicesQ(emb).localCheckpoint()
-    val kCells = math.max(1L,
-      math.min(CentCount.toLong, emb.count() / MinCellFill)).toInt
-    val seedIds = hashSample(vecs(emb), "c", kCells).select("vec_id")
+    val seedIds = pqSeedIds(emb)
     val sampled = xqm.join(broadcast(seedIds), Seq("vec_id"))
       .select(col("m"), col("vec_id").as("cell"), col("q").as("cq"))
     def total(c: DataFrame, name: String): DataFrame =
@@ -982,10 +787,7 @@ object Similarity {
     // the sampled-codebook side and the TRAINED side (a full Lloyd
     // ladder) are independent until the final crossJoin — overlap
     // their serial chains (guide §2.6); xqm is materialized above so
-    // the threads share only a persisted RDD. Training over the SAME
-    // xqm also retires the second subSlicesQ checkpoint the old
-    // pqCodebookTrainedQ call materialized (identical relation —
-    // same slices, same seeds).
+    // the threads share only a persisted RDD
     val Seq(sTot, tTot) = Par.materialize(
       total(sampled, "sampled_e12"),
       total(trainSubspaces(xqm, seedIds, IvfTrainRounds), "trained_e12")
@@ -1006,16 +808,8 @@ object Similarity {
     */
   def knnPqAdc(emb: DataFrame, k: Int = K): DataFrame = {
     val e = vecs(emb)
-    val cent = hashSample(e, "c", CentCount)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    val cs = subSlices(cent, "cent_id", "cv", "c")
     val codes = pqCodes(emb)
-    val qs = subSlices(hashSample(e, "q", QueryCount)
-      .withColumnRenamed("vec_id", "query_id"), "query_id", "v", "qx")
-    val lut = qs.join(cs, Seq("m"))
-      .select(col("query_id"), col("m"), col("cent_id").as("code"),
-        round(dotFast(col("qx"), col("c")) * lit(1000000.0d))
-          .cast("long").as("qp"))
+    val lut = adcLut(hashSample(e, "q", QueryCount), sampledCodebook(e))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("nbr_id"))
@@ -1078,9 +872,8 @@ object Similarity {
 
   /** The plain composite's three ADC relations — the coded candidate
     * stream (codes ⋈ home cells), the bounded query-cell map, and the
-    * broadcast LUT — in ONE derivation shared by knnIvfPq and its
-    * filtered variant (the resAdcRelations discipline: variants
-    * compose the same relations, never re-derive them).
+    * broadcast LUT — in ONE derivation shared by knnIvfPq, its
+    * filtered variant and its nprobe variant.
     */
   private def pqAdcParts(emb: DataFrame,
                          coarseOpt: Option[(DataFrame, DataFrame)] = None)
@@ -1088,28 +881,16 @@ object Similarity {
     val e = vecs(emb)
     // coarse quantizer: the trained IVF codebook; fine quantizer: the
     // sampled PQ codebook (pqCodes) — independent, as in FAISS IVFPQ.
-    // `coarseOpt` = (codebook, its corpus assignment) lets a monitor
-    // running several composites over the SAME corpus train the
-    // coarse quantizer and compute the corpus assignment once and
-    // share both (ivfPqResVsPlainRecall ran the identical Lloyd
-    // training AND the identical n×CentCount argmin pass twice before
-    // the round-13 optimization pass — guide §1.2 step 1). Bundled as
-    // ONE option (round-13 ADVICE) so an assignment can never be
-    // passed without the codebook it was derived from.
+    // `coarseOpt` = (codebook, its corpus assignment) lets a caller
+    // that already trained the coarse quantizer and assigned the
+    // corpus share both. Bundled as ONE option so an assignment can
+    // never be passed without the codebook it was derived from.
     val assigned = coarseOpt.map(_._2.select(col("vec_id"), col("cell")))
       .getOrElse(ivfAssign(emb)
         .select(col("vec_id"), col("cell"))
         .localCheckpoint(false)) // candidate cells + query cells
-    val cent = hashSample(e, "c", CentCount)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
     val codes = pqCodes(emb)
-    val cs = subSlices(cent, "cent_id", "cv", "c")
-    val qs = subSlices(hashSample(e, "q", QueryCount)
-      .withColumnRenamed("vec_id", "query_id"), "query_id", "v", "qx")
-    val lut = qs.join(cs, Seq("m"))
-      .select(col("query_id"), col("m"), col("cent_id").as("code"),
-        round(dotFast(col("qx"), col("c")) * lit(1000000.0d))
-          .cast("long").as("qp"))
+    val lut = adcLut(hashSample(e, "q", QueryCount), sampledCodebook(e))
     val qcell = assigned
       .join(hashSample(e, "q", QueryCount).select("vec_id"),
         Seq("vec_id"), "left_semi")
@@ -1117,7 +898,7 @@ object Similarity {
     (codes.join(assigned, Seq("vec_id")), qcell, lut)
   }
 
-  /** V12 × V18 (round 11): metadata-filtered retrieval ON THE
+  /** V12 × V18: metadata-filtered retrieval ON THE
     * COMPRESSED TIER — knnIvfFiltered's composition applied to the
     * IVF-PQ composite: the predicate restricts the CANDIDATE code
     * stream via a left-semi join BEFORE scoring (pre-filter, so the
@@ -1141,14 +922,13 @@ object Similarity {
 
   /** The plain-composite nprobe default — ONE constant interpolated
     * into both knnIvfPqProbe's signature and the pqIvfProbeSql oracle
-    * CTE (round-11 ADVICE: the SQL hardcoded `rn <= 2` while the
-    * Scala default was parameterized, so a future registration with
-    * probes != 2 would silently diverge from the shared oracle text).
+    * CTE, so a registration with probes != 2 cannot silently diverge
+    * from the shared oracle text.
     */
   val IvfPqProbes = 2
 
-  /** V18 (round 10): plain IVF-PQ at nprobe=2 — the recall lever on
-    * the GREEN (non-residual) composite tier. Unlike the residual
+  /** V18: plain IVF-PQ at nprobe=2 — the recall lever on
+    * the non-residual composite tier. Unlike the residual
     * variant, a plain-PQ candidate's ADC score is independent of
     * which cell the query probed (codes are absolute, not relative to
     * a centroid), so probing only GROWS the candidate set: each query
@@ -1178,22 +958,13 @@ object Similarity {
     val assigned = ivfAssign(emb, Some(cents))
       .select(col("vec_id"), col("cell"))
       .localCheckpoint(false)
-    val cent = hashSample(e, "c", CentCount)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    val codes = pqCodes(emb)
-    val cs = subSlices(cent, "cent_id", "cv", "c")
-    val qs = subSlices(hashSample(e, "q", QueryCount)
-      .withColumnRenamed("vec_id", "query_id"), "query_id", "v", "qx")
-    val lut = qs.join(cs, Seq("m"))
-      .select(col("query_id"), col("m"), col("cent_id").as("code"),
-        round(dotFast(col("qx"), col("c")) * lit(1000000.0d))
-          .cast("long").as("qp"))
+    val (coded, _, lut) = pqAdcParts(emb, Some((cents, assigned)))
     val qprobe = ivfRankCells(
       e.join(broadcast(hashSample(e, "q", QueryCount).select("vec_id")),
         Seq("vec_id"), "left_semi"), cents)
       .filter(col("rn") <= probes)
       .select(col("vec_id").as("query_id"), col("cent_id").as("cell"))
-    adcTopK(codes.join(assigned, Seq("vec_id")), qprobe, lut, k)
+    adcTopK(coded, qprobe, lut, k)
   }
 
   /** V18 (round 10): the PERSISTED code-only IVF-PQ store — what a
@@ -1236,10 +1007,7 @@ object Similarity {
     Par.run[Unit](Seq(
       () => writeCodebookSidecar(s, dir, cents),
       () => writeStampedSidecar(s, s"$dir.pq",
-        subSlices(hashSample(e, "c", CentCount)
-            .select(col("vec_id").as("cent_id"), col("v").as("cv")),
-          "cent_id", "cv", "c")
-          .select(col("m"), col("cent_id").as("code"), col("c")),
+        sampledCodebook(e).select("m", "code", "c"),
         "_encode_contract", PqEncodeContract)))
     codes
       .join(ivfAssign(emb, Some(cents)).select("vec_id", "cell"),
@@ -1292,13 +1060,7 @@ object Similarity {
                            cs: DataFrame, coded: DataFrame,
                            k: Int): DataFrame = {
     val q = vecs(queries).localCheckpoint(false)
-    val qs = subSlices(q.withColumnRenamed("vec_id", "query_id"),
-      "query_id", "v", "qx")
-    val lut = qs
-      .join(broadcast(cs), Seq("m"))
-      .select(col("query_id"), col("m"), col("code"),
-        round(dotFast(col("qx"), col("c")) * lit(1000000.0d))
-          .cast("long").as("qp"))
+    val lut = adcLut(q, broadcast(cs))
     val qcell = ivfAssign(
       q.select(col("vec_id"), col("v").as("embedding")), Some(cents))
       .select(col("vec_id").as("query_id"), col("cell"))
@@ -2858,11 +2620,10 @@ object Similarity {
     // CONSTRUCTED inside its thunk too: several index functions run
     // eager work while building their plan (seed counts, eager
     // residual checkpoints), which would otherwise serialize before
-    // the fork on exactly the most expensive families (review
-    // finding, round 14). Materializing `exact` also retires its
-    // former double computation (it fed the hit join AND the n_exact
-    // aggregate, uncheckpointed). Both top-k sets are QueryCount·k
-    // rows — the checkpoints are free.
+    // the fork on exactly the most expensive families. `exact` feeds
+    // both the hit join and the n_exact aggregate, so it is
+    // materialized once. Both top-k sets are QueryCount·k rows — the
+    // checkpoints are free.
     val (exact, approx) = Par.run2(
       () => knnBrute(emb, k).localCheckpoint(true),
       () => index(emb, k)
@@ -2870,17 +2631,9 @@ object Similarity {
           .select(col("vec_id").as("query_id")), Seq("query_id"),
           "left_semi")
         .localCheckpoint(true))
-    val perQuery = exact.as("e")
-      .join(approx.as("a"),
-        col("e.query_id") === col("a.query_id") &&
-          col("e.nbr_id") === col("a.nbr_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    exact.groupBy(col("query_id")).agg(count(lit(1)).as("n_exact"))
-      .join(perQuery, Seq("query_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .agg(count(lit(1)).as("n_queries"),
-        round(avg(col("n_hit").cast("double") / col("n_exact")), 6)
-          .as("avg_recall"))
+    recallFold(
+      exact.groupBy(col("query_id")).agg(count(lit(1)).as("n_exact")),
+      exact, approx, "avg_recall")
   }
 
   val TruncDim = Dim / 2
@@ -3297,175 +3050,6 @@ object Similarity {
       |  list_transform(vb, v -> v * 0.001)), 6) AS cos_frac
       |FROM v""".stripMargin
 
-  /** Round-11: data-free LIST/AGGREGATE canary — sim_rounding_canary
-    * covers the scalar float devices (and is driver-green), but the
-    * residual ADC oracle additionally leans on DuckDB's
-    * generate_series + list_transform slicing, SUM over BIGINT
-    * (HUGEINT accumulation), the HUGEINT→DOUBLE emission cast, and
-    * IN-subquery + ORDER BY md5 LIMIT selection — exactly the
-    * constructs the one remaining driver-red row (sim_res_adc_probe,
-    * r10) exercises. This probe runs ONLY those constructs over
-    * literals (no tables): 64 synthetic integer vectors of dim 64,
-    * elements ≈ ±1e9 (the ADC partials' magnitude), sliced into 4
-    * subspaces exactly the rxqm way, slice-sums folded per subspace
-    * both as plain BIGINT SUM (scr's construct) and through the
-    * HUGEINT/DECIMAL(38) cast + /1e6 round-6 emission (the
-    * distortion queries' construct), with a 5-element md5-ordered
-    * IN-subquery split (psel's construct). A driver-red row here
-    * with a green local run pins a DuckDB-build semantic difference
-    * in the list/aggregate surface with zero corpus involvement —
-    * the cheapest possible attribution for the residual-tier red.
-    */
-  def listAggCanary(s: SparkSession): DataFrame = {
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val base = s.range(0, 64).toDF("i")
-      .withColumn("v", expr("transform(sequence(1, 64), d -> " +
-        "cast(((i * 37 + d * 101) % 2003 - 1001) * 1000003L as bigint))"))
-    val sliced = base.select(col("i"), posexplode(expr(
-        "transform(sequence(0, 3), m -> " +
-          "aggregate(slice(v, m * 16 + 1, 16), 0L, (acc, x) -> acc + x))"))
-        .as(Seq("m", "slice_sum")))
-    val psel = base.select("i")
-      .orderBy(md5(concat(lit("p"), col("i").cast("string"))), col("i"))
-      .limit(5)
-    sliced
-      .join(broadcast(psel.withColumn("sel", lit(1L))), Seq("i"), "left")
-      .groupBy(col("m"))
-      .agg(sum(col("slice_sum")).as("tot"),
-        round(sum(col("slice_sum").cast(dec38)).cast("double") / 1.0e6, 6)
-          .as("tot_e6"),
-        sum(when(col("sel") === 1L, col("slice_sum"))).as("sel_tot"),
-        count(when(col("sel") === 1L, lit(1))).as("n_sel"),
-        min(when(col("sel") === 1L, col("i"))).as("sel_min"),
-        max(when(col("sel") === 1L, col("i"))).as("sel_max"))
-  }
-
-  // The compound canary's oracle text (listAggCanarySql) was removed
-  // with its round-12 demotion to rows-only — nothing executes it and
-  // a dead SQL string would silently drift from the five probes that
-  // decomposed it; the adjudicated text lives in git history
-  // (round-11 tree) and its constructs live on, one per probe, below.
-
-  /** Round-12 single-construct canary probes. The compound list
-    * canary above went driver-RED in r11 (rows/schema true, hash
-    * false) while (a) its oracle on local DuckDB 1.0.0, (b) an
-    * independent pure-Python integer evaluation, and (c) the Spark
-    * side all agree on every value (judge-verified, VERDICT r11) —
-    * so a construct it EMITS is computed or rendered differently by
-    * the driver's DuckDB build alone. The round-11 value probes
-    * already narrow it sharply: qres/lut/part rows (raw BIGINTs,
-    * list slicing, integer dots, md5-IN selection) are all
-    * driver-green, while every red row in five rounds emits a
-    * SUM over BIGINT — a column DuckDB types as HUGEINT — or is
-    * downstream of emitting one. The leading hypothesis is therefore
-    * not the SUM's VALUE but its EMISSION: a build whose
-    * HUGEINT→Python conversion yields float/Decimal instead of int
-    * changes repr() while preserving order — exactly matching
-    * `sim_ivfpq_res_recall` (orders by the sum, emits none) staying
-    * green. These probes decide it: identical literal values through
-    * each construct in isolation, including a raw-SUM / cast-SUM
-    * twin pair whose split verdict both NAMES the construct and
-    * validates the CAST(... AS BIGINT) restatement used to
-    * re-promote the residual tier this round.
-    */
-  /** Probe (a) — list slicing alone: the 256 per-(i, m) slice sums
-    * emitted raw (every output column BIGINT, no aggregation).
-    */
-  def canarySlice(s: SparkSession): DataFrame =
-    s.range(0, 64).toDF("i")
-      .withColumn("v", expr("transform(sequence(1, 64), d -> " +
-        "cast(((i * 37 + d * 101) % 2003 - 1001) * 1000003L as bigint))"))
-      .select(col("i"), posexplode(expr(
-        "transform(sequence(0, 3), m -> " +
-          "aggregate(slice(v, m * 16 + 1, 16), 0L, (acc, x) -> acc + x))"))
-        .as(Seq("m", "slice_sum")))
-
-  private val canarySliceSql =
-    """WITH g AS (SELECT unnest(generate_series(0, 63)) AS i),
-      |b AS (SELECT i, list_transform(generate_series(1, 64),
-      |    d -> CAST(((i * 37 + d * 101) % 2003 - 1001) * 1000003
-      |      AS BIGINT)) AS v
-      |  FROM g),
-      |ms AS (SELECT CAST(gm.m AS INT) m FROM
-      |  (SELECT unnest(generate_series(0, 3)) m) gm)
-      |SELECT b.i, ms.m,
-      |CAST(list_sum(list_transform(
-      |  generate_series(ms.m * 16 + 1, ms.m * 16 + 16),
-      |  x -> b.v[x])) AS BIGINT) AS slice_sum
-      |FROM b, ms""".stripMargin
-
-  /** The sum probes' shared scalar literals — NO lists anywhere:
-    * 64 BIGINT values at ADC-partial magnitude, grouped 4 ways.
-    */
-  private def canaryScalars(s: SparkSession): DataFrame =
-    s.range(0, 64).toDF("i")
-      .withColumn("m", expr("cast(i % 4 as int)"))
-      .withColumn("val",
-        expr("cast(((i * 37 + 101) % 2003 - 1001) * 1000003L as bigint)"))
-
-  private val canaryScalarsSql =
-    """g AS (SELECT unnest(generate_series(0, 63)) AS i),
-      |b AS (SELECT CAST(i % 4 AS INT) AS m,
-      |    CAST(((i * 37 + 101) % 2003 - 1001) * 1000003 AS BIGINT) AS val
-      |  FROM g)""".stripMargin
-
-  /** Probe (b) — plain SUM over BIGINT emitted RAW: DuckDB types
-    * this column HUGEINT. Under the emission hypothesis this is THE
-    * red construct; its cast twin below going green in the same
-    * round is the decisive split verdict.
-    */
-  def canarySumRaw(s: SparkSession): DataFrame =
-    canaryScalars(s).groupBy(col("m"))
-      .agg(sum(col("val")).as("tot"), count(lit(1)).as("n"))
-  // (the retired raw-emission oracle text — `SELECT m, SUM(val) AS
-  // tot, ...`, the one construct the driver's DuckDB build renders
-  // differently — is in git history with its round-12 verdict;
-  // rows-only since round 13, see the registration note)
-
-  /** Probe (c) — the SAME sum emitted through CAST(... AS BIGINT):
-    * the restatement the re-promoted residual oracles use. Green here
-    * with (b) red proves the fix; red here would falsify the
-    * emission hypothesis and point at the accumulation itself.
-    */
-  def canarySumCast(s: SparkSession): DataFrame =
-    canarySumRaw(s)
-
-  private val canarySumCastSql =
-    s"""WITH $canaryScalarsSql
-       |SELECT m, CAST(SUM(val) AS BIGINT) AS tot, COUNT(*) AS n
-       |FROM b GROUP BY m""".stripMargin
-
-  /** Probe (d) — the HUGEINT/DECIMAL(38) accumulation surfaced as a
-    * round-6 DOUBLE: the distortion monitors' construct (already
-    * driver-green on table data; this is its data-free isolate).
-    */
-  def canaryHugeint(s: SparkSession): DataFrame = {
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    canaryScalars(s).groupBy(col("m"))
-      .agg(round(sum(col("val").cast(dec38)).cast("double") / 1.0e6, 6)
-        .as("tot_e6"))
-  }
-
-  private val canaryHugeintSql =
-    s"""WITH $canaryScalarsSql
-       |SELECT m, ROUND(CAST(SUM(CAST(val AS HUGEINT)) AS DOUBLE)
-       |  / 1000000.0, 6) AS tot_e6
-       |FROM b GROUP BY m""".stripMargin
-
-  /** Probe (e) — the md5-ordered LIMIT selection emitted as its row
-    * set (WHICH ids got picked, not just how many).
-    */
-  def canaryMd5Sel(s: SparkSession): DataFrame =
-    s.range(0, 64).toDF("i")
-      .orderBy(md5(concat(lit("p"), col("i").cast("string"))), col("i"))
-      .limit(5)
-      .select(col("i"))
-
-  private val canaryMd5SelSql =
-    """WITH g AS (SELECT unnest(generate_series(0, 63)) AS i)
-      |SELECT i FROM g
-      |ORDER BY md5('p' || CAST(i AS VARCHAR)), i LIMIT 5""".stripMargin
-
   /** V17 (round 9): coarse-assignment margin diagnostic — how close
     * the corpus sits to a home-cell flip. Per vector: margin =
     * second-best minus best integer s over the trained codebook
@@ -3832,9 +3416,7 @@ object Similarity {
     * centroids joined back for the residual (`rasn`), residual slices
     * (`rxqm`), the residual training ladder (final codebook
     * `rpc<rounds>`, long form `rpm<rounds>`), and the final code
-    * assignment (`rpaF`). Split out of resAdcSql (round 10) so the
-    * stage-bisect probes emit these relations verbatim from the SAME
-    * CTE text the failing composite's oracle used.
+    * assignment (`rpaF`) — the oracle twin of residualChain.
     */
   private lazy val resTrainSql =
     s"""${ivfRankSql()},
@@ -3877,15 +3459,6 @@ object Similarity {
        |    AND l.qcell = co.cell
        |  WHERE k.vec_id <> l.query_id
        |  GROUP BY 1, 2)""".stripMargin
-
-  /** The ADC probes' fixed 5-query sub-sample of qset (expects
-    * `qset`) — ONE text shared by every sim_res_* probe oracle, the
-    * adcProbeIds twin.
-    */
-  private lazy val pselSql =
-    s"""psel AS (SELECT vec_id FROM qset
-       |  ORDER BY md5('p' || CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $AdcProbeQueries)""".stripMargin
 
   /** Hybrid retrieval with reciprocal-rank fusion (Cormack et al.,
     * SIGIR 2009) — the lexical+vector composition every production
@@ -4522,26 +4095,11 @@ object Similarity {
     // composite; see knnIvfPqRes. Score is exact integer ADC over
     // residual codes; smaller = closer.
     //
-    // QUARANTINED to rows-only in round 10 (the standing round-7
-    // contract: a known-red gate row must not ship again) after
-    // hash-failing the DRIVER's DuckDB compare in rounds 6(once)/7/8/9
-    // while passing the identical recipe locally every time.
-    //
-    // RE-PROMOTED in round 12 with the oracle restated: six rounds of
-    // bisect (stage probes r10 → value probes r11 → data-free canary
-    // r11) leave exactly one construct differing between the driver's
-    // DuckDB build and every local/judge run — EMITTING a SUM over
-    // BIGINT, which DuckDB types HUGEINT. Every consumed-not-emitted
-    // use of the same sum is driver-green (sim_ivfpq_res_recall
-    // orders scr by adc_q), every raw-BIGINT emission of the same
-    // chain is driver-green (qres/lut/part probes), and the zero-input
-    // canary reproduced the red with literals alone. The restatement
-    // wraps the emission in CAST(... AS BIGINT) — identical value,
-    // engine-independent rendering (values are ≲ 1e14, far inside
-    // int64) — and changes NOTHING else; the Spark side always
-    // emitted LongType. The sim_canary_sum_raw/sum_cast twin pair
-    // registered this round decides the hypothesis in the same gate
-    // that reads this row.
+    // The oracle emits the score as CAST(SUM(...) AS BIGINT): a bare
+    // integer SUM is typed HUGEINT by DuckDB, and some DuckDB builds
+    // render that type differently (values ≲ 1e14, far inside int64;
+    // the Spark side emits LongType). This row is the standing witness
+    // of the README's never-emit-a-bare-SUM rule.
     QueryDef("sim_knn_ivfpq_res",
       (s, d) => knnIvfPqRes(Tables.embeddings(s, d)),
       Some(s"""WITH $qsetSql,
@@ -4553,87 +4111,6 @@ object Similarity {
               |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
               |    ORDER BY adc_q, nbr_id) rk FROM scr)
               |WHERE rk <= $K""".stripMargin)),
-
-    // Round-10 stage-bisect probes (see the resCodebookProbe block
-    // comment): each emits one intermediate relation of the residual
-    // chain verbatim, oracle-mirrored on the SAME shared CTE text the
-    // quarantined composite's oracle used.
-    QueryDef("sim_res_codebook_probe",
-      (s, d) => resCodebookProbe(Tables.embeddings(s, d)),
-      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-              |${lloydCentSql()},
-              |$resTrainSql
-              |SELECT m, cell, CAST(i - 1 AS INT) AS idx, cqi
-              |FROM rpm$IvfTrainRounds""".stripMargin)),
-
-    QueryDef("sim_res_codes_probe",
-      (s, d) => resCodesProbe(Tables.embeddings(s, d)),
-      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-              |${lloydCentSql()},
-              |$resTrainSql
-              |SELECT vec_id, m, cell AS code FROM rpaF""".stripMargin)),
-
-    // ROWS-ONLY since round 11 (CORRECTNESS_r10 hash-failed it on the
-    // driver while the judge's identical local re-run passed, naming
-    // the divergence to the scr score-sum stage); RE-PROMOTED in
-    // round 12 under the same CAST(... AS BIGINT) emission
-    // restatement as the composite above — this is scr's sum emitted
-    // directly, the sharpest oracle-backed witness of the named
-    // construct on real table data (the canary twins are its
-    // data-free isolate).
-    QueryDef("sim_res_adc_probe",
-      (s, d) => resAdcProbe(Tables.embeddings(s, d)),
-      Some(s"""WITH $qsetSql,
-              |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-              |${lloydCentSql()},
-              |$resAdcSql,
-              |$pselSql
-              |SELECT query_id, nbr_id, CAST(adc_q AS BIGINT) AS adc_q
-              |FROM scr
-              |WHERE query_id IN (SELECT vec_id FROM psel)""".stripMargin)),
-
-    // Round-11 sub-probes (see the resQresProbe block comment): the
-    // two relations the red adc stage consumes that were never
-    // value-audited, plus the pre-SUM join emission — each mirrored
-    // on the SAME shared CTE text (resTrainSql/resAdcSql/pselSql).
-    QueryDef("sim_res_qres_probe",
-      (s, d) => resQresProbe(Tables.embeddings(s, d)),
-      Some(s"""WITH $qsetSql,
-              |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-              |${lloydCentSql()},
-              |$resTrainSql,
-              |$pselSql
-              |SELECT x.vec_id AS query_id, x.m,
-              |CAST(g.i - 1 AS INT) AS idx, x.q[g.i] AS rq_i
-              |FROM rxqm x,
-              |  (SELECT unnest(generate_series(1, $PqSubDim)) i) g
-              |WHERE x.vec_id IN (SELECT vec_id FROM psel)""".stripMargin)),
-
-    QueryDef("sim_res_lut_probe",
-      (s, d) => resLutProbe(Tables.embeddings(s, d)),
-      Some(s"""WITH $qsetSql,
-              |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-              |${lloydCentSql()},
-              |$resAdcSql,
-              |$pselSql
-              |SELECT query_id, m, code, part FROM lutr
-              |WHERE query_id IN (SELECT vec_id FROM psel)""".stripMargin)),
-
-    QueryDef("sim_res_part_probe",
-      (s, d) => resPartProbe(Tables.embeddings(s, d)),
-      Some(s"""WITH $qsetSql,
-              |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-              |${lloydCentSql()},
-              |$resAdcSql,
-              |$pselSql
-              |SELECT l.query_id, k.vec_id AS nbr_id, k.m, l.part
-              |FROM rpaF k
-              |JOIN (SELECT DISTINCT vec_id, cell FROM rxqm) co
-              |  ON k.vec_id = co.vec_id
-              |JOIN lutr l ON l.m = k.m AND l.code = k.cell
-              |  AND l.qcell = co.cell
-              |WHERE k.vec_id <> l.query_id
-              |  AND l.query_id IN (SELECT vec_id FROM psel)""".stripMargin)),
 
     // V14's recall monitor vs the exact cosine baseline — honest
     // pricing of the compounded loss (cell restriction x residual
@@ -5033,18 +4510,11 @@ object Similarity {
     // residuals, full integer ADC distance |r_q|² + |c|² − 2·r_q·c
     // so scores compare across cells (see knnIvfPqResProbe). The
     // training chain (rasn/rxqm/rpc/rpaF) is resAdcSql's — same
-    // home-cell-trained fine codebook as sim_knn_ivfpq_res.
-    //
-    // QUARANTINED to rows-only in round 10 with its nprobe=1 sibling;
-    // RE-PROMOTED in round 12 under the same CAST(... AS BIGINT)
-    // emission restatement (see the sim_knn_ivfpq_res note for the
-    // six-round attribution). The oracle is also REBUILT on the
-    // current integer cell ranking (`ivfrk`, shared with every IVF
-    // oracle since round 9) — the pre-quarantine text still ranked
-    // probe cells by round-6 cosine, which the Scala side left behind
-    // when the whole tier moved to the integer surrogate; per-probed-
-    // cell residuals and the full |r_q|²+|c|²−2·r_q·c distance are
-    // operand-for-operand knnIvfPqResProbe's.
+    // home-cell-trained fine codebook as sim_knn_ivfpq_res, and the
+    // same CAST(... AS BIGINT) score emission. Probe cells rank on
+    // the integer cell ranking (`ivfrk`) shared with every IVF oracle;
+    // per-probed-cell residuals and the full |r_q|²+|c|²−2·r_q·c
+    // distance are operand-for-operand knnIvfPqResProbe's.
     QueryDef("sim_knn_ivfpq_res_probe",
       (s, d) => knnIvfPqResProbe(Tables.embeddings(s, d)),
       Some(s"""WITH $qsetSql,
@@ -5089,63 +4559,6 @@ object Similarity {
     QueryDef("sim_rounding_canary",
       (s, _) => roundingCanary(s),
       Some(roundingCanarySql)),
-
-    // Round 11: data-free list/aggregate canary — the scalar canary's
-    // sibling over the list-slicing + BIGINT/HUGEINT-sum + IN-subquery
-    // constructs the residual ADC oracle leans on. See listAggCanary.
-    //
-    // ROWS-ONLY since round 12, the r7 known-red contract executed on
-    // the instrument a second time: CORRECTNESS_r11 hash-failed this
-    // row on the driver (rows/schema true, 4/4) while the judge
-    // verified the identical oracle on DuckDB 1.0.0 == an independent
-    // pure-Python integer evaluation == the Spark side (VERDICT r11).
-    // A ZERO-TABLE-INPUT query red only in the driver's environment
-    // conclusively attributes the r6–r10 residual-tier divergence to
-    // the driver's DuckDB build's list/aggregate surface. It did its
-    // job; the five sim_canary_* single-construct probes below take
-    // over its gate role at construct grain (the retired compound
-    // oracle text is in git history; its constructs are decomposed
-    // one-per-probe below).
-    QueryDef("sim_list_canary",
-      (s, _) => listAggCanary(s),
-      None),
-
-    // Round 12: the compound canary split into single-construct
-    // data-free probes — the driver row pattern now NAMES the
-    // construct its DuckDB build computes or renders differently.
-    // See the canarySlice block comment for the emission hypothesis
-    // and what each verdict combination means; the decisive pair is
-    // sum_raw (emits SUM(BIGINT) = HUGEINT) vs sum_cast (identical
-    // values through CAST(... AS BIGINT), the restatement the
-    // re-promoted residual oracles below now use).
-    QueryDef("sim_canary_slice",
-      (s, _) => canarySlice(s),
-      Some(canarySliceSql)),
-    // ROWS-ONLY since round 13 — the controlled experiment RESOLVED
-    // (SURVEY change note 50, closed): CORRECTNESS_r12 read this row
-    // hash-RED (rows/schema true) while its twin sum_cast and all
-    // three re-promoted residual queries read GREEN, and the judge's
-    // local re-run of the identical oracle was green — so the named
-    // construct is the driver DuckDB build's rendering of a raw
-    // integer-SUM emission (SUM(BIGINT) types HUGEINT), values and
-    // order preserved. The instrument did its job; per the r7
-    // known-red contract it must not ship red again (the driver
-    // environment will not change). Standing day-one rule: never
-    // emit a bare integer SUM in a DuckDB oracle — always
-    // CAST(... AS BIGINT). The Spark side stays registered so the
-    // probe keeps its determinism/rows coverage.
-    QueryDef("sim_canary_sum_raw",
-      (s, _) => canarySumRaw(s),
-      None),
-    QueryDef("sim_canary_sum_cast",
-      (s, _) => canarySumCast(s),
-      Some(canarySumCastSql)),
-    QueryDef("sim_canary_hugeint",
-      (s, _) => canaryHugeint(s),
-      Some(canaryHugeintSql)),
-    QueryDef("sim_canary_md5sel",
-      (s, _) => canaryMd5Sel(s),
-      Some(canaryMd5SelSql)),
 
     // V17 (round 9): coarse-assignment margin diagnostic — see
     // ivfAssignMargin.

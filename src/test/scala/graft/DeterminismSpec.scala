@@ -139,13 +139,6 @@ class DeterminismSpec extends SparkSpec {
     "sim_retrain_gain",       // two codebooks + decimal totals + sign CASE
     "sim_knn_ivfpq_refine",   // integer ADC cut + exact cosine rerank
     "mm_phash_clusters",      // banded pairs + pointer-jump CC labels
-    "sim_res_codebook_probe", // residual trainer's long-form codebook
-    "sim_res_codes_probe",    // residual argmin encode, all vectors
-    "sim_res_adc_probe",      // windowless integer ADC score rows
-    "sim_res_qres_probe",     // query-side residual values, long form
-    "sim_res_lut_probe",      // LUT partials for the probe sample
-    "sim_res_part_probe",     // pre-SUM ADC join emission
-    "sim_list_canary",        // data-free list/agg literal probes
     "sim_pqstore_drift",      // persisted-code reconstruction halves
     "sim_knn_ivfpq_store_refine", // store ADC cut + exact rerank
     "sim_knn_ivfpq_filtered", // pre-filter semi-join under the ADC
@@ -165,8 +158,7 @@ class DeterminismSpec extends SparkSpec {
     "dedup_span_cut_incremental", // index-derived spans + shared cut tail
     "dedup_span_w_sweep",     // mass report per swept window size
     "dedup_train_contamination", // flipped-direction overlap kernel
-    "dedup_cluster_agreement", // two CC labelings + pair-mass ratios
-    "sim_canary_sum_raw")     // data-free sum-emission probe (trivially)
+    "dedup_cluster_agreement") // two CC labelings + pair-mass ratios
 
   private def rows(name: String): Seq[String] = {
     val df = SparkEntry.queries(name)(spark, d)

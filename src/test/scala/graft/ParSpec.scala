@@ -23,6 +23,41 @@ class ParSpec extends SparkSpec {
     assert(boom.getMessage == "x")
   }
 
+  test("run rethrows the first failure in completion order without " +
+    "waiting for a slower sibling submitted before it") {
+    val latch = new java.util.concurrent.CountDownLatch(1)
+    val t0 = System.nanoTime()
+    val boom = intercept[IllegalStateException] {
+      Par.run[Int](Seq(
+        () => { latch.await(30, java.util.concurrent.TimeUnit.SECONDS); 0 },
+        () => throw new IllegalStateException("fast")))
+    }
+    val waitedS = (System.nanoTime() - t0) / 1e9
+    latch.countDown()
+    assert(boom.getMessage == "fast")
+    assert(waitedS < 10.0, s"waited $waitedS s for the blocked sibling")
+  }
+
+  test("run fails loudly when a sibling ignores cancellation") {
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val stubborn: () => Int = () => {
+      while (release.getCount > 0) {
+        try Thread.sleep(10)
+        catch { case _: InterruptedException => () } // swallowed
+      }
+      0
+    }
+    try {
+      val e = intercept[IllegalStateException] {
+        Par.run[Int](Seq(stubborn,
+          () => throw new IllegalArgumentException("boom")), drainMs = 200)
+      }
+      assert(e.getMessage.contains("still running"))
+      assert(e.getCause.isInstanceOf[IllegalArgumentException])
+      assert(e.getCause.getMessage == "boom")
+    } finally release.countDown()
+  }
+
   test("materialize returns frames row-identical to their inputs and " +
     "usable from the calling thread (Spark actions inside threads)") {
     val df1 = spark.range(0, 100).toDF("id")

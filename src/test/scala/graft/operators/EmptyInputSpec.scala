@@ -208,19 +208,8 @@ class EmptyInputSpec extends SparkSpec {
     assert(Dedup.clusterSplitGated(docs0).count() === 0)
     assert(Similarity.knnIvfPqResProbe(emb0).count() === 0)
     assert(Similarity.knnIvfFiltered(emb0, docs0).count() === 0)
-  }
-
-  test("round-10 stage-bisect probes are total on empty input") {
-    assert(Similarity.resCodebookProbe(emb0).count() === 0)
-    assert(Similarity.resCodesProbe(emb0).count() === 0)
-    assert(Similarity.resAdcProbe(emb0).count() === 0)
+    // the plain IVF-PQ nprobe and filtered variants
     assert(Similarity.knnIvfPqProbe(emb0).count() === 0)
-  }
-
-  test("round-11 ADC sub-probes are total on empty input") {
-    assert(Similarity.resQresProbe(emb0).count() === 0)
-    assert(Similarity.resLutProbe(emb0).count() === 0)
-    assert(Similarity.resPartProbe(emb0).count() === 0)
     assert(Similarity.knnIvfPqFiltered(emb0, docs0).count() === 0)
   }
 

@@ -73,37 +73,4 @@ class ResidualStressSpec extends SparkSpec {
         "drifted under 64 KiB input splits")
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", beforeMpb)
   }
-
-  test("round-10 stage-bisect probes are byte-stable across the same " +
-    "layout axes as the composite they audit") {
-    // the probes exist to NAME the stage if the driver gate diverges —
-    // that attribution is only trustworthy if the probes themselves
-    // cannot drift with physical layout, so they ride the same axes
-    // the quarantined composite is drilled on (DeterminismSpec covers
-    // the shuffle-partition axis; these are the file/plan axes)
-    val emb = graft.Tables.embeddings(spark, d)
-    val probes: Seq[(String, DataFrame => DataFrame)] = Seq(
-      ("codebook", Similarity.resCodebookProbe(_)),
-      ("codes", Similarity.resCodesProbe(_)),
-      ("adc", Similarity.resAdcProbe(_, Similarity.AdcProbeQueries)))
-    val base = probes.map { case (n, f) => n -> canon(f(emb)) }.toMap
-    probes.foreach { case (n, f) =>
-      assert(canon(f(emb.repartition(1))) == base(n),
-        s"$n probe drifted under repartition(1)")
-      assert(canon(f(emb.repartition(13))) == base(n),
-        s"$n probe drifted under repartition(13)")
-    }
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-probe-stress").toString
-    emb.repartition(5).write.mode("overwrite").parquet(s"$work/f5")
-    val beforeMpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
-      val split = spark.read.parquet(s"$work/f5")
-      probes.foreach { case (n, f) =>
-        assert(canon(f(split)) == base(n),
-          s"$n probe drifted under a 5-file rewrite + 64 KiB splits")
-      }
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", beforeMpb)
-  }
 }

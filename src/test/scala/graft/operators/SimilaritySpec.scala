@@ -672,9 +672,8 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("round-10 stage-bisect probes are consistent with the residual " +
-    "composite: codebook/codes shapes hold, and the windowless ADC " +
-    "rows reproduce the ranked top-k for the probed queries") {
+  test("residual nprobe=1 shares the home-cell ADC tail: same ranked " +
+    "rows as knnIvfPqRes, adc_q offset by the per-query |r_q|²") {
     val e = (0 until 200).map { i =>
       val c = i % 3
       (i.toLong, (0 until Similarity.Dim).map { d =>
@@ -682,76 +681,28 @@ class SimilaritySpec extends SparkSpec {
         base + ((i * 13 + d * 3) % 97) * 0.01f
       }.toArray, c)
     }.toDF("vec_id", "embedding", "label")
-    // codebook probe: every (subspace, code) carries exactly PqSubDim
-    // dimension rows; all PqM subspaces present
-    val cb = Similarity.resCodebookProbe(e)
-      .as[(Int, Long, Int, Long)].collect().toSeq
-    assert(cb.nonEmpty)
-    cb.groupBy(r => (r._1, r._2)).foreach { case (_, rows) =>
-      assert(rows.map(_._3).sorted.toSeq == (0 until Similarity.PqSubDim))
-    }
-    assert(cb.map(_._1).distinct.sorted.toSeq == (0 until Similarity.PqM))
-    // codes probe: one code per (vector, subspace); every code is a
-    // codebook cell
-    val codes = Similarity.resCodesProbe(e)
-      .as[(Long, Int, Long)].collect().toSeq
-    codes.groupBy(_._1).foreach { case (_, rows) =>
-      assert(rows.map(_._2).sorted.toSeq == (0 until Similarity.PqM))
-    }
-    val cells = cb.map(_._2).toSet
-    assert(codes.forall(r => cells(r._3)))
-    // adc probe: windowless per-candidate scores — re-ranking them
-    // locally by (adc_q, nbr_id) and cutting at K reproduces the
-    // composite's ranked emission for the probed queries, which is
-    // exactly the bisect contract (probe green + composite red ⇒
-    // the divergence is inside rank assembly alone)
-    val adc = Similarity.resAdcProbe(e)
-      .as[(Long, Long, Long)].collect().toSeq
-    val probed = adc.map(_._1).distinct
-    assert(probed.length === Similarity.AdcProbeQueries)
-    val rebuilt = adc.groupBy(_._1).toSeq.flatMap { case (q, rows) =>
-      rows.sortBy(r => (r._3, r._2)).take(Similarity.K).zipWithIndex
-        .map { case ((_, n, s), i) => (q, (i + 1).toLong, n, s) }
-    }.sortBy(r => (r._1, r._2))
-    val ranked = Similarity.knnIvfPqRes(e)
+    val home = Similarity.knnIvfPqRes(e)
       .as[(Long, Long, Long, Long)].collect().toSeq
-      .filter(r => probed.contains(r._1)).sortBy(r => (r._1, r._2))
-    assert(rebuilt === ranked && ranked.nonEmpty)
-
-    // round-11 sub-probes decompose the adc stage exactly: the
-    // pre-SUM join rows (f) group-sum to adc_q; every summand is a
-    // LUT partial the lut probe (e) emitted for that (query, m,
-    // code); and re-deriving part = cc − 2·rq·cq from the qres
-    // VALUES (d) × the codebook probe's values reproduces the lut
-    // probe bit-for-bit — so a driver red in any one of them names
-    // the first diverging VALUE, not a stage composite.
-    val parts = Similarity.resPartProbe(e)
-      .as[(Long, Long, Int, Long)].collect().toSeq
-    val summed = parts.groupBy(r => (r._1, r._2))
-      .map { case (k, rs) => (k._1, k._2, rs.map(_._4).sum) }.toSeq
-    assert(summed.sortBy(r => (r._1, r._2)) ===
-      adc.sortBy(r => (r._1, r._2)))
-    val lut = Similarity.resLutProbe(e)
-      .as[(Long, Int, Long, Long)].collect().toSeq
-    val lutMap = lut.map(r => ((r._1, r._2, r._3), r._4)).toMap
-    assert(lutMap.size === lut.length) // one partial per (q, m, code)
-    val codeOf = codes.map(r => ((r._1, r._2), r._3)).toMap
-    parts.foreach { case (q, n, m, p) =>
-      assert(lutMap(((q, m, codeOf((n, m))))) === p)
+    val probe1 = Similarity.knnIvfPqResProbe(e, probes = 1)
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(home.nonEmpty)
+    // the rank-1 probe cell is the ivfAssign home cell under the same
+    // (s, cent_id) order, so the ranking is the same
+    assert(probe1.map(r => (r._1, r._2, r._3)).sorted ===
+      home.map(r => (r._1, r._2, r._3)).sorted)
+    // |r_q|² against the home centroid, in the same integer micro-units
+    val cents = Similarity.ivfCodebook(e)
+    val rq2 = Similarity.ivfAssign(e, Some(cents))
+      .join(cents, col("cell") === col("cent_id"))
+      .selectExpr("vec_id", "aggregate(zip_with(v, cv, (a, b) -> " +
+        "cast(round(a * 1000000.0D) as bigint) - " +
+        "cast(round(b * 1000000.0D) as bigint)), 0L, " +
+        "(acc, x) -> acc + x * x) AS rq2")
+      .as[(Long, Long)].collect().toMap
+    val homeScore = home.map(r => ((r._1, r._3), r._4)).toMap
+    probe1.foreach { case (q, _, n, s) =>
+      assert(s - homeScore((q, n)) === rq2(q), s"query $q, nbr $n")
     }
-    val qres = Similarity.resQresProbe(e)
-      .as[(Long, Int, Int, Long)].collect().toSeq
-    assert(qres.map(_._1).distinct.sorted === probed.sorted)
-    val rqVec = qres.groupBy(r => (r._1, r._2)).map { case (k, rs) =>
-      (k, rs.sortBy(_._3).map(_._4)) }
-    val cqVec = cb.groupBy(r => (r._1, r._2)).map { case (k, rs) =>
-      (k, rs.sortBy(_._3).map(_._4)) }
-    val rebuilt2 = for {
-      ((q, m), rq) <- rqVec.toSeq
-      ((mm, code), cq) <- cqVec.toSeq if mm == m
-    } yield ((q, m, code),
-      cq.map(x => x * x).sum - 2L * rq.zip(cq).map(t => t._1 * t._2).sum)
-    assert(rebuilt2.toMap === lutMap)
   }
 
   test("rp project: RpDim whole-integer dims; scalar multiples stay parallel") {

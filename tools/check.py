@@ -8,7 +8,8 @@ Registers each <sf_dir>/*.parquet as a DuckDB view named by file stem,
 executes each oracle_sql.json entry, and compares with the Spark result
 parquet: columns sorted by name, rows sorted, exact value compare
 (floats compared bit-exactly via repr, which is what a hash-based
-compare amounts to).
+compare amounts to). Queries that threw inside graft.Verify are read
+from <verify_out_dir>/failed.json and reported with their message.
 """
 import json, os, sys
 import duckdb
@@ -34,9 +35,16 @@ def main():
             con.execute(
                 f"CREATE VIEW {f[:-8]} AS SELECT * FROM '{sfdir}/{f}'")
     oracles = json.load(open(os.path.join(outdir, 'oracle_sql.json')))
+    failed_path = os.path.join(outdir, 'failed.json')
+    failed = json.load(open(failed_path)) if os.path.exists(failed_path) else {}
     n_ok = n_bad = 0
-    for name, sql in sorted(oracles.items()):
+    for name, msg in sorted(failed.items()):
         if only and name not in only:
+            continue
+        print(f"FAILED   {name}: {msg}")
+        n_bad += 1
+    for name, sql in sorted(oracles.items()):
+        if (only and name not in only) or name in failed:
             continue
         rdir = os.path.join(outdir, name)
         if not os.path.isdir(rdir):
