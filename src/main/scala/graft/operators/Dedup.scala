@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.plans.StoreOps
 import graft.functions.Functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -601,10 +602,11 @@ object Dedup {
   def lshContractFor(t: Double): String =
     s"sh$ShingleN-mh${Bands * Rows}-b${Bands}x$Rows-t$t-v1"
 
-  val LshContract: String = lshContractFor(JaccardT)
-
-  private val lshStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def lshStamp(t: Double) = StoreOps.Stamp("_lsh_contract",
+    "contract", lshContractFor(t),
+    "stored bands/shingles/labels and fresh batch signatures would " +
+      "disagree on candidate and edge semantics. Rebuild the index " +
+      "(delete + lshIndexBuild) or call at the store's threshold.")
 
   /** Build the persisted MinHash-LSH dedup index at `dir` — the table
     * the family's scale notes have always assumed ("at 100 TB the
@@ -615,21 +617,16 @@ object Dedup {
     *   dir/bands/batch=seed    (doc_id, band, bsig) — the bucket join
     *   dir/shingles/batch=seed (doc_id, sh)         — the exact verify
     *   dir/labels              (doc_id, canonical_id) — the clustering
-    *   dir/_lsh_contract       — the semantics stamp, written LAST so
-    *     a build crash leaves an unstamped partial store (loud warn
-    *     path) rather than a stamped one
-    * Refuses to build over an existing store (the ivfBuild ordering
-    * argument — partial rebuilds pair old rows with a fresh stamp).
+    *   dir/_lsh_contract       — the semantics stamp
+    * The whole store is staged and renamed in (StoreOps), so a crashed
+    * build leaves no store behind.
     * ONE shingle pass feeds all three tables through the exact kernels
     * the inline queries run, so store serving is row-identical by
     * construction.
     */
   def lshIndexBuild(s: SparkSession, dir: String, docs: DataFrame): Unit = {
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    val fs = dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(!fs.exists(dp),
-      s"refusing to build over an existing LSH index at $dir — delete " +
-        "the store first, or ingest with lshIndexAppend")
+    StoreOps.requireAbsent(s, dir, "LSH index",
+      "delete the store first, or ingest with lshIndexAppend")
     // eager: the three overlapped store writes below all read these
     // (Par contract — materialize shared relations before the fork)
     val sh = docShingleHashes(docs).localCheckpoint()
@@ -637,21 +634,19 @@ object Dedup {
       .localCheckpoint()
     // the three store tables are independent given sh/bands — write
     // them concurrently (guide §2.6); the labels CC fixpoint is the
-    // long pole and the two table writes back-fill its serial rounds.
-    // Write order never mattered for crash recovery: the stamp below
-    // is written LAST either way.
-    Par.run[Unit](Seq(
-      () => sh.write.parquet(s"$dir/shingles/batch=seed"),
-      () => bands.write.parquet(s"$dir/bands/batch=seed"),
-      () => labelComponents(
-        jaccardVerifyFrom(bandCandidates(bands, bands, half = true),
-          sh, JaccardT).select(col("i"), col("j")),
-        docs.select(col("doc_id")))
-        .select(col("doc_id"), col("canonical_id"))
-        .write.parquet(s"$dir/labels")))
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(dir, "_lsh_contract"), true)
-    try out.write(LshContract.getBytes("UTF-8")) finally out.close()
+    // long pole and the two table writes back-fill its serial rounds
+    StoreOps.stage(s, dir, Some(lshStamp(JaccardT))) { tmp =>
+      Par.run[Unit](Seq(
+        () => sh.write.parquet(s"$tmp/shingles/batch=seed"),
+        () => bands.write.parquet(s"$tmp/bands/batch=seed"),
+        () => labelComponents(
+          jaccardVerifyFrom(bandCandidates(bands, bands, half = true),
+            sh, JaccardT).select(col("i"), col("j")),
+          docs.select(col("doc_id")))
+          .select(col("doc_id"), col("canonical_id"))
+          .write.parquet(s"$tmp/labels")))
+    }
+    StoreOps.swap(s, Seq(dir))
   }
 
   /** Checked store read: refuse a contract stamp contradicting the
@@ -660,42 +655,18 @@ object Dedup {
     * instead of silently mixing edge semantics), warn on absence;
     * `asOf` keeps only the seed plus strictly-earlier batch
     * partitions (StoreOps.asOfBatch — what makes append replay safe
-    * against self-matching). The labels read falls back to the
-    * completed `labels._tmp` stage when the live table is missing —
-    * the delete-then-rename crash state of StoreOps.stagedSwap — so
-    * a crashed append's replay proceeds instead of wedging.
+    * against self-matching). Tables are opened through
+    * StoreOps.readable, so reads keep working after a crashed append's
+    * commit point, before lshRecover runs.
     */
   private def lshStoreTable(s: SparkSession, dir: String, table: String,
                             asOf: Option[Long] = None,
                             t: Double = JaccardT): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_lsh_contract")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val want = lshContractFor(t)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val c = try new String(in.readAllBytes(), "UTF-8").trim
-      finally in.close()
-      require(c == want,
-        s"refusing to serve from $dir: the store was signed under " +
-          s"contract '$c' but this call operates by '$want' — " +
-          "stored bands/shingles/labels and fresh batch signatures " +
-          "would disagree on candidate and edge semantics. Rebuild " +
-          "the index (delete + lshIndexBuild) or call at the store's " +
-          "threshold.")
-    } else System.err.println(
-      s"[graft] WARN: $dir carries no _lsh_contract stamp (pre-stamp " +
-        s"store); assuming '$want'.")
-    val live = s"$dir/$table"
-    val path =
-      if (table == "labels" &&
-        !fs.exists(new org.apache.hadoop.fs.Path(live)) &&
-        fs.exists(new org.apache.hadoop.fs.Path(live + "._tmp")))
-        live + "._tmp"
-      else live
-    val df = s.read.parquet(path)
+    StoreOps.checkStamp(s, dir, lshStamp(t))
+    val df = s.read.parquet(StoreOps.readable(s, s"$dir/$table"))
     asOf match {
       case Some(b) =>
-        df.filter(graft.plans.StoreOps.asOfBatch(b)).drop("batch")
+        df.filter(StoreOps.asOfBatch(b)).drop("batch")
       case None => df.drop("batch")
     }
   }
@@ -760,18 +731,18 @@ object Dedup {
       fresh.select(col("doc_id")), t)
   }
 
-  /** Ingest a batch into the store: detect-and-fold FIRST (against
-    * the index AS OF this batch id — seed + strictly-earlier batches,
-    * so a crash replay can neither self-match nor time-travel), swap
-    * the labels table to the folded result, then publish the batch's
-    * bands/shingles under batchId-keyed overwrite partitions for the
-    * NEXT ingest. Replay-idempotent end to end: the fold of an
+  /** Ingest a batch into the store: detect-and-fold against the index
+    * AS OF this batch id (seed + strictly-earlier batches, so a crash
+    * replay can neither self-match nor time-travel), then swap in the
+    * folded labels together with the batch's bands/shingles
+    * partitions for the NEXT ingest — one StoreOps group, labels
+    * first. Replay-idempotent end to end: the fold of an
     * already-folded batch is the identity (its edges contract to
-    * self-loops), the label swap converges, and the partition writes
-    * overwrite in place.
+    * self-loops), and the swap replaces the batch's own partitions.
     */
   def lshIndexAppend(s: SparkSession, dir: String, batch: DataFrame,
                      batchId: Long, t: Double = JaccardT): Unit = {
+    lshRecover(s, dir)
     val bsh = docShingleHashes(batch).localCheckpoint(false)
     val bBands = bandSignaturesFrom(minhashSignaturesFrom(bsh))
       .localCheckpoint(false)
@@ -792,11 +763,33 @@ object Dedup {
       freshIds, t)
       .select(col("doc_id"), col("canonical_id"))
       .localCheckpoint() // eager: read the store BEFORE the swap below
-    // staged swap; the delete-then-rename crash state is recoverable
-    // because the labels READ falls back to the completed stage
-    graft.plans.StoreOps.stagedSwap(s, s"$dir/labels", folded)
-    bsh.write.mode("overwrite").parquet(s"$dir/shingles/batch=$batchId")
-    bBands.write.mode("overwrite").parquet(s"$dir/bands/batch=$batchId")
+    val group = lshGroup(dir, batchId.toString)
+    group.zip(Seq(folded, bsh, bBands)).foreach { case (d, df) =>
+      StoreOps.stage(s, d)(df.write.parquet(_))
+    }
+    StoreOps.swap(s, group)
+  }
+
+  /** An append's swap group: the labels (the commit dir) and the
+    * batch's shingles and bands partitions.
+    */
+  private def lshGroup(dir: String, batchId: String): Seq[String] =
+    Seq(s"$dir/labels", s"$dir/shingles/batch=$batchId",
+      s"$dir/bands/batch=$batchId")
+
+  private val StagedBatch = """\.batch=(.+)\._tmp""".r
+
+  /** The store's crash recovery (StoreOps.recover): the labels swap
+    * group, with whatever batch partitions an interrupted append had
+    * staged beside it.
+    */
+  def lshRecover(s: SparkSession, dir: String): Unit = {
+    val ids = Seq("shingles", "bands")
+      .flatMap(tb => StoreOps.list(s, s"$dir/$tb"))
+      .map(_.getPath.getName).collect { case StagedBatch(id) => id }
+      .distinct
+    StoreOps.recover(s,
+      s"$dir/labels" +: ids.flatMap(id => lshGroup(dir, id).tail))
   }
 
   /** 60-bit SimHash per doc from token-occurrence hashes: bit k is set
@@ -1703,13 +1696,8 @@ object Dedup {
     * the cachedStoreIndex device).
     */
   private def cachedLshStore(s: SparkSession, d: String): String =
-    lshStores.computeIfAbsent(d, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-lsh-index").toString + "/idx"
-      lshIndexBuild(s, out,
-        docs(s, d).filter(col("doc_id") % 10 < 8))
-      out
-    })
+    StoreOps.buildOnce("lsh-index", d)(
+      lshIndexBuild(s, _, docs(s, d).filter(col("doc_id") % 10 < 8)))
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.plans.StoreOps
 import graft.functions.Functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -982,37 +983,37 @@ object Similarity {
     * serving reads codes + two broadcast sidecars only.
     */
   def ivfPqBuild(s: SparkSession, dir: String, emb: DataFrame): Unit = {
-    // Fail fast BEFORE touching the sidecars: the data write below is
-    // ErrorIfExists, so building over an existing store would
-    // overwrite .codebook and .pq, then throw — leaving OLD codes
-    // paired with NEW sidecars, a silently corrupt store the metric
-    // stamp cannot catch (it would match). Rebuild = delete + build;
-    // incremental ingest = ivfPqAppend.
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    require(!dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(dp),
-      s"refusing to build over an existing store at $dir — a partial " +
-        "rebuild would pair old codes with new sidecars; delete the " +
-        "store first, or ingest with ivfPqAppend")
+    StoreOps.requireAbsent(s, dir, "store",
+      "delete the store first, or ingest with ivfPqAppend")
+    stagePqStore(s, dir, emb)
+    StoreOps.swap(s, storeGroup(dir))
+  }
+
+  /** A store's dirs in swap order: the `.codebook` sidecar first (its
+    * delete commits a swap), the cells, and the code tier's `.pq`.
+    */
+  private def storeGroup(dir: String): Seq[String] =
+    Seq(s"$dir.codebook", dir, s"$dir.pq")
+
+  /** Stage a whole code-only store for `dir`: the coarse Lloyd ladder
+    * and the sampled-PQ encode pass are independent until the final
+    * cell-partitioned write — overlap them, then stage the two
+    * (independent) sidecars concurrently (guide §2.6, round 14).
+    */
+  private def stagePqStore(s: SparkSession, dir: String,
+                           emb: DataFrame): Unit = {
     val e = vecs(emb)
-    // the coarse Lloyd ladder and the sampled-PQ encode pass are
-    // independent until the final cell-partitioned write — overlap
-    // them, then land the two (independent) sidecars concurrently
-    // (guide §2.6, round 14). The ErrorIfExists DATA write still runs
-    // last, so the fail-fast/crash contract above is unchanged, and
-    // each sidecar write is the atomic stamped swap either way.
     val (cents, codes) = Par.run2(
       () => ivfCodebook(emb).localCheckpoint(true),
       () => pqCodes(emb).localCheckpoint(true))
     Par.run[Unit](Seq(
-      () => writeCodebookSidecar(s, dir, cents),
-      () => writeStampedSidecar(s, s"$dir.pq",
-        sampledCodebook(e).select("m", "code", "c"),
-        "_encode_contract", PqEncodeContract)))
-    codes
+      () => stageCodebook(s, dir, cents),
+      () => StoreOps.stage(s, s"$dir.pq", Some(PqStamp))(
+        sampledCodebook(e).select("m", "code", "c").write.parquet(_))))
+    StoreOps.stage(s, dir)(codes
       .join(ivfAssign(emb, Some(cents)).select("vec_id", "cell"),
         Seq("vec_id"))
-      .write.partitionBy("cell").parquet(dir)
+      .write.partitionBy("cell").parquet(_))
   }
 
   /** Serving over the code-only store: the bounded query batch
@@ -1162,8 +1163,8 @@ object Similarity {
     * retraining the quantizers REQUIRES the float source. This verb
     * is that story made executable: a fresh `ivfPqBuild` from the
     * source (fresh coarse codebook, fresh `.pq` fine codebook, fresh
-    * codes — the FAISS offline-retrain semantics), staged at
-    * `<dir>._rebuild*` and swapped in whole, so serving afterwards is
+    * codes — the FAISS offline-retrain semantics), staged and
+    * swapped in whole (StoreOps), so serving afterwards is
     * byte-identical to a first build over the same rows
     * (spec-proven). It is also the remedy every checked-read refusal
     * (contradicting `_assign_metric` or `_encode_contract` stamp)
@@ -1174,42 +1175,21 @@ object Similarity {
     * file retires with the old store — a rebuild that resurrected
     * tombstoned ids would undo every ivfDelete since the last build.
     *
-    * Crash windows: before the old-store delete — old store intact,
-    * staging debris at `._rebuild*` is re-deleted by the next run;
-    * between delete and the renames — the COMPLETED rebuild sits at
-    * `._rebuild*` (rename to finish) while every read fails loudly
-    * on the missing store (no silent old/new mixing is possible: the
-    * staging dirs are never read paths).
-    *
     * Scale shape: one full build from the source (train + encode +
     * cell-partitioned write) — index-build cost, run offline and
     * rarely, the sim_codebook_drift/sim_pqstore_drift gauges saying
     * when. Returns the rebuilt store's vector count.
     */
   def ivfPqRebuild(s: SparkSession, dir: String, emb: DataFrame): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$dir.pq")) &&
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir.codebook")),
+    require(StoreOps.exists(s, s"$dir.pq") &&
+      StoreOps.exists(s, s"$dir.codebook"),
       s"no code-only store at $dir — use ivfPqBuild for a first build")
     val src = tombstones(s, dir)
       .map(t => emb.join(t.select("vec_id"), Seq("vec_id"), "left_anti"))
       .getOrElse(emb)
       .localCheckpoint(false) // one snapshot feeds train + encode
-    val tmp = s"$dir._rebuild"
-    val stage = Seq(tmp, s"$tmp.codebook", s"$tmp.pq")
-    val live = Seq(dir, s"$dir.codebook", s"$dir.pq")
-    stage.foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    ivfPqBuild(s, tmp, src)
-    live.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir.tombstones"), true)
-    stage.zip(live).foreach { case (from, to) =>
-      require(fs.rename(new org.apache.hadoop.fs.Path(from),
-        new org.apache.hadoop.fs.Path(to)),
-        s"rebuild swap rename failed: $from -> $to (completed rebuild " +
-          "left in staging; rename the _rebuild dirs manually)")
-    }
+    stagePqStore(s, dir, src)
+    StoreOps.swap(s, storeGroup(dir), retire = Seq(s"$dir.tombstones"))
     s.read.parquet(dir).select("vec_id").distinct().count()
   }
 
@@ -1255,8 +1235,10 @@ object Similarity {
           .as("mean_dist_e6"))
   }
 
-  private val ivfPqStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The sfDir-cached code-only store the from-store twins read. */
+  private def cachedPqStore(s: SparkSession, d: String): String =
+    StoreOps.buildOnce("ivfpq-index", d)(
+      ivfPqBuild(s, _, Tables.embeddings(s, d)))
 
   /** V17 (round 9): IVF-PQ with an exact refine stage — the FAISS
     * IndexRefineFlat composite, the third rung of the production
@@ -1555,17 +1537,13 @@ object Similarity {
     * later append/serve reads the sidecar.
     */
   def ivfBuild(s: SparkSession, dir: String, emb: DataFrame): Unit = {
-    // same fail-fast-before-sidecar contract as ivfPqBuild: the data
-    // write is ErrorIfExists, so a rebuild over an existing store
-    // would land a new sidecar, then throw — old cells, new codebook
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    require(!dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(dp),
-      s"refusing to build over an existing store at $dir — delete it " +
-        "first (rebuild), or use ivfAppend/ivfRetrain")
+    StoreOps.requireAbsent(s, dir, "store",
+      "delete it first (rebuild), or use ivfAppend/ivfRetrain")
     val cent = ivfCodebook(emb).localCheckpoint(false)
-    writeCodebookSidecar(s, dir, cent)
-    ivfAssign(emb, Some(cent)).write.partitionBy("cell").parquet(dir)
+    stageCodebook(s, dir, cent)
+    StoreOps.stage(s, dir)(
+      ivfAssign(emb, Some(cent)).write.partitionBy("cell").parquet(_))
+    StoreOps.swap(s, Seq(s"$dir.codebook", dir))
   }
 
   /** The coarse-assignment metric this build of the library routes
@@ -1582,60 +1560,24 @@ object Similarity {
 
   /** The stamp lives INSIDE the sidecar directory under a leading
     * underscore, so Spark's parquet discovery ignores it and it
-    * travels/dies with the sidecar it describes. Absence WARNS
-    * rather than refuses — it means a genuinely pre-stamp legacy
-    * store: since round 11 the stamped write is ATOMIC (staging dir
-    * + rename), so an interrupted rewrite can no longer manufacture
-    * a stampless sidecar out of one that carried a stamp.
+    * travels/dies with the sidecar it describes.
     */
-  private def metricMarker(dir: String) =
-    new org.apache.hadoop.fs.Path(s"$dir.codebook", "_assign_metric")
+  private val MetricStamp = StoreOps.Stamp("_assign_metric",
+    "assign_metric", AssignMetric,
+    "stored memberships and fresh assignments would disagree on cell " +
+      "routing (silent in-cell recall loss). Run ivfRetrain to " +
+      "re-assign the store under the current metric.")
 
-  /** The single stamped-sidecar write path (round-11 ADVICE
-    * hardening): parquet AND stamp land in a `<path>._tmp` staging
-    * dir, which then renames over the live sidecar — one commit
-    * point instead of the former parquet-then-stamp pair, whose
-    * crash window could downgrade a store that previously carried a
-    * CONTRADICTING stamp to the warn-only unstamped path. Crash
-    * before the rename: the old sidecar (rows + stamp) is intact.
-    * Crash between delete and rename: NO sidecar — every read fails
-    * loudly (no silent downgrade) and the COMPLETED staging dir sits
-    * at `<path>._tmp`; rename it to finish the swap.
-    */
-  private def writeStampedSidecar(s: SparkSession, path: String,
-                                  df: DataFrame, stampName: String,
-                                  stampValue: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "._tmp")
-    fs.delete(tmp, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val out = fs.create(new org.apache.hadoop.fs.Path(tmp, stampName), true)
-    try out.write(stampValue.getBytes("UTF-8")) finally out.close()
-    fs.delete(dst, true)
-    require(fs.rename(tmp, dst),
-      s"sidecar swap rename failed: $tmp -> $dst (completed staging " +
-        "dir left in place; rename it manually to finish)")
+  private def stageCodebook(s: SparkSession, dir: String,
+                            cb: DataFrame): Unit =
+    StoreOps.stage(s, s"$dir.codebook", Some(MetricStamp))(cb.write.parquet(_))
+
+  /** Replace the `.codebook` sidecar of a live store. */
+  private def swapCodebook(s: SparkSession, dir: String,
+                           cb: DataFrame): Unit = {
+    stageCodebook(s, dir, cb)
+    StoreOps.swap(s, Seq(s"$dir.codebook"))
   }
-
-  private def writeCodebookSidecar(s: SparkSession, dir: String,
-                                   cb: DataFrame): Unit =
-    writeStampedSidecar(s, s"$dir.codebook", cb, "_assign_metric",
-      AssignMetric)
-
-  private def storedStamp(s: SparkSession,
-                          p: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim)
-      finally in.close()
-    }
-  }
-
-  private def storedMetric(s: SparkSession, dir: String): Option[String] =
-    storedStamp(s, metricMarker(dir))
 
   /** The fine-encode identity this build produces `.pq`-sidecar codes
     * under (round-11 ADVICE — the `.pq` twin of AssignMetric): the
@@ -1649,25 +1591,18 @@ object Similarity {
     */
   val PqEncodeContract = "d2-float-round6-v1"
 
+  private val PqStamp = StoreOps.Stamp("_encode_contract",
+    "encode_contract", PqEncodeContract,
+    "stored codes and fresh encodes/LUTs would disagree on code " +
+      "meaning. Run ivfPqRebuild to re-encode the store from its " +
+      "float source.")
+
   /** Checked `.pq` fine-codebook read — every code-tier serve/append
     * path (the `.codebook` coarse sidecar is separately checked by
     * storeCodebook).
     */
   private def storePqCodebook(s: SparkSession, dir: String): DataFrame = {
-    storedStamp(s,
-      new org.apache.hadoop.fs.Path(s"$dir.pq", "_encode_contract")) match {
-      case Some(c) => require(c == PqEncodeContract,
-        s"refusing to use $dir.pq: its codes were encoded under " +
-          s"contract '$c' but this build encodes by " +
-          s"'$PqEncodeContract' — stored codes and fresh encodes/LUTs " +
-          "would disagree on code meaning. Run ivfPqRebuild to " +
-          "re-encode the store from its float source.")
-      case None => System.err.println(
-        s"[graft] WARN: $dir.pq carries no _encode_contract stamp " +
-          s"(pre-stamp store); assuming '$PqEncodeContract'. If the " +
-          "store predates the shared pqEncodeAgainst kernel, run " +
-          "ivfPqRebuild.")
-    }
+    StoreOps.checkStamp(s, s"$dir.pq", PqStamp)
     s.read.parquet(s"$dir.pq")
   }
 
@@ -1686,20 +1621,7 @@ object Similarity {
     * warns once per read on an unstamped legacy sidecar.
     */
   def storeCodebook(s: SparkSession, dir: String): DataFrame = {
-    storedMetric(s, dir) match {
-      case Some(m) => require(m == AssignMetric,
-        s"refusing to use $dir.codebook: its cells were assigned " +
-          s"under metric '$m' but this build routes by " +
-          s"'$AssignMetric' — stored memberships and fresh " +
-          "assignments would disagree on cell routing (silent " +
-          "in-cell recall loss). Run ivfRetrain to re-assign the " +
-          "store under the current metric.")
-      case None => System.err.println(
-        s"[graft] WARN: $dir.codebook carries no _assign_metric " +
-          s"stamp (pre-stamp store or interrupted sidecar write); " +
-          s"assuming '$AssignMetric'. If the store predates the " +
-          "integer-L2 assignment, run ivfRetrain.")
-    }
+    StoreOps.checkStamp(s, s"$dir.codebook", MetricStamp)
     codebookUnchecked(s, dir)
   }
 
@@ -1736,11 +1658,10 @@ object Similarity {
     ids.toDF("vec_id").write.mode("append").parquet(s"$dir.tombstones")
   }
 
-  private def tombstones(s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir.tombstones")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(s.read.parquet(p.toString)) else None
-  }
+  private def tombstones(s: SparkSession, dir: String): Option[DataFrame] =
+    if (StoreOps.exists(s, s"$dir.tombstones"))
+      Some(s.read.parquet(s"$dir.tombstones"))
+    else None
 
   /** The full index relation: the cell-partitioned base store plus
     * the streaming-ingest tail (`<dir>.ingest/batch=<id>` subdirs —
@@ -1753,9 +1674,7 @@ object Similarity {
   def storeIndex(s: SparkSession, dir: String): DataFrame = {
     val baseDf = s.read.parquet(dir)
       .select(col("vec_id"), col("v"), col("cell"))
-    val ip = new org.apache.hadoop.fs.Path(s"$dir.ingest")
-    val fs = ip.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(ip) && fs.listStatus(ip).exists(_.isDirectory))
+    if (StoreOps.list(s, s"$dir.ingest").exists(_.isDirectory))
       baseDf.unionByName(s.read.parquet(s"$dir.ingest")
         .select(col("vec_id"), col("v"), col("cell")))
     else baseDf
@@ -1808,14 +1727,11 @@ object Similarity {
     */
   def ivfCompact(s: SparkSession, dir: String): Long = {
     import s.implicits._
-    val fsRoot = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ip = new org.apache.hadoop.fs.Path(s"$dir.ingest")
-    if (fsRoot.exists(ip) && fsRoot.listStatus(ip).exists(_.isDirectory)) {
+    if (StoreOps.list(s, s"$dir.ingest").exists(_.isDirectory)) {
       s.read.parquet(s"$dir.ingest")
         .select(col("vec_id"), col("v"), col("cell"))
         .write.mode("append").partitionBy("cell").parquet(dir)
-      fsRoot.delete(ip, true)
+      StoreOps.delete(s, s"$dir.ingest")
     }
     val tomb = tombstones(s, dir).getOrElse(return 0L)
       .select("vec_id").distinct().localCheckpoint(false)
@@ -1823,8 +1739,6 @@ object Similarity {
     val nRemoved = idx.join(tomb, Seq("vec_id"), "left_semi").count()
     val touched = idx.join(tomb, Seq("vec_id"), "left_semi")
       .select("cell").distinct().as[Long].collect().sorted.toSeq
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     if (touched.nonEmpty) {
       val remaining = idx.filter(col("cell").isin(touched: _*))
         .join(tomb, Seq("vec_id"), "left_anti")
@@ -1834,11 +1748,10 @@ object Similarity {
       remaining.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell").parquet(dir)
-      touched.filterNot(keptCells).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, s"cell=$c"), true)
-      }
+      touched.filterNot(keptCells)
+        .foreach(c => StoreOps.delete(s, s"$dir/cell=$c"))
     }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir.tombstones"), true)
+    StoreOps.delete(s, s"$dir.tombstones")
     nRemoved
   }
 
@@ -1869,9 +1782,7 @@ object Similarity {
     // those rows against the new sidecar. Fold the tail first
     // (ivfCompact), exactly like the offline contract already
     // requires for serving.
-    val tailPath = new org.apache.hadoop.fs.Path(s"$dir.ingest")
-    require(!tailPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(tailPath),
+    require(!StoreOps.exists(s, s"$dir.ingest"),
       s"refusing to split with a live ingest tail at $dir.ingest — " +
         "run ivfCompact first (stop-compact-split-restart)")
     requireRecovered(s, dir, "split") // pre-commit crash debris check
@@ -1930,55 +1841,35 @@ object Similarity {
       .join(overCells.toDF("cent_id"), Seq("cent_id"), "left_anti")
       .unionByName(newCents)
       .localCheckpoint() // materialize before the sidecar overwrite
-    // Copy-on-write cell swap, in CRASH-SAFE order (round 9 — the
-    // sidecar used to land first, which a crash could leave pointing
-    // at sub-cells with no directories):
-    //   1. append the sub-cell dirs (fresh ids never collide with
-    //      existing dirs; the old sidecar doesn't reference them yet,
-    //      so serving is untouched);
-    //   2. overwrite the `.codebook` sidecar — the commit point:
-    //      queries now route to the sub-cells;
-    //   3. drop the parent dirs (the new sidecar no longer references
-    //      them, so they are dead weight, not served).
-    // Crash recovery rule (the ivfCompact style): before 2, delete
-    // any `cell=` dirs whose id is NOT in the sidecar and re-run the
-    // split; after 2, the split is committed — delete any `cell=`
-    // dirs not in the sidecar (the orphaned parents) and serve.
-    // Both cases are one ivfRecover call, and the pre-commit case is
-    // ENFORCED at entry (requireRecovered, round 10): re-running over
-    // debris would re-derive the same fresh ids and append duplicates.
+    // Copy-on-write cell swap: the sub-cell dirs land first (fresh ids
+    // the old sidecar does not reference, so serving is untouched),
+    // the sidecar swap routes queries to them, then the parents drop.
+    // Crash debris is unreferenced cells either way — ivfRecover.
     assigned.write.mode("append").partitionBy("cell").parquet(dir)
-    writeCodebookSidecar(s, dir, cb2)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    overCells.foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"cell=$c"), true)
-    }
+    swapCodebook(s, dir, cb2)
+    overCells.foreach(c => StoreOps.delete(s, s"$dir/cell=$c"))
     overCells.size.toLong
   }
 
-  /** V17 (round 9): the crash-recovery rule ivfApplySplit/ivfRetrain
-    * document, as an executable verb — delete every `cell=` directory
-    * whose id the `.codebook` sidecar does not reference. The sidecar
-    * overwrite is the COMMIT POINT of both swap verbs, so unreferenced
-    * dirs are exactly the crash debris: orphaned sub-cells/new cells
-    * when the crash hit before the sidecar landed (then re-run the
-    * interrupted verb), or the retired parents when it hit after
-    * (the swap is committed; only the drop was lost). Either way the
-    * debris rows are DUPLICATES of live vectors under dead cell ids,
-    * and storeIndex's base read scans every cell directory — so
-    * recovery must run before serving resumes after a crash, then
-    * the pre-commit case re-runs the interrupted verb. Offline,
-    * single-writer, like every swap verb here. Returns the number of
-    * directories removed.
+  /** V17 (round 9): crash recovery for every swap verb on the store,
+    * as an executable verb. First StoreOps.recover brings the
+    * sidecars (and a rebuild's cells) to a committed generation; then
+    * every `cell=` directory the `.codebook` sidecar does not
+    * reference is deleted. Those are the swap verbs' debris: new cells
+    * of an uncommitted split/retrain, or the retired cells of a
+    * committed one — DUPLICATES of live vectors under dead cell ids,
+    * which storeIndex's base read would scan. Run it before serving
+    * resumes after a crash; then re-run an uncommitted verb. Returns
+    * the number of cell directories removed.
     */
   def ivfRecover(s: SparkSession, dir: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    // a staged cell dir marks a whole-store rebuild, whose staged codes
+    // already fold the tombstones — finishing it retires them
+    StoreOps.recover(s, storeGroup(dir),
+      if (StoreOps.exists(s, StoreOps.stagePath(dir)))
+        Seq(s"$dir.tombstones") else Nil)
     val orphans = orphanCells(s, dir)
-    orphans.foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"cell=$c"), true)
-    }
+    orphans.foreach(c => StoreOps.delete(s, s"$dir/cell=$c"))
     orphans.size.toLong
   }
 
@@ -1988,13 +1879,11 @@ object Similarity {
     */
   private def orphanCells(s: SparkSession, dir: String): Seq[Long] = {
     import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     // unchecked read: recovery (and the swap-verb guard built on it)
     // must work on a metric-mismatched store — it consumes only ids
     val live = codebookUnchecked(s, dir).select("cent_id").as[Long]
       .collect().toSet
-    fs.listStatus(p).toSeq
+    StoreOps.list(s, dir)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
       .map(st => st.getPath.getName.stripPrefix("cell=").toLong)
       .filterNot(live)
@@ -2028,8 +1917,7 @@ object Similarity {
     * retrain): re-train the codebook from the store's CURRENT rows
     * with the same deterministic Lloyd trainer ivfBuild uses, re-
     * assign every vector under the integer surrogate, and swap the
-    * sidecar + cell layout under ivfApplySplit's crash-order
-    * discipline. Retrained cell ids are FRESH (dense rank past the
+    * sidecar + cell layout the ivfApplySplit way. Retrained cell ids are FRESH (dense rank past the
     * old sidecar's max — the applySplit id device), so new dirs can
     * never collide with, or append into, live ones; the remap is
     * order-preserving, so argmin tie-breaks match what a fresh
@@ -2040,10 +1928,7 @@ object Similarity {
     * ingest tail (its rows are keyed by cells the retrain retires)
     * and refuses pending tombstones (a retrain would re-index rows a
     * compaction is about to drop) — stop, compact, retrain, restart.
-    * Crash windows (the applySplit rule verbatim): before the
-    * sidecar overwrite, delete any `cell=` dirs not in the sidecar
-    * and re-run; after it, the retrain is committed — delete the
-    * orphaned old dirs and serve. Returns the retrained cell count.
+    * Returns the retrained cell count.
     *
     * Scale shape: one training pass (IvfTrainRounds broadcast scans)
     * + one assignment scan + a full cell-partitioned rewrite — the
@@ -2052,12 +1937,10 @@ object Similarity {
     */
   def ivfRetrain(s: SparkSession, dir: String): Long = {
     import s.implicits._
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir.ingest")),
+    require(!StoreOps.exists(s, s"$dir.ingest"),
       s"refusing to retrain with a live ingest tail at $dir.ingest — " +
         "run ivfCompact first (stop-compact-retrain-restart)")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir.tombstones")),
+    require(!StoreOps.exists(s, s"$dir.tombstones"),
       s"refusing to retrain with pending tombstones at " +
         s"$dir.tombstones — run ivfCompact first (a retrain must not " +
         "re-index rows a compaction is about to drop)")
@@ -2083,13 +1966,10 @@ object Similarity {
       .localCheckpoint() // materialize before any file mutation
     val oldCells = s.read.parquet(dir).select("cell").distinct()
       .as[Long].collect().sorted.toSeq
-    // crash-safe swap order (see ivfApplySplit): sub dirs, sidecar
-    // (the commit point), then the retired parents
+    // the ivfApplySplit order: new cells, sidecar swap, old cells
     assigned.write.mode("append").partitionBy("cell").parquet(dir)
-    writeCodebookSidecar(s, dir, cent2)
-    oldCells.foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"cell=$c"), true)
-    }
+    swapCodebook(s, dir, cent2)
+    oldCells.foreach(c => StoreOps.delete(s, s"$dir/cell=$c"))
     remap.count()
   }
 
@@ -2135,10 +2015,8 @@ object Similarity {
     // checkpoint when the store already has an ingest tail; a
     // checkpoint-less stream over a tail-free store (one-shot
     // backfills, tests) can only create batch dirs, never clobber.
-    val tail = new org.apache.hadoop.fs.Path(s"$dir.ingest")
-    val tfs = tail.getFileSystem(s.sparkContext.hadoopConfiguration)
     val tailHasBatches =
-      tfs.exists(tail) && tfs.listStatus(tail).exists(_.isDirectory)
+      StoreOps.list(s, s"$dir.ingest").exists(_.isDirectory)
     // a FRESH checkpoint restarts batchIds at 0 exactly like no
     // checkpoint — resuming over a tail requires the stream's OWN
     // checkpoint. Ownership is gated on the checkpoint's offsets/
@@ -2151,11 +2029,8 @@ object Similarity {
     // (ingestBatchWrite), which must be allowed, not refused. A
     // fresh checkpoint has neither dir, so the hazard gate is
     // unchanged.
-    val ckResumes = checkpoint.exists { c =>
-      val cp = new org.apache.hadoop.fs.Path(c, "offsets")
-      val cfs = cp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      cfs.exists(cp) && cfs.listStatus(cp).nonEmpty
-    }
+    val ckResumes =
+      checkpoint.exists(c => StoreOps.list(s, s"$c/offsets").nonEmpty)
     require(!tailHasBatches || ckResumes,
       s"refusing to ingest into $dir: $dir.ingest already holds " +
         "committed batches, and a stream without its own checkpoint " +
@@ -2333,9 +2208,6 @@ object Similarity {
     * construction — same index relation, same search — so the
     * registered query shares sim_knn_ivf's oracle.
     */
-  private val ivfStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Integer coarse assignment (round 9, FAISS L2 semantics) as the
     * CTE `ivfrk(vec_id, cell, rn)`: every vector ranked against the
     * trained integer codebook `c<rounds>` by s = |c|² − 2·x·c with
@@ -2400,12 +2272,8 @@ object Similarity {
     * build per sfDir per JVM — the from_store device).
     */
   private def cachedStoreIndex(s: SparkSession, d: String): DataFrame = {
-    val dir = ivfStores.computeIfAbsent(d, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ivf-index").toString + "/idx"
-      ivfBuild(s, out, Tables.embeddings(s, d))
-      out
-    })
+    val dir = StoreOps.buildOnce("ivf-index", d)(
+      ivfBuild(s, _, Tables.embeddings(s, d)))
     s.read.parquet(dir).select(col("vec_id"), col("v"), col("cell"))
   }
 
@@ -4298,15 +4166,8 @@ object Similarity {
     // by construction (same quantizers, same codes, same integer
     // ADC), so it shares sim_knn_ivfpq's oracle.
     QueryDef("sim_knn_ivfpq_store",
-      (s, d) => {
-        val dir = ivfPqStores.computeIfAbsent(d, _ => {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-ivfpq-index").toString + "/idx"
-          ivfPqBuild(s, out, Tables.embeddings(s, d))
-          out
-        })
-        knnIvfPqFromStore(s, dir, Tables.embeddings(s, d))
-      },
+      (s, d) => knnIvfPqFromStore(s, cachedPqStore(s, d),
+        Tables.embeddings(s, d)),
       Some(s"""WITH $pqSql,
               |$pqIvfSql
               |SELECT query_id, CAST(rk AS BIGINT) rank, nbr_id,
@@ -4326,16 +4187,8 @@ object Similarity {
       Some(pqIvfFilteredOracle)),
 
     QueryDef("sim_knn_ivfpq_store_filtered",
-      (s, d) => {
-        val dir = ivfPqStores.computeIfAbsent(d, _ => {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-ivfpq-index").toString + "/idx"
-          ivfPqBuild(s, out, Tables.embeddings(s, d))
-          out
-        })
-        knnIvfPqFilteredFromStore(s, dir, Tables.embeddings(s, d),
-          Tables.documents(s, d))
-      },
+      (s, d) => knnIvfPqFilteredFromStore(s, cachedPqStore(s, d),
+        Tables.embeddings(s, d), Tables.documents(s, d)),
       Some(pqIvfFilteredOracle)),
 
     // Round 11 (VERDICT #4 pairing): the code tier's when-to-rebuild
@@ -4345,15 +4198,8 @@ object Similarity {
     // ARE pqCodes', the build contract) and quantizes both sides into
     // the exact integer d = |q − cq|².
     QueryDef("sim_pqstore_drift",
-      (s, d) => {
-        val dir = ivfPqStores.computeIfAbsent(d, _ => {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-ivfpq-index").toString + "/idx"
-          ivfPqBuild(s, out, Tables.embeddings(s, d))
-          out
-        })
-        pqStoreDrift(s, dir, Tables.embeddings(s, d))
-      },
+      (s, d) => pqStoreDrift(s, cachedPqStore(s, d),
+        Tables.embeddings(s, d)),
       Some(s"""WITH $pqSql,
               |dq AS (SELECT k.vec_id,
               |    CAST(list_sum(list_transform(
@@ -4597,15 +4443,8 @@ object Similarity {
     // (same candidates through the store contract, same exactRerank
     // kernel), so it SHARES sim_knn_ivfpq_refine's oracle.
     QueryDef("sim_knn_ivfpq_store_refine",
-      (s, d) => {
-        val dir = ivfPqStores.computeIfAbsent(d, _ => {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-ivfpq-index").toString + "/idx"
-          ivfPqBuild(s, out, Tables.embeddings(s, d))
-          out
-        })
-        knnIvfPqRefineFromStore(s, dir, Tables.embeddings(s, d))
-      },
+      (s, d) => knnIvfPqRefineFromStore(s, cachedPqStore(s, d),
+        Tables.embeddings(s, d)),
       Some(s"""WITH $pqSql,
               |$pqIvfSql,
               |cnd AS (SELECT query_id, nbr_id FROM (

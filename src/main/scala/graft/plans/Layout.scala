@@ -76,27 +76,21 @@ object Layout {
     * scan throughput (one task + one open per file) and overwhelm the
     * driver's file index at 100 TB. Rewrites `dir` into
     * ceil(bytes / targetBytes) files via coalesce (no shuffle — file
-    * stitching, not repartitioning) and swaps directories only after
-    * the rewrite succeeds (crash-safe: the original survives any
-    * failure before the final rename).
+    * stitching, not repartitioning), staged and swapped in through
+    * StoreOps (an earlier attempt's crash is recovered first).
     *
     * Returns (filesBefore, filesAfter).
     */
   def compact(spark: SparkSession, dir: String,
               targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(path)
+    StoreOps.recover(spark, Seq(dir))
+    val parts = StoreOps.list(spark, dir)
       .filter(f => f.getPath.getName.endsWith(".parquet"))
     val totalBytes = parts.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".compact-tmp")
-    spark.read.parquet(dir).coalesce(nOut)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val bak = new org.apache.hadoop.fs.Path(dir + ".compact-old")
-    fs.rename(path, bak)
-    fs.rename(tmp, path)
-    fs.delete(bak, true)
+    StoreOps.stage(spark, dir)(
+      spark.read.parquet(dir).coalesce(nOut).write.parquet(_))
+    StoreOps.swap(spark, Seq(dir))
     (parts.length, nOut)
   }
 

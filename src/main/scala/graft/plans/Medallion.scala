@@ -143,13 +143,18 @@ object ModelRegistry {
       .parquet(s"$registryDir/version=$version/metrics")
   }
 
-  /** Promote: atomically repoint the production alias (tmp+rename). */
+  /** Promote: atomically repoint the production alias (tmp+rename);
+    * a failed move throws instead of leaving the old pointer silently.
+    */
   def promote(registryDir: String, version: String): Unit = {
     val dir = new java.io.File(registryDir)
     dir.mkdirs()
     val tmp = new java.io.File(dir, ".production.tmp")
     java.nio.file.Files.writeString(tmp.toPath, version)
-    tmp.renameTo(new java.io.File(dir, "production"))
+    java.nio.file.Files.move(tmp.toPath,
+      new java.io.File(dir, "production").toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   def productionVersion(registryDir: String): Option[String] = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextAnalysis
+import graft.plans.StoreOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -242,44 +243,18 @@ object CorpusIngest {
                     w: Int = TextAnalysis.ChunkW): Unit = {
     corpusWindowFps(corpus, w)
       .write.mode("overwrite").parquet(s"$fpIndexDir/batch=seed")
-    writeWStamp(corpus.sparkSession, fpIndexDir, w)
+    StoreOps.writeStamp(corpus.sparkSession, fpIndexDir, wStamp(w))
   }
 
-  private def stampPath(dir: String) =
-    new org.apache.hadoop.fs.Path(s"$dir/_w_contract")
-
-  private def writeWStamp(s: SparkSession, dir: String, w: Int): Unit = {
-    val p = stampPath(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(w.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Check the index dir's w stamp against the caller's w: refuse on
-    * contradiction (the index is for a DIFFERENT window size — every
-    * semi-join would silently miss), warn-and-stamp on absence (a
-    * pre-stamp dir; adopt the caller's w so the next mismatch is
-    * caught).
+  /** The index dir's w stamp: a contradiction refuses (the index is
+    * for a DIFFERENT window size — every semi-join would silently
+    * miss); absence warns, and the ingest adopts and stamps its w so
+    * the next mismatch is caught.
     */
-  private def checkWStamp(s: SparkSession, dir: String, w: Int): Unit = {
-    val p = stampPath(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val stamped = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim finally in.close()
-      if (stamped != w.toString)
-        throw new IllegalStateException(
-          s"span fp index at $dir is stamped w=$stamped but the ingest " +
-            s"runs w=$w — the fp universes are disjoint across window " +
-            "sizes, so every span would be silently missed; rebuild the " +
-            "index at the new w (seedSpanIndex) or run the stamped w")
-    } else {
-      System.err.println(s"[graft] WARN span fp index at $dir has no w " +
-        s"stamp; adopting w=$w and stamping it")
-      writeWStamp(s, dir, w)
-    }
-  }
+  private def wStamp(w: Int) = StoreOps.Stamp("_w_contract", "w", w.toString,
+    "the fp universes are disjoint across window sizes, so every span " +
+      "would be silently missed; rebuild the index at the new w " +
+      "(seedSpanIndex) or run the stamped w")
 
   /** One span-ingest micro-batch — the production preprocessing shape
     * (Lee et al. §4 cuts at preprocessing time): read the CURRENT fp
@@ -318,14 +293,15 @@ object CorpusIngest {
                       w: Int = TextAnalysis.ChunkW): Unit = {
     if (!batch.isEmpty) {
       val spark = batch.sparkSession
-      checkWStamp(spark, fpIndexDir, w) // wrong-w index = silent no-op
+      if (!StoreOps.checkStamp(spark, fpIndexDir, wStamp(w)))
+        StoreOps.writeStamp(spark, fpIndexDir, wStamp(w))
       // partition-discovery `batch` column = the as-of key (the ONE
       // shared StoreOps.asOfBatch device, also the LSH index's):
       // numeric partitions keep iff id < batchId; the non-numeric
       // seed and compacted partitions try_cast to NULL (ANSI-safe)
       // and coalesce to kept
       val idx = spark.read.parquet(fpIndexDir)
-        .filter(graft.plans.StoreOps.asOfBatch(batchId))
+        .filter(StoreOps.asOfBatch(batchId))
         .select(col("fp"))
       // ONE window-fingerprint pass per batch: detection and the fp
       // publish both read it (the explode+md5 pipeline is the
@@ -429,28 +405,21 @@ object CorpusIngest {
     * correctly.
     */
   def compactSpanIndex(s: SparkSession, fpIndexDir: String): Long = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(fpIndexDir)
-    val fs = root.getFileSystem(conf)
-    val stage = new org.apache.hadoop.fs.Path(s"$fpIndexDir._compact")
+    val stage = s"$fpIndexDir._compact"
     // stale staging never holds the only copy (it is renamed away the
     // instant it becomes load-bearing) — safe to drop
-    if (fs.exists(stage)) fs.delete(stage, true)
-    val old = fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("batch="))
+    StoreOps.delete(s, stage)
+    val old = StoreOps.list(s, fpIndexDir)
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("batch="))
     s.read.parquet(fpIndexDir).select(col("fp")).distinct()
-      .write.parquet(s"$fpIndexDir._compact/batch=compacted")
-    val taken = old.map(_.getName).toSet
+      .write.parquet(s"$stage/batch=compacted")
     val fresh = Iterator.from(0).map(i => s"batch=compacted$i")
-      .find(!taken.contains(_)).get
-    def mv(a: org.apache.hadoop.fs.Path, b: org.apache.hadoop.fs.Path): Unit =
-      require(fs.rename(a, b), s"compactSpanIndex: rename $a -> $b failed")
-    mv(new org.apache.hadoop.fs.Path(s"$fpIndexDir._compact/batch=compacted"),
-      new org.apache.hadoop.fs.Path(s"$fpIndexDir/$fresh"))
-    old.foreach(p => fs.delete(p, true))
-    mv(new org.apache.hadoop.fs.Path(s"$fpIndexDir/$fresh"),
-      new org.apache.hadoop.fs.Path(s"$fpIndexDir/batch=compacted"))
-    fs.delete(stage, true)
+      .find(!old.contains(_)).get
+    StoreOps.move(s, s"$stage/batch=compacted", s"$fpIndexDir/$fresh")
+    old.foreach(p => StoreOps.delete(s, s"$fpIndexDir/$p"))
+    StoreOps.move(s, s"$fpIndexDir/$fresh", s"$fpIndexDir/batch=compacted")
+    StoreOps.delete(s, stage)
     s.read.parquet(fpIndexDir).count()
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Functions._
+import graft.plans.StoreOps
 
 /** The five dashboard metric tables (SURVEY §2.4 A3–A7; reference
   * dags/micro_batch_dashboard.py:95-133) as pure transforms over an
@@ -36,14 +37,16 @@ object Dashboard {
   def liveMarkers(markers: DataFrame, nowMs: Long): DataFrame =
     markers.filter(col("expires_at_ms") > nowMs)
 
-  /** Eviction: rewrite the marker table without expired rows
-    * (localCheckpoint breaks the read-write cycle on the path).
+  /** Eviction: rewrite the marker table without expired rows, staged
+    * beside the table it reads and swapped in (StoreOps).
     */
   def compactMarkers(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, nowMs: Long): Unit =
-    liveMarkers(spark.read.parquet(dir), nowMs)
-      .localCheckpoint()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
+                     dir: String, nowMs: Long): Unit = {
+    StoreOps.recover(spark, Seq(dir))
+    StoreOps.stage(spark, dir)(
+      liveMarkers(spark.read.parquet(dir), nowMs).write.parquet(_))
+    StoreOps.swap(spark, Seq(dir))
+  }
 
   /** Streaming OHLC — the event-time form of the batch
     * `ts_resample_ohlc`: tumbling event-time windows under a

@@ -137,4 +137,16 @@ class MedallionSpec extends SparkSpec {
     assert(!again)
     assert(ModelRegistry.productionVersion(reg) === Some("v1"))
   }
+
+  test("C4: a promote that cannot move the pointer throws and leaves " +
+    "it unchanged") {
+    val reg = java.nio.file.Files.createTempDirectory("regfail").toString
+    val keep = new java.io.File(reg, "production/keep")
+    assert(keep.mkdirs()) // `production` is a non-empty directory
+    val before = scala.util.Try(ModelRegistry.productionVersion(reg)).toString
+    intercept[java.io.IOException](ModelRegistry.promote(reg, "v2"))
+    assert(scala.util.Try(ModelRegistry.productionVersion(reg)).toString
+      === before)
+    assert(keep.exists())
+  }
 }

@@ -196,7 +196,7 @@ class CorpusIngestSpec extends SparkSpec {
     // the earlier epochs' cleaned partitions are untouched
     assert(postCompact - 28L === got)
     // and a wrong-w ingest REFUSES instead of silently missing spans
-    val ex = intercept[IllegalStateException] {
+    val ex = intercept[IllegalArgumentException] {
       CorpusIngest.spanIngestBatch(b3, fpDir, clean, batchId = 3L, w = 5)
     }
     assert(ex.getMessage.contains("stamped w=3"))
