@@ -1,15 +1,18 @@
 package graft.plans
 
-import graft.operators.{Cleaning, Recommend}
+import graft.operators.{Cleaning, Par, Recommend}
 import graft.functions.Functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The daily medallion pipeline as one lazily-planned program per
   * layer (SURVEY §3.1, §2.10; reference dags/daily_pipeline.py) —
-  * Airflow task boundaries become function boundaries, and the ONLY
-  * materialization points are the layer contracts (bronze/silver/gold
-  * parquet), exactly as SURVEY §3.1 prescribes.
+  * Airflow task boundaries become function boundaries. Each layer is
+  * materialized once per day and written once: bronze and silver are
+  * each computed in one pass that also counts them, and the layer
+  * contracts (bronze/silver/gold parquet) are written from those
+  * materializations, never re-derived by reading a layer back.
   *
   * Semantics preserved from the reference:
   *  - C1 idempotent backfill: every write is
@@ -85,26 +88,39 @@ object Medallion {
     write(merged, dir)
   }
 
+  /** Eagerly local-checkpoint `df`, counting its rows in the same pass
+    * (an unnamed Observation, so days run from concurrent driver
+    * threads never share a metric name).
+    */
+  private def materialize(df: DataFrame): (DataFrame, Long) = {
+    val obs = new Observation()
+    val out = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
+    (out, obs.get("n").asInstanceOf[Long])
+  }
+
   /** One day end-to-end, bronze→silver→gold on disk. Idempotent per
-    * partition; total on empty days.
+    * partition; total on empty days. Bronze and silver are each one
+    * job; the four layer writes overlap two at a time (all four at
+    * once raised the daily benchmark's peak RSS by 3–8%).
     */
   def runDay(source: DataFrame, lakeDir: String, ds: String): DayResult = {
-    val bronze = extractDay(source, ds)
-    val nB = bronze.count()
+    val (bronze, nB) = materialize(extractDay(source, ds))
     if (nB == 0) return DayResult(ds, 0, 0) // C5: graceful empty day
-    write(bronze, s"$lakeDir/bronze/orders")
 
+    // cleaned as if read back from the bronze file: every column
+    // nullable, so silver's file schema is the layer contract's
+    // (`Dataset.to` would keep the checkpoint's non-null columns)
+    val nullable = StructType(bronze.schema.map(_.copy(nullable = true)))
     val spark = source.sparkSession
-    val silver = cleanDay(
-      spark.read.parquet(s"$lakeDir/bronze/orders")
-        .filter(col("date") === ds))
-    val nS = silver.count()
-    write(silver, s"$lakeDir/silver/orders")
+    val (silver, nS) =
+      materialize(cleanDay(spark.createDataFrame(bronze.rdd, nullable)))
 
-    val sGold = spark.read.parquet(s"$lakeDir/silver/orders")
-      .filter(col("date") === ds)
-    write(dailySummary(sGold, ds), s"$lakeDir/gold/daily_summary")
-    write(categoryAgg(sGold, ds), s"$lakeDir/gold/category_agg")
+    Par.run2(
+      () => write(bronze, s"$lakeDir/bronze/orders"),
+      () => write(silver, s"$lakeDir/silver/orders"))
+    Par.run2(
+      () => write(dailySummary(silver, ds), s"$lakeDir/gold/daily_summary"),
+      () => write(categoryAgg(silver, ds), s"$lakeDir/gold/category_agg"))
     DayResult(ds, nB, nS)
   }
 }

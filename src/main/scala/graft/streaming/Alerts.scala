@@ -161,14 +161,19 @@ object Alerts {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val m = Dashboard.allMetrics(batch)
-          m.foreach { case (name, df) =>
-            df.write.mode("overwrite").parquet(s"$outDir/$name")
+        // one fetch of the batch serves the emptiness test and all five
+        // metric tables
+        val rows = batch.persist()
+        try {
+          if (!rows.isEmpty) {
+            val m = Dashboard.allMetrics(rows)
+            m.foreach { case (name, df) =>
+              df.write.mode("overwrite").parquet(s"$outDir/$name")
+            }
+            Dashboard.stampMarker(spark, batchId, System.currentTimeMillis())
+              .write.mode("append").parquet(s"$outDir/notifications")
           }
-          Dashboard.stampMarker(spark, batchId, System.currentTimeMillis())
-            .write.mode("append").parquet(s"$outDir/notifications")
-        }
+        } finally rows.unpersist()
       }
       .start()
 }

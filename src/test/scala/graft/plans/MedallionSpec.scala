@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -110,6 +111,94 @@ class MedallionSpec extends SparkSpec {
     val r = Medallion.runDay(source.toDF(), lake, "2030-12-31")
     assert(r.extracted === 0)
     assert(!new java.io.File(s"$lake/bronze").exists())
+  }
+
+  test("C5: a zero-partition source and a limit(0) source are empty days") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val schema = source.toDF().schema
+    val sources = Seq(
+      "zero partitions" ->
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+      "limit(0)" -> source.toDF().limit(0))
+    for ((name, src) <- sources) {
+      val lake = java.nio.file.Files.createTempDirectory("lake").toString
+      // the row count arrives by observation: it must arrive, not hang
+      val r = Await.result(
+        Future(Medallion.runDay(src, lake, "2024-01-01")), 60.seconds)
+      assert(r === Medallion.DayResult("2024-01-01", 0, 0), name)
+      assert(!new java.io.File(s"$lake/bronze").exists(), name)
+    }
+  }
+
+  test("lineage: every silver row carries its bronze row's ingestion " +
+    "timestamp, also after a re-run") {
+    val lake = java.nio.file.Files.createTempDirectory("lake").toString
+    def check(): Unit = {
+      def ts(layer: String) =
+        spark.read.parquet(s"$lake/$layer/orders")
+          .filter(col("date") === "2024-01-01")
+          .select(col("order_id"), col("_ingestion_timestamp"))
+      val s = ts("silver").collect().map(r => r.getString(0) -> r.get(1)).toMap
+      val b = ts("bronze").collect().map(r => r.getString(0) -> r.get(1)).toMap
+      assert(s.keySet === Set("O1", "O2"))
+      s.foreach { case (id, t) => assert(b(id) === t, id) }
+    }
+    Medallion.runDay(source.toDF(), lake, "2024-01-01")
+    check()
+    Medallion.runDay(source.toDF(), lake, "2024-01-01")
+    check()
+  }
+
+  test("layer files keep their parquet schema") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val lake = java.nio.file.Files.createTempDirectory("lake").toString
+    Medallion.runDay(source.toDF(), lake, "2024-01-01")
+    val conf = spark.sessionState.newHadoopConf()
+    def footer(table: String): Seq[String] = {
+      val file = new java.io.File(s"$lake/$table/date=2024-01-01")
+        .listFiles().filter(_.getName.endsWith(".parquet")).head
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toString), conf))
+      val schema = try reader.getFooter.getFileMetaData.getSchema
+      finally reader.close()
+      schema.getFields.asScala.toSeq.map(f =>
+        s"${f.getRepetition} ${f.asPrimitiveType.getPrimitiveTypeName} ${f.getName}")
+    }
+    val leading = Seq("OPTIONAL BINARY order_id", "OPTIONAL INT96 order_date",
+      "OPTIONAL BINARY customer_id", "OPTIONAL BINARY product_name",
+      "OPTIONAL BINARY category")
+    // bronze keeps the source's nullability and a required audit stamp;
+    // silver's input columns are all optional, its own stamp required
+    assert(footer("bronze/orders") === leading ++ Seq(
+      "REQUIRED DOUBLE price", "REQUIRED INT32 quantity",
+      "OPTIONAL BINARY status", "REQUIRED INT96 _ingestion_timestamp"))
+    assert(footer("silver/orders") === leading ++ Seq(
+      "OPTIONAL DOUBLE price", "OPTIONAL INT32 quantity",
+      "OPTIONAL BINARY status", "OPTIONAL INT96 _ingestion_timestamp",
+      "OPTIONAL DOUBLE total", "REQUIRED INT96 _cleaned_timestamp"))
+    assert(footer("gold/daily_summary") === Seq(
+      "REQUIRED INT64 total_orders", "OPTIONAL DOUBLE total_revenue",
+      "REQUIRED INT64 unique_customers", "REQUIRED INT64 unique_products"))
+    assert(footer("gold/category_agg") === Seq(
+      "OPTIONAL BINARY category", "REQUIRED INT64 order_count",
+      "OPTIONAL DOUBLE revenue"))
+  }
+
+  test("runDay runs a non-empty day in 9 Spark jobs") {
+    // one pass each for bronze and silver, the four layer writes and
+    // the gold aggregations' shuffle stages, which AQE runs as jobs of
+    // their own; reading a layer back or counting it apart adds jobs
+    val lake = java.nio.file.Files.createTempDirectory("lake").toString
+    val sc = spark.sparkContext
+    val tag = "medallion-jobs-" + java.util.UUID.randomUUID()
+    sc.addJobTag(tag)
+    try Medallion.runDay(source.toDF(), lake, "2024-01-01")
+    finally sc.removeJobTag(tag)
+    assert(org.apache.spark.TaggedJobs.count(sc, tag) === 9)
   }
 
   test("C4: registry promotes only on the reference's better-model rule") {

@@ -184,6 +184,27 @@ class AlertsSpec extends SparkSpec {
       assert(spark.read.parquet(s"$dir/$tbl").count() > 0, tbl)
   }
 
+  test("ST8: the dashboard refresh computes each micro-batch's rows once") {
+    implicit val sc = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("dash1").toString
+    // a filter is never pruned away, so it runs on every read of the batch
+    val reads = spark.sparkContext.longAccumulator("batch row reads")
+    val seen = udf { (_: String) => reads.add(1); true }
+    val in = MemoryStream[Order]
+    val orders = in.toDF().filter(seen(col("order_id")))
+      .withColumn("category", lit("Electronics"))
+      .withColumn("region", lit("North"))
+      .withColumn("order_date", lit(t("2024-01-01 10:00:00")))
+      .withColumn("status", lit("completed"))
+    val q = Alerts.dashboardRefresh(orders, dir, s"$dir/ckpt", intervalSecs = 1)
+    in.addData(fixture: _*)
+    q.processAllAvailable()
+    q.stop()
+    assert(spark.read.parquet(s"$dir/overall_metrics")
+      .collect().head.getAs[Long]("total_orders") === fixture.size.toLong)
+    assert(reads.sum === fixture.size.toLong)
+  }
+
   test("S13/S14: markers expire by TTL and compact away (Redis expiry analog)") {
     val dir = java.nio.file.Files.createTempDirectory("markers").toString + "/n"
     val t0 = 1000000L
