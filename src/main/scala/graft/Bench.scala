@@ -110,6 +110,29 @@ object Bench {
     det.stop(); sess.stop()
     (stageSecs, secs, batches.toLong * rowsPerBatch)
   }
+  /** Two fixed readings of the box, reported beside the timings and
+    * never folded into them (perfbench's `env.calib_*` rows): a CPU
+    * spin and a lineitem scan, each the median of three, in ms.
+    */
+  def calibrate(spark: SparkSession, sfDir: String): (Double, Double) = {
+    def median(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+    def ms(body: => Unit): Double = {
+      val t = System.nanoTime(); body; (System.nanoTime() - t) / 1e6
+    }
+    var sink = 0L
+    val spin = median((1 to 3).map(_ => ms {
+      var x = 88172645463325252L; var i = 0
+      while (i < 50000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
+      sink += x
+    }))
+    if (sink == 42) println(sink) // keeps the spin from being elided
+    val scan = median((1 to 3).map(_ => ms {
+      Tables.lineitem(spark, sfDir)
+        .agg(sum(col("l_quantity")), count(lit(1))).collect()
+    }))
+    (spin, scan)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Local-iteration conf overrides (semicolon-separated k=v): lets an
@@ -269,7 +292,12 @@ object Bench {
       .map(r => r.name -> r3(runOne(r.name, SparkEntry.queries(r.name)).secs))
     val retimedJson = retimed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"retimed":$retimedJson,"sf":"$sfDir"}""")
+    // the run's box: cores, master and the calibration rows, so drift
+    // reads from the artifact itself
+    val (spin, scan) = calibrate(spark, sfDir)
+    val env = s""""cpus":${Harness.envCores},"master":"${spark.sparkContext.master}",""" +
+      s""""calib_spin_ms":${r3(spin)},"calib_scan_ms":${r3(scan)}"""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"retimed":$retimedJson,"sf":"$sfDir",$env}""")
     // Streaming tier (skipped under a local-iteration filter unless
     // asked for by name). Emitted before the final compact line so
     // both land inside the driver's bounded stdout tail.
@@ -289,7 +317,7 @@ object Bench {
     // queries the full line's head (metric/value) falls outside that
     // window (BENCH_r02 lost the total). A compact totals-only line
     // emitted LAST is always inside the window and always parseable.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failed,"retimed":$retimedJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failed,"retimed":$retimedJson,"sf":"$sfDir",$env}""")
     // The bounded tail also swallows the per-query map, so the FULL
     // result set is persisted to the repo as an artifact — hot-tail
     // attribution next round needs the artifact, not the stdout.
@@ -307,7 +335,7 @@ object Bench {
       val detail = new StringBuilder
       detail ++= s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"""
       streamLine.foreach(l => detail ++= s""""streaming":$l,""")
-      detail ++= s""""failed":$failed,"retimed":$retimedJson,"queries":$qs,"io":$ioJson}"""
+      detail ++= s""""failed":$failed,"retimed":$retimedJson,$env,"queries":$qs,"io":$ioJson}"""
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(detailPath), detail.toString)
     }

@@ -266,11 +266,8 @@ object Events {
     * (n_co desc, nbr asc); the cap keeps FIRST-seen items (min ts,
     * then item id) so reruns and repartitions agree.
     */
-  /** The symmetric (item, nbr, n_co) candidate table both top-k
-    * forms consume.
-    */
-  private def covisSym(events: DataFrame, gapUs: Long,
-                       cap: Int): DataFrame = {
+  def covisitation(events: DataFrame, gapUs: Long = CovisGapUs,
+                   cap: Int = CovisCap, k: Int = CovisTopK): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
     val sess = events
@@ -307,41 +304,18 @@ object Events {
       // list (one row per canonical co-visit pair) so the session
       // self-join — the dominant stage — runs once, not twice
       .localCheckpoint(false)
+    val wTop = Window.partitionBy(col("item"))
+      .orderBy(col("n_co").desc, col("nbr"))
     pairs
       .select(col("i").as("item"), col("j").as("nbr"), col("n_co"))
       .unionByName(pairs
         .select(col("j").as("item"), col("i").as("nbr"), col("n_co")))
-  }
-
-  def covisitation(events: DataFrame, gapUs: Long = CovisGapUs,
-                   cap: Int = CovisCap, k: Int = CovisTopK): DataFrame = {
-    val wTop = Window.partitionBy(col("item"))
-      .orderBy(col("n_co").desc, col("nbr"))
-    covisSym(events, gapUs, cap)
       .withColumn("rnk", row_number().over(wTop).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("item"), col("nbr"), col("n_co"), col("rnk"))
   }
 
-  /** E14 through the native per-key top-k physical operator (the
-    * ml_recommendations_topk adoption pattern): the anchor-grain cut
-    * runs as TopKPerKeyExec's heap partials — O(n log k) map-side,
-    * no per-partition sort — and only the ≤ k·partitions survivors
-    * shuffle; the tiny rank window at the end runs over ≤ k rows per
-    * anchor. Same rows and same oracle as ml_covisitation.
-    */
-  def covisitationTopKNative(events: DataFrame, gapUs: Long = CovisGapUs,
-                             cap: Int = CovisCap,
-                             k: Int = CovisTopK): DataFrame = {
-    val cut = TopK.perKey(covisSym(events, gapUs, cap),
-      Seq("item"), Seq(("n_co", true), ("nbr", false)), k)
-    val wTop = Window.partitionBy(col("item"))
-      .orderBy(col("n_co").desc, col("nbr"))
-    cut.withColumn("rnk", row_number().over(wTop).cast("long"))
-      .select(col("item"), col("nbr"), col("n_co"), col("rnk"))
-  }
-
-  /** Shared oracle for both covisitation forms. */
+  /** ml_covisitation's oracle. */
   private lazy val covisSql =
     s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) ts_us,
        |  CAST(json_extract_string(props, '$$.k') AS BIGINT) AS item
@@ -639,11 +613,6 @@ object Events {
     // covisitation for the cap/top-k scale devices.
     QueryDef("ml_covisitation",
       (s, d) => covisitation(ev(s, d)), Some(covisSql)),
-
-    // E14 through TopKPerKeyExec — same rows, same oracle; the
-    // anchor cut is heap partials instead of a rank-window sort.
-    QueryDef("ml_covisitation_topk",
-      (s, d) => covisitationTopKNative(ev(s, d)), Some(covisSql)),
 
     QueryDef("e9_new_vs_returning",
       (s, d) => newVsReturning(Tables.events(s, d).select(col("user_id"),

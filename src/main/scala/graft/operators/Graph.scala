@@ -100,13 +100,25 @@ object Graph {
     * in the CF self-join, so edge generation survives power users.
     */
   def itemEdges(inter: DataFrame, minCo: Long = TriMinCo): DataFrame =
-    inter.as("a").join(inter.as("b"),
-        col("a.user_id") === col("b.user_id") &&
-          col("a.item_id") < col("b.item_id"))
-      .groupBy(col("a.item_id").as("i"), col("b.item_id").as("j"))
-      .agg(count(lit(1)).as("co"))
+    Recommend.pairCounts(inter, "user_id", "item_id", "i", "j")
       .filter(col("co") >= minCo)
       .select(col("i"), col("j"))
+
+  /** itemEdges over the per-user capped interactions of source `d`. */
+  private def cappedEdges(s: SparkSession, d: String,
+                          minCo: Long = TriMinCo): DataFrame =
+    itemEdges(Recommend.interactionsCapped(s, d).localCheckpoint(false), minCo)
+
+  /** The oracle of cappedEdges: Recommend.cappedSql and its edge list
+    * `e` (canonical i<j pairs shared by ≥ minCo users).
+    */
+  private def edgesSql(minCo: Long): String =
+    s"""${Recommend.cappedSql},
+       |e AS MATERIALIZED (SELECT i, j FROM (
+       |  SELECT a.item_id i, b.item_id j, COUNT(*) co
+       |  FROM capped a JOIN capped b ON a.user_id = b.user_id
+       |    AND a.item_id < b.item_id
+       |  GROUP BY 1, 2) WHERE co >= $minCo)""".stripMargin
 
   /** Per-vertex triangle count + local clustering coefficient over an
     * undirected i<j edge list — the community-structure monitor next
@@ -718,22 +730,8 @@ object Graph {
     // wedge join finds, minus the orientation machinery DuckDB
     // doesn't need at oracle scale.
     QueryDef("graph_triangles",
-      (s, d) => triangleStats(
-        itemEdges(Recommend.interactionsCapped(s, d)
-          .localCheckpoint(false))),
-      Some(s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |capped AS (SELECT user_id, item_id FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-              |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-              |  WHERE rn <= ${Recommend.CapPerUser}),
-              |e AS MATERIALIZED (SELECT i, j FROM (
-              |  SELECT a.item_id i, b.item_id j, COUNT(*) co
-              |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-              |    AND a.item_id < b.item_id
-              |  GROUP BY 1, 2) WHERE co >= $TriMinCo),
+      (s, d) => triangleStats(cappedEdges(s, d)),
+      Some(s"""WITH ${edgesSql(TriMinCo)},
               |dg AS MATERIALIZED (SELECT v, CAST(COUNT(*) AS BIGINT) AS deg
               |  FROM (SELECT i AS v FROM e UNION ALL SELECT j FROM e)
               |  GROUP BY 1),
@@ -753,24 +751,10 @@ object Graph {
     // G5 (beyond-ref): k-core peeling — see kCore for the bounded
     // synchronous-rounds device.
     QueryDef("graph_kcore",
-      (s, d) => kCore(
-        itemEdges(Recommend.interactionsCapped(s, d)
-          .localCheckpoint(false))),
+      (s, d) => kCore(cappedEdges(s, d)),
       Some {
         val ladder = (1 to KCoreRounds).map(kcoreCte).mkString(",\n")
-        s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-           |    MAX(o_orderdate) AS last_ts
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |  GROUP BY 1, 2),
-           |capped AS (SELECT user_id, item_id FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-           |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-           |  WHERE rn <= ${Recommend.CapPerUser}),
-           |e AS MATERIALIZED (SELECT i, j FROM (
-           |  SELECT a.item_id i, b.item_id j, COUNT(*) co
-           |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-           |    AND a.item_id < b.item_id
-           |  GROUP BY 1, 2) WHERE co >= $TriMinCo),
+        s"""WITH ${edgesSql(TriMinCo)},
            |$ladder
            |SELECT v AS item_id, deg AS core_deg FROM (
            |  SELECT v, CAST(COUNT(*) AS BIGINT) deg FROM (
@@ -782,33 +766,15 @@ object Graph {
     // G4 (beyond-ref): LPA communities — see labelPropagation for
     // the self-inclusion and determinism devices.
     QueryDef("graph_communities",
-      // checkpoint the EDGE LIST, not just the capped interactions
-      // (round 14, guide §2.4): labelPropagation references its edge
-      // input through nbrs (2×) and nodes (2 more) — uncached, the
-      // co-occurrence pair self-join executed up to 8× under the adj
-      // materialization (plan: 16 Scan ExistingRDD of the capped
-      // table → 2). graph_modularity already passed a checkpointed
-      // edge list; this aligns the communities twin.
-      (s, d) => labelPropagation(
-        itemEdges(Recommend.interactionsCapped(s, d)
-          .localCheckpoint(false)).localCheckpoint(false)),
+      // checkpoint the EDGE LIST: labelPropagation references its edge
+      // input four times, and uncached the pair self-join re-runs for
+      // each (as in graph_modularity)
+      (s, d) => labelPropagation(cappedEdges(s, d).localCheckpoint(false)),
       Some {
         val ladder = (1 to LpaIters)
           .map(i => lpaCte(s"l$i", if (i == 1) "l0" else s"l${i - 1}"))
           .mkString(",\n")
-        s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-           |    MAX(o_orderdate) AS last_ts
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |  GROUP BY 1, 2),
-           |capped AS (SELECT user_id, item_id FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-           |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-           |  WHERE rn <= ${Recommend.CapPerUser}),
-           |e AS MATERIALIZED (SELECT i, j FROM (
-           |  SELECT a.item_id i, b.item_id j, COUNT(*) co
-           |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-           |    AND a.item_id < b.item_id
-           |  GROUP BY 1, 2) WHERE co >= $TriMinCo),
+        s"""WITH ${edgesSql(TriMinCo)},
            |nodes AS MATERIALIZED (SELECT i AS v FROM e
            |  UNION SELECT j FROM e),
            |adj AS MATERIALIZED (SELECT i AS v, j AS n FROM e
@@ -823,22 +789,8 @@ object Graph {
     // G3 (beyond-ref): common-neighbor link prediction — see
     // linkPredict for the adjacency-cap scale argument.
     QueryDef("graph_link_predict",
-      (s, d) => linkPredict(
-        itemEdges(Recommend.interactionsCapped(s, d)
-          .localCheckpoint(false))),
-      Some(s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |capped AS (SELECT user_id, item_id FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-              |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-              |  WHERE rn <= ${Recommend.CapPerUser}),
-              |e AS MATERIALIZED (SELECT i, j FROM (
-              |  SELECT a.item_id i, b.item_id j, COUNT(*) co
-              |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-              |    AND a.item_id < b.item_id
-              |  GROUP BY 1, 2) WHERE co >= $TriMinCo),
+      (s, d) => linkPredict(cappedEdges(s, d)),
+      Some(s"""WITH ${edgesSql(TriMinCo)},
               |adj0 AS (SELECT i AS v, j AS n FROM e
               |  UNION ALL SELECT j, i FROM e),
               |adj AS MATERIALIZED (SELECT v, n FROM (
@@ -863,24 +815,10 @@ object Graph {
     // G6 (beyond-ref): bounded multi-source BFS from the hub items —
     // see bfsHops for the frontier/anti-join shape.
     QueryDef("graph_bfs_hops",
-      (s, d) => bfsHops(
-        itemEdges(Recommend.interactionsCapped(s, d)
-          .localCheckpoint(false))),
+      (s, d) => bfsHops(cappedEdges(s, d)),
       Some {
         val ladder = (1 to BfsDepth).map(bfsCte).mkString(",\n")
-        s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-           |    MAX(o_orderdate) AS last_ts
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |  GROUP BY 1, 2),
-           |capped AS (SELECT user_id, item_id FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-           |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-           |  WHERE rn <= ${Recommend.CapPerUser}),
-           |e AS MATERIALIZED (SELECT i, j FROM (
-           |  SELECT a.item_id i, b.item_id j, COUNT(*) co
-           |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-           |    AND a.item_id < b.item_id
-           |  GROUP BY 1, 2) WHERE co >= $TriMinCo),
+        s"""WITH ${edgesSql(TriMinCo)},
            |adj AS MATERIALIZED (SELECT i AS v, j AS n FROM e
            |  UNION ALL SELECT j, i FROM e),
            |dg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS deg
@@ -900,27 +838,14 @@ object Graph {
     // detection-quality monitor; see modularityOf.
     QueryDef("graph_modularity",
       (s, d) => {
-        val e = itemEdges(Recommend.interactionsCapped(s, d)
-          .localCheckpoint(false)).localCheckpoint(false)
+        val e = cappedEdges(s, d).localCheckpoint(false)
         modularityOf(e, labelPropagation(e))
       },
       Some {
         val ladder = (1 to LpaIters)
           .map(i => lpaCte(s"l$i", if (i == 1) "l0" else s"l${i - 1}"))
           .mkString(",\n")
-        s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-           |    MAX(o_orderdate) AS last_ts
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |  GROUP BY 1, 2),
-           |capped AS (SELECT user_id, item_id FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-           |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-           |  WHERE rn <= ${Recommend.CapPerUser}),
-           |e AS MATERIALIZED (SELECT i, j FROM (
-           |  SELECT a.item_id i, b.item_id j, COUNT(*) co
-           |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-           |    AND a.item_id < b.item_id
-           |  GROUP BY 1, 2) WHERE co >= $TriMinCo),
+        s"""WITH ${edgesSql(TriMinCo)},
            |nodes AS MATERIALIZED (SELECT i AS v FROM e
            |  UNION SELECT j FROM e),
            |adj AS MATERIALIZED (SELECT i AS v, j AS n FROM e
@@ -954,22 +879,8 @@ object Graph {
     // G10 (beyond-ref): Adamic-Adar link prediction — see adamicAdar
     // for the degree-discount weight device.
     QueryDef("graph_adamic_adar",
-      (s, d) => adamicAdar(
-        itemEdges(Recommend.interactionsCapped(s, d)
-          .localCheckpoint(false))),
-      Some(s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |capped AS (SELECT user_id, item_id FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-              |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-              |  WHERE rn <= ${Recommend.CapPerUser}),
-              |e AS MATERIALIZED (SELECT i, j FROM (
-              |  SELECT a.item_id i, b.item_id j, COUNT(*) co
-              |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-              |    AND a.item_id < b.item_id
-              |  GROUP BY 1, 2) WHERE co >= $TriMinCo),
+      (s, d) => adamicAdar(cappedEdges(s, d)),
+      Some(s"""WITH ${edgesSql(TriMinCo)},
               |adj0 AS (SELECT i AS v, j AS n FROM e
               |  UNION ALL SELECT j, i FROM e),
               |adj AS MATERIALIZED (SELECT v, n FROM (
@@ -994,26 +905,12 @@ object Graph {
     // G8 (beyond-ref): personalized PageRank from the hub seed set —
     // see personalizedPagerank for the sparse-vector teleport device.
     QueryDef("graph_ppr",
-      (s, d) => personalizedPagerank(
-        itemEdges(Recommend.interactionsCapped(s, d)
-          .localCheckpoint(false))),
+      (s, d) => personalizedPagerank(cappedEdges(s, d)),
       Some {
         val ladder = (1 to PprIters)
           .map(i => pprCte(s"r$i", if (i == 1) "r0" else s"r${i - 1}"))
           .mkString(",\n")
-        s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-           |    MAX(o_orderdate) AS last_ts
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |  GROUP BY 1, 2),
-           |capped AS (SELECT user_id, item_id FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-           |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-           |  WHERE rn <= ${Recommend.CapPerUser}),
-           |e AS MATERIALIZED (SELECT i, j FROM (
-           |  SELECT a.item_id i, b.item_id j, COUNT(*) co
-           |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-           |    AND a.item_id < b.item_id
-           |  GROUP BY 1, 2) WHERE co >= $TriMinCo),
+        s"""WITH ${edgesSql(TriMinCo)},
            |adj AS MATERIALIZED (SELECT i AS v, j AS n FROM e
            |  UNION ALL SELECT j, i FROM e),
            |dg AS MATERIALIZED (SELECT v, CAST(COUNT(*) AS BIGINT) AS deg
@@ -1055,22 +952,8 @@ object Graph {
     // (variance 0 → correlation undefined, guard emits nothing); the
     // denser grade keeps the hub structure the statistic measures.
     QueryDef("graph_assortativity",
-      (s, d) => assortativity(
-        itemEdges(Recommend.interactionsCapped(s, d)
-          .localCheckpoint(false), minCo = AssortMinCo)),
-      Some(s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |capped AS (SELECT user_id, item_id FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-              |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-              |  WHERE rn <= ${Recommend.CapPerUser}),
-              |e AS MATERIALIZED (SELECT i, j FROM (
-              |  SELECT a.item_id i, b.item_id j, COUNT(*) co
-              |  FROM capped a JOIN capped b ON a.user_id = b.user_id
-              |    AND a.item_id < b.item_id
-              |  GROUP BY 1, 2) WHERE co >= $AssortMinCo),
+      (s, d) => assortativity(cappedEdges(s, d, AssortMinCo)),
+      Some(s"""WITH ${edgesSql(AssortMinCo)},
               |inc AS MATERIALIZED (SELECT i AS u, j AS w FROM e
               |  UNION ALL SELECT j, i FROM e),
               |dg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.Functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.plans.{ModelRegistry, StoreOps}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,6 +33,11 @@ import org.apache.spark.sql.functions._
   *  - top-N is a rank window partitioned by user — no global sort,
   *    no driver-side argsort loop.
   *
+  * Each CF decision has one definition: the pair co-count
+  * (`pairCounts`), the recency cap (`recencyCap`), the 80/20 split
+  * (`trainSet`/`evalSet`) and the scoring tail (`symmetric`,
+  * `maskPurchased`, `rankTopN`); Graph and the oracles compose them.
+  *
   * Determinism (SURVEY §7 risks 1-2): numpy argsort tie order is
   * replaced by (round(score,6) DESC, item_id ASC); the seeded numpy
   * split is replaced by a stable integer-arithmetic bucket of
@@ -43,27 +49,32 @@ object Recommend {
   val MinCos = 0.1
   val TopN = 10
 
-  /** A8/A12: distinct user–item interactions from the fact tables. */
-  def interactions(s: SparkSession, d: String): DataFrame =
+  /** lineitem⋈orders — every interaction derivation reads this join. */
+  private def purchases(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
+
+  /** Per (user_id, item_id) pair aggregates over the purchases. */
+  private def perPair(s: SparkSession, d: String)(aggs: Column*): DataFrame =
+    purchases(s, d)
+      .groupBy(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
+      .agg(aggs.head, aggs.tail: _*)
+
+  /** A8/A12: distinct user–item interactions from the fact tables. */
+  def interactions(s: SparkSession, d: String): DataFrame =
+    purchases(s, d)
       .select(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
       .distinct()
 
-  /** The raw (user_id, item_id, last_ts) interaction base — ONE
-    * definition of the lineitem⋈orders grouping the capped / split /
-    * eval derivations compose (round-13 ADVICE: five literal copies
-    * had grown and could drift; round 14 extracts the shared helper).
-    * Its group keys ARE the distinct interaction pairs.
+  /** The raw (user_id, item_id, last_ts) interaction base the capped,
+    * split and eval derivations compose. Its group keys ARE the
+    * distinct interaction pairs.
     */
   def interactionBase(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("user_id"),
-        col("l_partkey").as("item_id"))
-      .agg(max(col("o_orderdate")).as("last_ts"))
+    perPair(s, d)(max(col("o_orderdate")).as("last_ts"))
 
   val CapPerUser = 20
+  val CapPerItem = 20
 
   /** Negative-sampling knobs: slots hashed per user must exceed
     * NegPerUser enough to survive positive-item collisions and
@@ -73,26 +84,39 @@ object Recommend {
   val NegSlots = 24
   val NegPerUser = 8
 
-  /** Per-user item cap — the power-user mitigation the A13 self-join
-    * needs at scale: the pair space per user is |P(u)|², so one viral
-    * user with 10⁵ items contributes 10¹⁰ pairs to the shuffle.
-    * Capping to the `cap` most recent items (latest order date, ties
-    * to the lower item_id) bounds every user's contribution to cap²
-    * regardless of corpus size — the standard production CF trick,
-    * and deterministic (timestamps and ids, no sampling).
+  /** The one recency cap: per `key` (user_id or item_id), keep the
+    * `cap` rows with the latest last_ts, ties to the lower id of the
+    * other role, dropping last_ts and keeping every other column (the
+    * weighted form's `w`). Per user it is the power-user mitigation
+    * the A13 self-join needs at scale — the pair space per user is
+    * |P(u)|², so one viral user with 10⁵ items contributes 10¹⁰ pairs
+    * to the shuffle — and per item it bounds a viral item's audience
+    * in the user-user join the same way: every key contributes at
+    * most cap² pairs, deterministically (timestamps and ids, no
+    * sampling).
     */
-  /** The cap itself, over (user_id, item_id, last_ts) rows. */
-  def capInteractions(raw: DataFrame, cap: Int = CapPerUser): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("last_ts").desc, col("item_id"))
+  private def recencyCap(raw: DataFrame, key: String, cap: Int): DataFrame = {
+    val tie = if (key == "user_id") "item_id" else "user_id"
+    val w = Window.partitionBy(col(key)).orderBy(col("last_ts").desc, col(tie))
     raw.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= cap)
-      .select(col("user_id"), col("item_id"))
+      .select(raw.columns.filter(_ != "last_ts").map(col): _*)
   }
+
+  /** The per-user cap over (user_id, item_id, last_ts, ...) rows. */
+  def capInteractions(raw: DataFrame, cap: Int = CapPerUser): DataFrame =
+    recencyCap(raw, "user_id", cap)
 
   def interactionsCapped(s: SparkSession, d: String,
                          cap: Int = CapPerUser): DataFrame =
     capInteractions(interactionBase(s, d), cap)
+
+  /** Interactions capped per ITEM — the transpose of capInteractions,
+    * the scale guard of the user-user self-join.
+    */
+  def interactionsItemCapped(s: SparkSession, d: String,
+                             cap: Int = CapPerItem): DataFrame =
+    recencyCap(interactionBase(s, d), "item_id", cap)
 
   /** U4 analog: deterministic 80/20 split of interactions. */
   def withSplit(inter: DataFrame): DataFrame =
@@ -133,149 +157,97 @@ object Recommend {
     */
   def trainSetCapped(s: SparkSession, d: String,
                      cap: Int = CapPerUser): DataFrame =
-    capInteractions(
-      interactionBase(s, d)
-        .withColumn("bucket", bucket10(col("user_id"), col("item_id")))
-        .filter(col("bucket") < 8).drop("bucket"),
-      cap)
+    capInteractions(trainSet(interactionBase(s, d)), cap)
 
-  /** A13: sparse item–item cosine similarity (i < j).
-    * cos is a single division of exact integer counts → bitwise equal
-    * across engines, no rounding needed.
+  /** The one pair co-count: `node` pairs a < b that share a `key`,
+    * self-joined on the key and counted, as columns (a, b, co). Items
+    * sharing a user give the item-item model and Graph.itemEdges;
+    * users sharing an item give the user-user model.
     */
-  def itemSimilarity(inter: DataFrame,
-                     minCo: Int = MinCo, minCos: Double = MinCos): DataFrame = {
-    val cnt = inter.groupBy(col("item_id")).agg(count(lit(1)).as("n"))
-    val co = inter.as("a")
+  private[operators] def pairCounts(inter: DataFrame, key: String, node: String,
+                                    a: String, b: String): DataFrame =
+    inter.as("a")
       .join(inter.as("b"),
-        col("a.user_id") === col("b.user_id") &&
-          col("a.item_id") < col("b.item_id"))
-      .groupBy(col("a.item_id").as("i"), col("b.item_id").as("j"))
+        col(s"a.$key") === col(s"b.$key") &&
+          col(s"a.$node") < col(s"b.$node"))
+      .groupBy(col(s"a.$node").as(a), col(s"b.$node").as(b))
       .agg(count(lit(1)).as("co"))
-    co.join(broadcast(cnt).as("ca"), col("i") === col("ca.item_id"))
-      .join(broadcast(cnt).as("cb"), col("j") === col("cb.item_id"))
-      .select(col("i"), col("j"), col("co"),
+
+  /** Binary cosine over the co-count: cos = co/√(n_a·n_b), a single
+    * division of exact integer counts → bitwise equal across engines,
+    * no rounding needed.
+    */
+  private def cosine(inter: DataFrame, key: String, node: String,
+                     a: String, b: String,
+                     minCo: Int, minCos: Double): DataFrame = {
+    val cnt = inter.groupBy(col(node)).agg(count(lit(1)).as("n"))
+    pairCounts(inter, key, node, a, b)
+      .join(broadcast(cnt).as("ca"), col(a) === col(s"ca.$node"))
+      .join(broadcast(cnt).as("cb"), col(b) === col(s"cb.$node"))
+      .select(col(a), col(b), col("co"),
         (col("co") / sqrt((col("ca.n") * col("cb.n")).cast("double"))).as("cos"))
       .filter(col("co") >= minCo && col("cos") >= minCos)
   }
 
-  val CapPerItem = 20
+  /** A13: sparse item–item cosine similarity (i < j). */
+  def itemSimilarity(inter: DataFrame,
+                     minCo: Int = MinCo, minCos: Double = MinCos): DataFrame =
+    cosine(inter, "user_id", "item_id", "i", "j", minCo, minCos)
 
-  /** Interactions capped per ITEM — the transpose of capInteractions:
-    * a viral item touched by 10⁶ users contributes 10¹² pairs to a
-    * user-user self-join; capping each item's audience to its `cap`
-    * most recent users bounds every item's contribution to cap².
-    */
-  def interactionsItemCapped(s: SparkSession, d: String,
-                             cap: Int = CapPerItem): DataFrame = {
-    val raw = interactionBase(s, d)
-    val win = Window.partitionBy(col("item_id"))
-      .orderBy(col("last_ts").desc, col("user_id"))
-    raw.withColumn("rn", row_number().over(win))
-      .filter(col("rn") <= cap)
-      .select(col("user_id"), col("item_id"))
-  }
-
-  /** User-user cosine over shared items — the item-item transpose
-    * (user-kNN CF, also the "customers like you" segmentation input).
-    * Identical algebra with the roles swapped; the self-join shuffles
-    * on item_id, so the per-item audience cap above is the scale
-    * guard, exactly as the per-user cap guards the item-item join.
+  /** User-user cosine over shared items (u < v) — the item-item
+    * transpose (user-kNN CF, also the "customers like you"
+    * segmentation input). The self-join shuffles on item_id, so the
+    * per-item audience cap is its scale guard.
     */
   def userSimilarity(inter: DataFrame,
-                     minCo: Int = MinCo, minCos: Double = MinCos): DataFrame = {
-    val cnt = inter.groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-    val co = inter.as("a")
-      .join(inter.as("b"),
-        col("a.item_id") === col("b.item_id") &&
-          col("a.user_id") < col("b.user_id"))
-      .groupBy(col("a.user_id").as("u"), col("b.user_id").as("v"))
-      .agg(count(lit(1)).as("co"))
-    co.join(broadcast(cnt).as("ca"), col("u") === col("ca.user_id"))
-      .join(broadcast(cnt).as("cb"), col("v") === col("cb.user_id"))
-      .select(col("u"), col("v"), col("co"),
-        (col("co") / sqrt((col("ca.n") * col("cb.n")).cast("double"))).as("cos"))
-      .filter(col("co") >= minCo && col("cos") >= minCos)
-  }
+                     minCo: Int = MinCo, minCos: Double = MinCos): DataFrame =
+    cosine(inter, "item_id", "user_id", "u", "v", minCo, minCos)
 
-  /** User-based top-N: score an item by the summed similarity of the
-    * neighbors who bought it (the user-kNN serving path consuming
-    * userSimilarity), own purchases anti-joined out. Same rank/tie
-    * discipline as the item-based recommender.
+  /** Model store behind ml_recommendations_from_store: the first call
+    * per (JVM, source dir) trains itemSimilarity and registers it in a
+    * ModelRegistry (versioned parquet + production pointer) built once
+    * through StoreOps.buildOnce; every later call — and every
+    * downstream stage of the SAME call's plan — reads the registered
+    * parquet instead of re-deriving the self-join. Serving metrics are
+    * sentinels (the C4 promotion gate is exercised by MedallionSpec's
+    * trainEvalRegister path).
     */
-  def recommendUserBased(inter: DataFrame, usim: DataFrame,
-                         topN: Int = TopN): DataFrame = {
-    val usim2 = usim.select(col("u"), col("v"), col("cos"))
-      .unionByName(usim.select(col("v").as("u"), col("u").as("v"), col("cos")))
-    val scored = usim2.as("s")
-      .join(inter.as("p"), col("s.v") === col("p.user_id"))
-      .groupBy(col("s.u").as("user_id"), col("p.item_id").as("item_id"))
-      .agg(sum(col("s.cos")).as("score"))
-    val cand = scored
-      .join(inter, Seq("user_id", "item_id"), "left_anti")
-      .filter(col("score") > 0)
-      .withColumn("score_r", round(col("score"), 6))
-    // heap cut before the rank window (round-13 optimization pass —
-    // the recommendTopKNative pattern): the window then ranks ≤ topN
-    // rows per user instead of sorting every candidate. Same total
-    // order, same rows, same oracle.
-    val cut = TopK.perKey(cand, Seq("user_id"),
-      Seq(("score_r", true), ("item_id", false)), topN)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("score_r").desc, col("item_id"))
-    cut.withColumn("rank", row_number().over(w))
-      .select(col("user_id"), col("rank").cast("long").as("rank"),
-        col("item_id"), col("score_r"))
-  }
-
-  /** A14: top-N recommendations. score sums doubles (order-dependent
-    * ULPs) → ranked and emitted at 6-decimal precision.
-    */
-  /** Model store behind ml_recommendations_from_store: first call per
-    * (JVM, source dir) trains itemSimilarity and registers it under a
-    * ModelRegistry temp dir (versioned parquet + production pointer);
-    * every later call — and every downstream stage of the SAME call's
-    * plan — reads the registered parquet instead of re-deriving the
-    * self-join. Serving metrics are sentinels (the C4 promotion gate
-    * is exercised by MedallionSpec's trainEvalRegister path).
-    */
-  private val simStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def similarityFromStore(s: SparkSession, d: String): DataFrame = {
-    val reg = simStores.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-sim-registry").toString
+    val reg = StoreOps.buildOnce("sim-registry", d) { dir =>
       val sim = itemSimilarity(interactions(s, d).localCheckpoint(false))
-      graft.plans.ModelRegistry.save(s, dir, "v1", sim,
-        graft.plans.ModelRegistry.Metrics(0.0, 0.0))
-      graft.plans.ModelRegistry.promote(dir, "v1")
-      dir
-    })
-    val v = graft.plans.ModelRegistry.productionVersion(reg)
+      ModelRegistry.save(s, dir, "v1", sim, ModelRegistry.Metrics(0.0, 0.0))
+      ModelRegistry.promote(dir, "v1")
+    }
+    val v = ModelRegistry.productionVersion(reg)
       .getOrElse(sys.error("model registry has no production pointer"))
     s.read.parquet(s"$reg/version=$v/item_similarity")
   }
 
-  /** The scored, masked candidate relation recommend() and its
-    * native-top-k twin both rank: symmetric similarity union →
-    * scoring join → per-(user, item) sum → purchased anti-join.
+  // ---- the one scoring tail: both recommenders score through a
+  // symmetric similarity union, mask purchases and take the ranked
+  // cut; only their scoring joins differ ----
+
+  /** The symmetric form (a, b, cos) ∪ (b, a, cos) of a canonical
+    * a < b similarity table.
     */
-  private def scoredCandidates(inter: DataFrame, sim: DataFrame): DataFrame = {
-    val sim2 = sim.select(col("i"), col("j"), col("cos"))
-      .unionByName(sim.select(col("j").as("i"), col("i").as("j"), col("cos")))
-    val scored = inter.as("p")
-      .join(sim2.as("s"), col("p.item_id") === col("s.i"))
-      .groupBy(col("p.user_id").as("user_id"), col("s.j").as("item_id"))
-      .agg(sum(col("s.cos")).as("score"))
+  private def symmetric(sim: DataFrame, a: String, b: String): DataFrame =
+    sim.select(col(a), col(b), col("cos"))
+      .unionByName(sim.select(col(b).as(a), col(a).as(b), col("cos")))
+
+  /** J2 mask: drop purchased (user, item) pairs and non-positive
+    * scores; the summed doubles (order-dependent ULPs) are ranked and
+    * emitted at 6-decimal precision.
+    */
+  private def maskPurchased(scored: DataFrame, inter: DataFrame): DataFrame =
     scored
-      .join(inter, Seq("user_id", "item_id"), "left_anti")   // J2 mask
+      .join(inter, Seq("user_id", "item_id"), "left_anti")
       .filter(col("score") > 0)
       .withColumn("score_r", round(col("score"), 6))
-  }
 
-  def recommend(inter: DataFrame, sim: DataFrame, topN: Int = TopN): DataFrame = {
-    val cand = scoredCandidates(inter, sim)
+  /** The ranked cut: (user_id, rank BIGINT, item_id, score_r), top-N
+    * per user by (score_r desc, item_id).
+    */
+  private def rankTopN(cand: DataFrame, topN: Int): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("score_r").desc, col("item_id"))
     cand.withColumn("rank", row_number().over(w))
@@ -284,26 +256,31 @@ object Recommend {
         col("item_id"), col("score_r"))
   }
 
-  /** A14 through the native per-key top-k operator
-    * (graft.plans.TopKPerKeyPlan): the candidate cut happens in
-    * k-bounded map-side HEAPS — Spark 4's WindowGroupLimit bounds
-    * the same exchange but sorts every candidate partition first;
-    * the heap partial is O(n log k) with no sort buffer or spill,
-    * which is the difference that matters when a power user's
-    * candidate partition is huge. The rank column is then a window
-    * over the ALREADY-CUT relation (≤ topN rows per user), bounded
-    * work at any corpus size. Identical output to recommend() —
-    * same total order, same oracle.
+  /** A14: item-based top-N — score an item by the summed similarity
+    * of the user's purchases to it.
     */
-  def recommendTopKNative(inter: DataFrame, sim: DataFrame,
-                          topN: Int = TopN): DataFrame = {
-    val cut = TopK.perKey(scoredCandidates(inter, sim),
-      Seq("user_id"), Seq(("score_r", true), ("item_id", false)), topN)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("score_r").desc, col("item_id"))
-    cut.withColumn("rank", row_number().over(w))
-      .select(col("user_id"), col("rank").cast("long").as("rank"),
-        col("item_id"), col("score_r"))
+  def recommend(inter: DataFrame, sim: DataFrame, topN: Int = TopN): DataFrame = {
+    val scored = inter.as("p")
+      .join(symmetric(sim, "i", "j").as("s"), col("p.item_id") === col("s.i"))
+      .groupBy(col("p.user_id").as("user_id"), col("s.j").as("item_id"))
+      .agg(sum(col("s.cos")).as("score"))
+    rankTopN(maskPurchased(scored, inter), topN)
+  }
+
+  /** User-based top-N: score an item by the summed similarity of the
+    * neighbors who bought it (the user-kNN serving path consuming
+    * userSimilarity). The candidates are cut per user by the native
+    * heap operator first, so the rank window sorts ≤ topN rows per
+    * user instead of every candidate; same total order, same rows.
+    */
+  def recommendUserBased(inter: DataFrame, usim: DataFrame,
+                         topN: Int = TopN): DataFrame = {
+    val scored = symmetric(usim, "u", "v").as("s")
+      .join(inter.as("p"), col("s.v") === col("p.user_id"))
+      .groupBy(col("s.u").as("user_id"), col("p.item_id").as("item_id"))
+      .agg(sum(col("s.cos")).as("score"))
+    rankTopN(TopK.perKey(maskPurchased(scored, inter), Seq("user_id"),
+      Seq(("score_r", true), ("item_id", false)), topN), topN)
   }
 
   /** Serving-request parameter surface (reference
@@ -329,31 +306,20 @@ object Recommend {
     * cos = Σ wᵢwⱼ / √(Σwᵢ² · Σwⱼ²), all sums over exact int64.
     */
   def interactionsWeighted(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
-      .agg(countDistinct(col("o_orderkey")).as("w"))
+    perPair(s, d)(countDistinct(col("o_orderkey")).as("w"))
 
-  /** Weighted interactions with the per-user recency cap applied — the
-    * configuration that closes the last uncapped pairwise self-join:
-    * per (user, item) the order-count weight and last order date, then
-    * the same top-`cap`-by-recency window as capInteractions, keeping
-    * the weight through the cap.
+  /** Weighted interactions under the per-user recency cap, keeping the
+    * weight through the cap — the configuration that closes the last
+    * uncapped pairwise self-join.
     */
   def interactionsWeightedCapped(s: SparkSession, d: String,
-                                 cap: Int = CapPerUser): DataFrame = {
-    val raw = Tables.lineitem(s, d)
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
-      .agg(countDistinct(col("o_orderkey")).as("w"),
-        max(col("o_orderdate")).as("last_ts"))
-    val win = Window.partitionBy(col("user_id"))
-      .orderBy(col("last_ts").desc, col("item_id"))
-    raw.withColumn("rn", row_number().over(win))
-      .filter(col("rn") <= cap)
-      .select(col("user_id"), col("item_id"), col("w"))
-  }
+                                 cap: Int = CapPerUser): DataFrame =
+    capInteractions(perPair(s, d)(countDistinct(col("o_orderkey")).as("w"),
+      max(col("o_orderdate")).as("last_ts")), cap)
 
+  /** The weighted cosine sums w·w alongside the co-count, so it keeps
+    * its own self-join rather than branching the binary one.
+    */
   def itemSimilarityWeighted(inter: DataFrame,
                              minCo: Int = MinCo,
                              minCos: Double = MinCos): DataFrame = {
@@ -419,16 +385,13 @@ object Recommend {
     * matrix row scan + Redis cache.
     */
   def similarProducts(sim: DataFrame, k: Int = 5): DataFrame = {
-    val sym = sim.select(col("i"), col("j"), col("cos"))
-      .unionByName(sim.select(col("j").as("i"), col("i").as("j"), col("cos")))
     // per-item cut through the native heap operator, then the rank
-    // window over the ALREADY-CUT relation (≤ k rows per item) — the
-    // recommendTopKNative pattern adopted here in round 13's
-    // optimization pass: the old full rank window sorted the entire
-    // 2× symmetric pair table per item partition; the heap partial is
-    // O(n log k) map-side with no sort buffer. Identical output —
-    // same (cos desc, j) total order, same oracle.
-    val cut = TopK.perKey(sym, Seq("i"), Seq(("cos", true), ("j", false)), k)
+    // window over the ALREADY-CUT relation (≤ k rows per item): the
+    // heap partial is O(n log k) map-side with no sort buffer, where a
+    // full rank window sorts the entire 2× symmetric pair table per
+    // item partition. Same (cos desc, j) total order, same oracle.
+    val cut = TopK.perKey(symmetric(sim, "i", "j"), Seq("i"),
+      Seq(("cos", true), ("j", false)), k)
     val w = Window.partitionBy(col("i")).orderBy(col("cos").desc, col("j"))
     cut.withColumn("rank", row_number().over(w))
       .select(col("i").as("item_id"), col("rank").cast("long").as("rank"),
@@ -451,6 +414,14 @@ object Recommend {
         (col("user_coverage") + col("product_coverage")) / 2)
   }
 
+  /** recs `r` ⋈ eval `e` on (user, item), left: a hit is a matched
+    * eval row. The ranking metrics below all score through it.
+    */
+  private def joinEval(recs: DataFrame, evalDf: DataFrame): DataFrame =
+    recs.as("r").join(evalDf.as("e"),
+      col("r.user_id") === col("e.user_id") &&
+        col("r.item_id") === col("e.item_id"), "left")
+
   /** A16: precision@k of train-built recommendations against the eval
     * purchases; per-user precision = hits / #recs(u) (the reference
     * divides by len(top_10), daily_pipeline.py:528). No user sampling:
@@ -458,10 +429,7 @@ object Recommend {
     * reference's np.random.choice is not.
     */
   def precisionAtK(recs: DataFrame, evalDf: DataFrame): DataFrame = {
-    val hits = recs.as("r")
-      .join(evalDf.as("e"),
-        col("r.user_id") === col("e.user_id") &&
-          col("r.item_id") === col("e.item_id"), "left")
+    val hits = joinEval(recs, evalDf)
       .groupBy(col("r.user_id"))
       .agg(count(col("e.user_id")).as("hits"), count(lit(1)).as("n_recs"))
     hits.agg(
@@ -478,16 +446,11 @@ object Recommend {
     * degree). Seeded and block-counted for run-to-run stability;
     * seen items are masked like `recommend` (so users keep ≤ k rows).
     * Float factors are not SQL-expressible, so this is registered
-    * rows-only and behavior-tested in RecommendSpec; the
-    * oracle-checked neighborhood family stays the exact-compare
-    * surface.
+    * rows-only and behavior-tested in RecommendSpec.
     * Plan note: `recommendForAllUsers` plans a CartesianProduct —
-    * that is spark.ml's BLOCKED userFactors × itemFactors scoring,
-    * not an accident: under MF every (u, i) pair has a score, so
-    * all-users top-k is inherently a blocked cross with per-block
-    * top-k aggregation (block size caps the in-flight pair window).
-    * The neighborhood family stays the sparse path; this is the
-    * dense-scoring trade you opt into with factorization.
+    * spark.ml's BLOCKED userFactors × itemFactors scoring: under MF
+    * every (u, i) pair has a score, so all-users top-k is a blocked
+    * cross with per-block top-k aggregation.
     */
   def alsRecommend(inter: DataFrame, k: Int = TopN, rank: Int = 8,
                    maxIter: Int = 5, seed: Long = 42L): DataFrame = {
@@ -548,10 +511,7 @@ object Recommend {
     */
   def ndcgAtK(recs: DataFrame, evalDf: DataFrame): DataFrame = {
     val nEval = evalDf.groupBy(col("user_id")).agg(count(lit(1)).as("n_eval"))
-    val perUser = recs.as("r")
-      .join(evalDf.as("e"),
-        col("r.user_id") === col("e.user_id") &&
-          col("r.item_id") === col("e.item_id"), "left")
+    val perUser = joinEval(recs, evalDf)
       .groupBy(col("r.user_id"))
       .agg(sum(expr(
         s"CASE WHEN e.user_id IS NOT NULL THEN ${gainCase("r.rank")} ELSE 0 END"))
@@ -583,11 +543,7 @@ object Recommend {
     val nEval = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_eval"))
     val w = Window.partitionBy(col("r.user_id")).orderBy(col("r.rank"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val perUser = recs.as("r")
-      .filter(col("r.rank") <= k) // AP@k scores the top k only
-      .join(ev.as("e"),
-        col("r.user_id") === col("e.user_id") &&
-          col("r.item_id") === col("e.item_id"), "left")
+    val perUser = joinEval(recs.filter(col("rank") <= k), ev) // AP@k: top k
       .withColumn("hit", col("e.user_id").isNotNull.cast("long"))
       .withColumn("rnk", col("r.rank"))
       .withColumn("cumhits", sum(col("hit")).over(w))
@@ -620,6 +576,13 @@ object Recommend {
        |  FROM co JOIN cnt ca ON i = ca.item_id JOIN cnt cb ON j = cb.item_id
        |  WHERE co >= $MinCo AND co/SQRT(CAST(ca.n*cb.n AS DOUBLE)) >= $MinCos)""".stripMargin
 
+  /** maskPurchased's oracle: CTE `cand` over a `scored` CTE. */
+  private def candSql(interSrc: String) =
+    s"""cand AS (SELECT sc.user_id, sc.item_id, ROUND(sc.score, 6) score_r
+       |  FROM scored sc WHERE sc.score > 0 AND NOT EXISTS (
+       |    SELECT 1 FROM $interSrc pu
+       |    WHERE pu.user_id = sc.user_id AND pu.item_id = sc.item_id))""".stripMargin
+
   /** Scoring ladder over an existing `sim` CTE — shared by the plain,
     * capped and weighted recommendation pipelines.
     */
@@ -628,10 +591,7 @@ object Recommend {
        |  UNION ALL SELECT j, i, cos FROM sim),
        |scored AS (SELECT p.user_id, s.j AS item_id, SUM(s.cos) score
        |  FROM $interSrc p JOIN sim2 s ON p.item_id = s.i GROUP BY 1, 2),
-       |cand AS (SELECT sc.user_id, sc.item_id, ROUND(sc.score, 6) score_r
-       |  FROM scored sc WHERE sc.score > 0 AND NOT EXISTS (
-       |    SELECT 1 FROM $interSrc pu
-       |    WHERE pu.user_id = sc.user_id AND pu.item_id = sc.item_id)),
+       |${candSql(interSrc)},
        |recs AS (SELECT user_id, CAST(rk AS BIGINT) AS rank, item_id, score_r
        |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
        |    ORDER BY score_r DESC, item_id) rk FROM cand)
@@ -641,7 +601,91 @@ object Recommend {
     s"""${simSql(interSrc)},
        |${scoreSql(interSrc)}""".stripMargin
 
+  /** ml_recommendations' oracle, shared with the from-store path. */
+  private val recsOracle =
+    s"""WITH inter AS ($interSql),
+       |${recsSql("inter")}
+       |SELECT * FROM recs""".stripMargin
+
+  /** The (user_id, item_id, last_ts) base CTE `name` — interactionBase. */
+  private def lastTsSql(name: String) =
+    s"""$name AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
+       |    MAX(o_orderdate) AS last_ts
+       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** recencyCap's oracle: CTE `name` keeps `cols` of the `cap` latest
+    * rows per `key` of `src`.
+    */
+  private def capSql(name: String, src: String, cols: String,
+                     key: String, cap: Int) = {
+    val tie = if (key == "user_id") "item_id" else "user_id"
+    s"""$name AS (SELECT $cols FROM (
+       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY $key
+       |    ORDER BY last_ts DESC, $tie) rn FROM $src)
+       |  WHERE rn <= $cap)""".stripMargin
+  }
+
+  /** interactionsCapped's oracle: `raw` and its per-user cap `capped`. */
+  private[operators] val cappedSql =
+    s"""${lastTsSql("raw")},
+       |${capSql("capped", "raw", "user_id, item_id", "user_id", CapPerUser)}""".stripMargin
+
+  /** The per-item capped `icap` and its user-user co-counts `cnt`/`co`. */
+  private val userCoSql =
+    s"""${lastTsSql("rawi")},
+       |${capSql("icap", "rawi", "user_id, item_id", "item_id", CapPerItem)},
+       |cnt AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
+       |  FROM icap GROUP BY 1),
+       |co AS (SELECT a.user_id u, b.user_id v, CAST(COUNT(*) AS BIGINT) AS co
+       |  FROM icap a JOIN icap b
+       |  ON a.item_id = b.item_id AND a.user_id < b.user_id
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** interactionsWeightedCapped's oracle: `raww` capped into `interw`. */
+  private val weightedCappedSql =
+    s"""raww AS (SELECT o_custkey AS user_id,
+       |    l_partkey AS item_id, COUNT(DISTINCT o_orderkey) AS w,
+       |    MAX(o_orderdate) AS last_ts
+       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+       |  GROUP BY 1, 2),
+       |${capSql("interw", "raww", "user_id, item_id, w", "user_id", CapPerUser)}""".stripMargin
+
+  /** Weighted norms and co-counts over an `interw` CTE. */
+  private val weightedCoSql =
+    """norms AS (SELECT item_id, SUM(w*w) AS n2 FROM interw GROUP BY 1),
+      |cow AS (SELECT a.item_id i, b.item_id j,
+      |    SUM(a.w*b.w) AS dot, COUNT(*) AS co
+      |  FROM interw a JOIN interw b
+      |  ON a.user_id = b.user_id AND a.item_id < b.item_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** itemSimilarityWeighted's oracle over an `interw` CTE. */
+  private val weightedSimSql =
+    s"""$weightedCoSql
+       |SELECT i, j, CAST(co AS BIGINT) AS co,
+       |ROUND(CAST(dot AS DOUBLE)/SQRT(CAST(na.n2*nb.n2 AS DOUBLE)), 6) AS cos
+       |FROM cow JOIN norms na ON i = na.item_id
+       |JOIN norms nb ON j = nb.item_id
+       |WHERE co >= $MinCo
+       |AND ROUND(CAST(dot AS DOUBLE)/SQRT(CAST(na.n2*nb.n2 AS DOUBLE)), 6) >= $MinCos""".stripMargin
+
   private val splitCond = "((user_id % 100003) * 31 + item_id * 97) % 10"
+
+  /** The 80/20 split `tr`/`ev` of an `inter` CTE. */
+  private val splitSql =
+    s"""tr AS (SELECT user_id, item_id FROM inter WHERE $splitCond < 8),
+       |ev AS (SELECT user_id, item_id FROM inter WHERE $splitCond >= 8)""".stripMargin
+
+  /** precisionAtK's oracle over `recs` and an `ev` CTE. */
+  private val precisionSql =
+    """per_user AS (SELECT r.user_id,
+      |    COUNT(e.user_id) AS hits, COUNT(*) AS n_recs
+      |  FROM recs r LEFT JOIN ev e
+      |    ON r.user_id = e.user_id AND r.item_id = e.item_id
+      |  GROUP BY r.user_id)
+      |SELECT ROUND(AVG(CAST(hits AS DOUBLE)/n_recs), 6) AS avg_precision,
+      |COUNT(*) AS n_users FROM per_user""".stripMargin
 
   /** Capped-train bounded-eval prelude shared by the ndcg/map
     * oracles: `base` (user, item, last_ts) pairs, the capped 80%
@@ -652,10 +696,7 @@ object Recommend {
     * to the sample.
     */
   private lazy val cappedEvalSql =
-    s"""base AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-       |    MAX(o_orderdate) AS last_ts
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-       |  GROUP BY 1, 2),
+    s"""${lastTsSql("base")},
        |tr AS (SELECT user_id, item_id FROM (
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
        |    ORDER BY last_ts DESC, item_id) rn
@@ -672,37 +713,33 @@ object Recommend {
        |evs AS (SELECT * FROM ev
        |  WHERE user_id IN (SELECT user_id FROM users))""".stripMargin
 
-  /** Shared Spark derivation for the bounded ranking-eval family
-    * (ml_ndcg_at_10, ml_map_at_10): the capped-train similarity (the
-    * registered serving path), recommendations scored for the
-    * bounded user sample ONLY — the scoring join's probe side is
-    * |sample| users, so eval cost is sample-bounded at any corpus
-    * size — and the eval purchases of the same sample. The uncapped
-    * all-users twin stays ml_precision_at_10 (whitelisted
-    * ground-truth monitor in tools/ratio_gate.py).
+  /** The bounded user sample of a capped train split and its
+    * recommendations from the capped-train similarity (the registered
+    * serving path), scored for the sample ONLY — the scoring join's
+    * probe side is |sample| users, so eval cost is sample-bounded at
+    * any corpus size.
+    */
+  private def sampleRecs(train: DataFrame): (DataFrame, DataFrame) = {
+    val users = evalUserSample(train).localCheckpoint(false)
+    (users, recommend(
+      train.join(broadcast(users), Seq("user_id"), "left_semi"),
+      itemSimilarity(train).localCheckpoint(false)))
+  }
+
+  /** The bounded ranking-eval family's inputs (ml_ndcg_at_10,
+    * ml_map_at_10): sampleRecs and the eval purchases of the same
+    * sample, both splits from ONE (user, item, last_ts) base, as in
+    * cappedEvalSql. The uncapped all-users twin stays
+    * ml_precision_at_10 (whitelisted ground-truth monitor in
+    * tools/ratio_gate.py).
     */
   private def boundedEval(s: SparkSession, d: String)
   : (DataFrame, DataFrame) = {
-    // ONE (user, item, last_ts) base feeds both splits — the oracle's
-    // cappedEvalSql has always derived `tr` AND `ev` from one `base`
-    // CTE; the Spark side previously re-derived the eval split from a
-    // separate interactions() pass (a second lineitem⋈orders join +
-    // distinct per query — round-13 optimization pass, guide §1.2
-    // step 1). base's group keys ARE the distinct (user, item) pairs,
-    // so the eval rows are identical by construction.
     val base = interactionBase(s, d)
       .localCheckpoint(false) // train cap + eval split
-    val train = capInteractions(
-      base.withColumn("bucket", bucket10(col("user_id"), col("item_id")))
-        .filter(col("bucket") < 8).drop("bucket"))
-      .localCheckpoint(false)
-    val users = evalUserSample(train).localCheckpoint(false)
-    val recs = recommend(
-      train.join(broadcast(users), Seq("user_id"), "left_semi"),
-      itemSimilarity(train).localCheckpoint(false))
-    val evs = base.select(col("user_id"), col("item_id"))
-      .withColumn("bucket", bucket10(col("user_id"), col("item_id")))
-      .filter(col("bucket") >= 8).drop("bucket")
+    val (users, recs) =
+      sampleRecs(capInteractions(trainSet(base)).localCheckpoint(false))
+    val evs = evalSet(base.select(col("user_id"), col("item_id")))
       .join(broadcast(users), Seq("user_id"), "left_semi")
     (recs, evs)
   }
@@ -763,14 +800,7 @@ object Recommend {
 
     QueryDef("ml_item_similarity_capped",
       (s, d) => itemSimilarity(interactionsCapped(s, d).localCheckpoint(false)),
-      Some(s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |capped AS (SELECT user_id, item_id FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-              |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-              |  WHERE rn <= $CapPerUser),
+      Some(s"""WITH $cappedSql,
               |${simSql("capped")}
               |SELECT i, j, co, cos FROM sim""".stripMargin)),
 
@@ -782,43 +812,20 @@ object Recommend {
         val inter = interactions(s, d).localCheckpoint(false)
         recommend(inter, itemSimilarity(inter).localCheckpoint(false))
       },
-      Some(s"""WITH inter AS ($interSql),
-              |${recsSql("inter")}
-              |SELECT * FROM recs""".stripMargin)),
-
-    // A14 again through the native per-key top-k physical operator —
-    // same result set and the same oracle as ml_recommendations; the
-    // candidate shuffle is k-bounded (see recommendTopKNative).
-    QueryDef("ml_recommendations_topk",
-      (s, d) => {
-        val inter = interactions(s, d).localCheckpoint(false)
-        recommendTopKNative(inter, itemSimilarity(inter).localCheckpoint(false))
-      },
-      Some(s"""WITH inter AS ($interSql),
-              |${recsSql("inter")}
-              |SELECT * FROM recs""".stripMargin)),
+      Some(recsOracle)),
 
     // The PRODUCTION read path: the reference trains the CF model
     // once per day and serves every request from the stored artifact
     // (daily_pipeline.py:419-427 persists item_similarity; the
-    // serving API only reads) — re-deriving the similarity self-join
-    // per request is the anti-pattern this entry retires. The model
-    // is materialized ONCE per (JVM, source dir) through the
-    // ModelRegistry's versioned layout + production pointer, and the
-    // query serves from the registry parquet: at scale the scoring
-    // join reads a few GB of model table instead of re-shuffling the
-    // full interaction history. Results are identical to
-    // ml_recommendations (cos is a round(,6) double — parquet
-    // round-trips it bit-exactly), so that oracle re-checks this
-    // path end to end. The registration gate itself (C4 metrics
-    // compare) is MedallionSpec's subject, not this query's: the
-    // serving store registers with sentinel metrics.
+    // serving API only reads). The model is registered once per
+    // (JVM, source dir) — see similarityFromStore — and the query
+    // scores from the registry parquet. Results are identical to
+    // ml_recommendations (parquet round-trips the cos doubles
+    // bit-exactly), so that oracle re-checks this path end to end.
     QueryDef("ml_recommendations_from_store",
       (s, d) => recommend(interactions(s, d).localCheckpoint(false),
         similarityFromStore(s, d)),
-      Some(s"""WITH inter AS ($interSql),
-              |${recsSql("inter")}
-              |SELECT * FROM recs""".stripMargin)),
+      Some(recsOracle)),
 
     QueryDef("ml_item_similarity_weighted",
       (s, d) => itemSimilarityWeighted(
@@ -827,43 +834,13 @@ object Recommend {
               |    l_partkey AS item_id, COUNT(DISTINCT o_orderkey) AS w
               |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
               |  GROUP BY 1, 2),
-              |norms AS (SELECT item_id, SUM(w*w) AS n2 FROM interw GROUP BY 1),
-              |cow AS (SELECT a.item_id i, b.item_id j,
-              |    SUM(a.w*b.w) AS dot, COUNT(*) AS co
-              |  FROM interw a JOIN interw b
-              |  ON a.user_id = b.user_id AND a.item_id < b.item_id
-              |  GROUP BY 1, 2)
-              |SELECT i, j, CAST(co AS BIGINT) AS co,
-              |ROUND(CAST(dot AS DOUBLE)/SQRT(CAST(na.n2*nb.n2 AS DOUBLE)), 6) AS cos
-              |FROM cow JOIN norms na ON i = na.item_id
-              |JOIN norms nb ON j = nb.item_id
-              |WHERE co >= $MinCo
-              |AND ROUND(CAST(dot AS DOUBLE)/SQRT(CAST(na.n2*nb.n2 AS DOUBLE)), 6) >= $MinCos""".stripMargin)),
+              |$weightedSimSql""".stripMargin)),
 
     QueryDef("ml_item_similarity_weighted_capped",
       (s, d) => itemSimilarityWeighted(
         interactionsWeightedCapped(s, d).localCheckpoint(false)),
-      Some(s"""WITH raww AS (SELECT o_custkey AS user_id,
-              |    l_partkey AS item_id, COUNT(DISTINCT o_orderkey) AS w,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |interw AS (SELECT user_id, item_id, w FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-              |    ORDER BY last_ts DESC, item_id) rn FROM raww)
-              |  WHERE rn <= $CapPerUser),
-              |norms AS (SELECT item_id, SUM(w*w) AS n2 FROM interw GROUP BY 1),
-              |cow AS (SELECT a.item_id i, b.item_id j,
-              |    SUM(a.w*b.w) AS dot, COUNT(*) AS co
-              |  FROM interw a JOIN interw b
-              |  ON a.user_id = b.user_id AND a.item_id < b.item_id
-              |  GROUP BY 1, 2)
-              |SELECT i, j, CAST(co AS BIGINT) AS co,
-              |ROUND(CAST(dot AS DOUBLE)/SQRT(CAST(na.n2*nb.n2 AS DOUBLE)), 6) AS cos
-              |FROM cow JOIN norms na ON i = na.item_id
-              |JOIN norms nb ON j = nb.item_id
-              |WHERE co >= $MinCo
-              |AND ROUND(CAST(dot AS DOUBLE)/SQRT(CAST(na.n2*nb.n2 AS DOUBLE)), 6) >= $MinCos""".stripMargin)),
+      Some(s"""WITH $weightedCappedSql,
+              |$weightedSimSql""".stripMargin)),
 
     // The full serving pipeline on the capped interaction set — the
     // configuration that actually runs at corpus scale (cap bounds
@@ -874,14 +851,7 @@ object Recommend {
         val inter = interactionsCapped(s, d).localCheckpoint(false)
         recommend(inter, itemSimilarity(inter).localCheckpoint(false))
       },
-      Some(s"""WITH raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |capped AS (SELECT user_id, item_id FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-              |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-              |  WHERE rn <= $CapPerUser),
+      Some(s"""WITH $cappedSql,
               |${recsSql("capped")}
               |SELECT * FROM recs""".stripMargin)),
 
@@ -894,21 +864,8 @@ object Recommend {
         recommend(interw.select(col("user_id"), col("item_id")),
           itemSimilarityWeighted(interw).localCheckpoint(false))
       },
-      Some(s"""WITH raww AS (SELECT o_custkey AS user_id,
-              |    l_partkey AS item_id, COUNT(DISTINCT o_orderkey) AS w,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |interw AS (SELECT user_id, item_id, w FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-              |    ORDER BY last_ts DESC, item_id) rn FROM raww)
-              |  WHERE rn <= $CapPerUser),
-              |norms AS (SELECT item_id, SUM(w*w) AS n2 FROM interw GROUP BY 1),
-              |cow AS (SELECT a.item_id i, b.item_id j,
-              |    SUM(a.w*b.w) AS dot, COUNT(*) AS co
-              |  FROM interw a JOIN interw b
-              |  ON a.user_id = b.user_id AND a.item_id < b.item_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $weightedCappedSql,
+              |$weightedCoSql,
               |sim AS (SELECT i, j, CAST(co AS BIGINT) AS co,
               |    ROUND(CAST(dot AS DOUBLE)/SQRT(CAST(na.n2*nb.n2 AS DOUBLE)), 6) AS cos
               |  FROM cow JOIN norms na ON i = na.item_id
@@ -921,20 +878,7 @@ object Recommend {
     QueryDef("ml_user_similarity_capped",
       (s, d) => userSimilarity(
         interactionsItemCapped(s, d).localCheckpoint(false)),
-      Some(s"""WITH rawi AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |icap AS (SELECT user_id, item_id FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY item_id
-              |    ORDER BY last_ts DESC, user_id) rn FROM rawi)
-              |  WHERE rn <= $CapPerItem),
-              |cnt AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
-              |  FROM icap GROUP BY 1),
-              |co AS (SELECT a.user_id u, b.user_id v, CAST(COUNT(*) AS BIGINT) AS co
-              |  FROM icap a JOIN icap b
-              |  ON a.item_id = b.item_id AND a.user_id < b.user_id
-              |  GROUP BY 1, 2)
+      Some(s"""WITH $userCoSql
               |SELECT u, v, co,
               |co/SQRT(CAST(ca.n*cb.n AS DOUBLE)) AS cos
               |FROM co JOIN cnt ca ON u = ca.user_id
@@ -947,20 +891,7 @@ object Recommend {
         val inter = interactionsItemCapped(s, d).localCheckpoint(false)
         recommendUserBased(inter, userSimilarity(inter).localCheckpoint(false))
       },
-      Some(s"""WITH rawi AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |icap AS (SELECT user_id, item_id FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY item_id
-              |    ORDER BY last_ts DESC, user_id) rn FROM rawi)
-              |  WHERE rn <= $CapPerItem),
-              |cnt AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
-              |  FROM icap GROUP BY 1),
-              |co AS (SELECT a.user_id u, b.user_id v, CAST(COUNT(*) AS BIGINT) AS co
-              |  FROM icap a JOIN icap b
-              |  ON a.item_id = b.item_id AND a.user_id < b.user_id
-              |  GROUP BY 1, 2),
+      Some(s"""WITH $userCoSql,
               |usim AS (SELECT u, v, co,
               |    co/SQRT(CAST(ca.n*cb.n AS DOUBLE)) AS cos
               |  FROM co JOIN cnt ca ON u = ca.user_id
@@ -971,10 +902,7 @@ object Recommend {
               |  UNION ALL SELECT v, u, cos FROM usim),
               |scored AS (SELECT s.u AS user_id, p.item_id, SUM(s.cos) AS score
               |  FROM usim2 s JOIN icap p ON s.v = p.user_id GROUP BY 1, 2),
-              |cand AS (SELECT sc.user_id, sc.item_id, ROUND(sc.score, 6) score_r
-              |  FROM scored sc WHERE sc.score > 0 AND NOT EXISTS (
-              |    SELECT 1 FROM icap pu
-              |    WHERE pu.user_id = sc.user_id AND pu.item_id = sc.item_id))
+              |${candSql("icap")}
               |SELECT user_id, CAST(rk AS BIGINT) AS rank, item_id, score_r
               |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
               |  ORDER BY score_r DESC, item_id) rk FROM cand)
@@ -1013,31 +941,22 @@ object Recommend {
               |WHERE rk <= 5""".stripMargin)),
 
     // (itemSimilarityDimsum is intentionally NOT registered: at these
-    // SFs the exact self-join is the cheaper path — DIMSUM's crossover
-    // is very large item counts — and its sampling is engine-specific,
-    // so the driver could only rows-check it while its mllib RDD job
-    // dominated the bench. RecommendSpec proves it reproduces the
-    // exact cosines at threshold 0.)
+    // SFs the exact self-join is the cheaper path and DIMSUM's
+    // sampling is engine-specific. RecommendSpec proves it reproduces
+    // the exact cosines at threshold 0.)
 
     // A17: matrix stats — sparsity from exact counts over the FULL
     // interaction matrix; pair count and mean cosine over the CAPPED
     // similarity, i.e. the REGISTERED serving model
-    // (ml_recommendations_capped's input) — stats of the model you
-    // actually serve, and the derivation stays linear at any corpus
-    // size (round-6 verdict #2: the uncapped self-join made this the
-    // heaviest non-whitelisted sf1 tail; the uncapped ground truth
-    // remains visible through ml_item_similarity, whitelisted).
-    // mean_cos: round-6 emission; the sum is ~10⁴ doubles so
-    // cross-engine ULP drift sits ~6 orders below the rounding
-    // boundary.
+    // (ml_recommendations_capped's input), so the derivation stays
+    // linear at any corpus size; the uncapped ground truth remains
+    // visible through ml_item_similarity. mean_cos: 6-decimal
+    // emission; the sum is ~10⁴ doubles, so cross-engine ULP drift
+    // sits ~6 orders below the rounding boundary.
     QueryDef("ml_matrix_stats",
       (s, d) => {
         // ONE (user, item, last_ts) base feeds the matrix stats AND
-        // the capped model (round-13 optimization pass): its group
-        // keys ARE the distinct interaction pairs, so the stats
-        // aggregate reads the same relation the cap windows — the
-        // separate interactions() pass re-joined lineitem⋈orders and
-        // re-deduplicated for three counts the base already carries.
+        // the capped model: its group keys ARE the distinct pairs
         val base = interactionBase(s, d)
           .localCheckpoint(false) // stats aggregate + the cap window
         val sim = itemSimilarity(
@@ -1053,14 +972,7 @@ object Recommend {
               (col("n_users") * col("n_items")), 6))
       },
       Some(s"""WITH inter AS ($interSql),
-              |raw AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-              |    MAX(o_orderdate) AS last_ts
-              |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              |  GROUP BY 1, 2),
-              |capped AS (SELECT user_id, item_id FROM (
-              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-              |    ORDER BY last_ts DESC, item_id) rn FROM raw)
-              |  WHERE rn <= $CapPerUser),
+              |$cappedSql,
               |${simSql("capped")},
               |u AS (SELECT COUNT(DISTINCT user_id) n_users,
               |  COUNT(DISTINCT item_id) n_items, COUNT(*) n_interactions
@@ -1079,23 +991,13 @@ object Recommend {
         precisionAtK(recs, evalSet(inter))
       },
       Some(s"""WITH inter AS ($interSql),
-              |tr AS (SELECT user_id, item_id FROM inter WHERE $splitCond < 8),
-              |ev AS (SELECT user_id, item_id FROM inter WHERE $splitCond >= 8),
+              |$splitSql,
               |${recsSql("tr")},
-              |per_user AS (SELECT r.user_id,
-              |    COUNT(e.user_id) AS hits, COUNT(*) AS n_recs
-              |  FROM recs r LEFT JOIN ev e
-              |    ON r.user_id = e.user_id AND r.item_id = e.item_id
-              |  GROUP BY r.user_id)
-              |SELECT ROUND(AVG(CAST(hits AS DOUBLE)/n_recs), 6) AS avg_precision,
-              |COUNT(*) AS n_users FROM per_user""".stripMargin)),
+              |$precisionSql""".stripMargin)),
 
-    // NDCG over the bounded eval harness (round-6 verdict #2): the
-    // capped-train similarity — the registered serving path — scored
-    // for the md5-bounded user sample only, the reference's own
-    // ≤100-sampled-users evaluation device (dags/daily_pipeline.py:495)
-    // made deterministic. ml_precision_at_10 keeps the uncapped
-    // all-users twin as the whitelisted ground-truth monitor.
+    // NDCG over the bounded eval harness (see boundedEval): the
+    // reference's own ≤100-sampled-users evaluation device
+    // (dags/daily_pipeline.py:495) made deterministic.
     QueryDef("ml_ndcg_at_10",
       (s, d) => { val (recs, evs) = boundedEval(s, d); ndcgAtK(recs, evs) },
       Some(s"""WITH $cappedEvalSql,
@@ -1112,9 +1014,7 @@ object Recommend {
               |SELECT ROUND(FLOOR(CAST(SUM(q) AS DOUBLE) / COUNT(*)) / 1000000.0, 6) AS avg_ndcg,
               |COUNT(*) AS n_users FROM nq""".stripMargin)),
 
-    // MAP over the same bounded eval harness as ml_ndcg_at_10 —
-    // capped-train similarity, md5-bounded user sample (see the
-    // boundedEval docstring for the round-6 verdict #2 rationale).
+    // MAP over the same bounded eval harness as ml_ndcg_at_10.
     QueryDef("ml_map_at_10",
       (s, d) => { val (recs, evs) = boundedEval(s, d); mapAtK(recs, evs) },
       Some(s"""WITH $cappedEvalSql,
@@ -1151,9 +1051,7 @@ object Recommend {
     // × slots rows, LINEAR in users, never the users × catalog
     // cross product — then anti-filtering the user's positives and
     // keeping the first k surviving slots. Every step is md5-
-    // derived (hex60), so the sample is reproducible on any engine,
-    // any partitioning, any day — which is what makes train sets
-    // auditable.
+    // derived (hex60), so the sample is reproducible on any engine.
     QueryDef("ml_negative_samples",
       (s, d) => negativeSamples(interactions(s, d)),
       Some(s"""WITH inter AS (SELECT DISTINCT o_custkey AS user_id,
@@ -1203,27 +1101,18 @@ object Recommend {
         precisionAtK(popularityRecs(train), evalSet(inter))
       },
       Some(s"""WITH inter AS ($interSql),
-              |tr AS (SELECT user_id, item_id FROM inter WHERE $splitCond < 8),
-              |ev AS (SELECT user_id, item_id FROM inter WHERE $splitCond >= 8),
+              |$splitSql,
               |top10 AS (SELECT item_id, CAST(COUNT(*) AS BIGINT) AS pop
               |  FROM tr GROUP BY 1 ORDER BY pop DESC, item_id LIMIT $TopN),
               |recs AS (SELECT u.user_id, t.item_id
               |  FROM (SELECT DISTINCT user_id FROM tr) u CROSS JOIN top10 t
               |  WHERE NOT EXISTS (SELECT 1 FROM tr
               |    WHERE tr.user_id = u.user_id AND tr.item_id = t.item_id)),
-              |per_user AS (SELECT r.user_id,
-              |    COUNT(e.user_id) AS hits, COUNT(*) AS n_recs
-              |  FROM recs r LEFT JOIN ev e
-              |    ON r.user_id = e.user_id AND r.item_id = e.item_id
-              |  GROUP BY r.user_id)
-              |SELECT ROUND(AVG(CAST(hits AS DOUBLE)/n_recs), 6) AS avg_precision,
-              |COUNT(*) AS n_users FROM per_user""".stripMargin)),
+              |$precisionSql""".stripMargin)),
 
     // Group-wise (user-level) split: every user's rows land in ONE
     // fold — the leakage-safe split for generalization-to-new-users
-    // evaluation, where U4's row split (a user straddling train and
-    // eval) is by design. Deterministic md5 fold assignment; fold
-    // grain out.
+    // evaluation. Deterministic md5 fold assignment; fold grain out.
     QueryDef("u9_group_split",
       (s, d) => {
         val g = interactions(s, d).withColumn("fold",
@@ -1249,9 +1138,7 @@ object Recommend {
     // collapsing into the popularity list (popular recs score near
     // zero). Quantized-ln device (txt_unigram_logprob): each term is
     // floor(−10⁶·ln(ratio-of-exact-ints)), summed as exact BIGINTs in
-    // any order; ln matches across engines per the LM-family
-    // precedent. Read next to ml_precision_popularity: precision says
-    // accurate, novelty says not-just-obvious.
+    // any order.
     QueryDef("ml_novelty_at_10",
       (s, d) => {
         // same bounded harness as ndcg/map (round-6 verdict #2):
@@ -1259,10 +1146,7 @@ object Recommend {
         // popularity/self-information stay corpus-wide facts of the
         // capped train split
         val train = trainSetCapped(s, d).localCheckpoint(false)
-        val users = evalUserSample(train).localCheckpoint(false)
-        val recs = recommend(
-          train.join(broadcast(users), Seq("user_id"), "left_semi"),
-          itemSimilarity(train).localCheckpoint(false))
+        val (_, recs) = sampleRecs(train)
         val nu = train.select(col("user_id")).distinct()
           .agg(count(lit(1)).as("nu")) // 1 row
         val pop = train.groupBy(col("item_id")).agg(count(lit(1)).as("pop"))
@@ -1309,8 +1193,7 @@ object Recommend {
             expr("(n_cold_pairs * 1000000) div n_eval"))
       },
       Some(s"""WITH inter AS ($interSql),
-              |tr AS (SELECT user_id, item_id FROM inter WHERE $splitCond < 8),
-              |ev AS (SELECT user_id, item_id FROM inter WHERE $splitCond >= 8),
+              |$splitSql,
               |seen AS (SELECT DISTINCT item_id FROM tr)
               |SELECT CAST(COUNT(*) AS BIGINT) AS n_eval,
               |CAST(SUM(CASE WHEN seen.item_id IS NULL THEN 1 ELSE 0 END)
@@ -1343,11 +1226,9 @@ object Recommend {
     * collisions — e.g. a user owning most of a small catalog), so the
     * output carries `n_sampled`, the user's delivered count:
     * training-set consumers filter or re-draw short users instead of
-    * discovering the shortfall at batch-assembly time.
-    * The item index below is Stats.denseIndex — two-phase (range-
-    * partition rank + broadcast prefix offsets), so the item catalog
-    * is never sorted on one task: the catalog is DATA-sized (grows
-    * with the business), not a bounded value grain.
+    * discovering the shortfall at batch-assembly time. The item index
+    * is Stats.denseIndex, so the DATA-sized catalog is never sorted on
+    * one task.
     */
   def negativeSamples(inter: DataFrame, k: Int = NegPerUser,
                       slots: Int = NegSlots): DataFrame = {

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.Functions._
+import graft.streaming.Dashboard
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -139,62 +140,54 @@ object Relational {
              |FROM lineitem JOIN part ON l_partkey = p_partkey
              |GROUP BY p_type""".stripMargin)),
 
-    // A3: dashboard overall metrics incl. mean
-    // (dags/micro_batch_dashboard.py:95-101). avg = exact-sum/count so
-    // both engines divide identical operands.
+    // A3–A7: the five dashboard tables (micro_batch_dashboard.py:95-133)
+    // through the production Dashboard functions: each reads a TPC-H
+    // projection renamed to the order shape and renames its outputs
+    // back, so the oracle checks the code the dashboards run. avg =
+    // exact-sum/count so both engines divide identical operands; the
+    // top-k is a TakeOrderedAndProject with a key tie-break.
     QueryDef("a3_dashboard_metrics",
-      (s, d) => ord(s, d).agg(
-        count(lit(1)).as("total_orders"),
-        dsum(col("o_totalprice")).as("total_revenue"),
-        countDistinct(col("o_custkey")).as("unique_customers"))
-        .withColumn("avg_order_value",
-          col("total_revenue") / col("total_orders")),
+      (s, d) => Dashboard.overallMetrics(ord(s, d).select(
+        col("o_totalprice").as("total"), col("o_custkey").as("customer_id"))),
       Some("""SELECT COUNT(*) AS total_orders,
              |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_revenue,
              |COUNT(DISTINCT o_custkey) AS unique_customers,
              |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*) AS avg_order_value
              |FROM orders""".stripMargin)),
 
-    // A4/O2: grouped top-k by revenue (micro_batch_dashboard.py:104-110)
-    // → TakeOrderedAndProject, deterministic tie-break on key.
     QueryDef("a4_top_products",
-      (s, d) => li(s, d).groupBy(col("l_partkey"))
-        .agg(count(lit(1)).as("order_count"),
-          dsum(col("l_quantity")).as("total_quantity"),
-          dsum(col("l_extendedprice")).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_partkey"))
-        .limit(10),
+      (s, d) => Dashboard.topProducts(li(s, d).select(
+          col("l_partkey").as("product_name"), col("l_quantity").as("quantity"),
+          col("l_extendedprice").as("total")))
+        .withColumnsRenamed(Map("product_name" -> "l_partkey",
+          "quantity_sold" -> "total_quantity")),
       Some("""SELECT l_partkey, COUNT(*) AS order_count,
              |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_quantity,
              |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
              |FROM lineitem GROUP BY l_partkey
              |ORDER BY revenue DESC, l_partkey LIMIT 10""".stripMargin)),
 
-    // A5: category stats (micro_batch_dashboard.py:113-118) over the
-    // brand dim.
+    // A5 over the brand dim.
     QueryDef("a5_brand_stats",
-      (s, d) => li(s, d)
-        .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("order_count"),
-          dsum(col("l_extendedprice")).as("revenue"),
-          dsum(col("l_quantity")).as("total_quantity")),
+      (s, d) => Dashboard.categoryStats(li(s, d)
+          .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
+          .select(col("p_brand").as("category"), col("l_extendedprice").as("total"),
+            col("l_quantity").as("quantity")))
+        .withColumnsRenamed(Map("category" -> "p_brand",
+          "quantity_sold" -> "total_quantity")),
       Some("""SELECT p_brand, COUNT(*) AS order_count,
              |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
              |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_quantity
              |FROM lineitem JOIN part ON l_partkey = p_partkey
              |GROUP BY p_brand""".stripMargin)),
 
-    // A6: regional stats (micro_batch_dashboard.py:121-125) —
-    // customer→nation→region chain, dims broadcast.
+    // A6: customer→nation→region chain, dims broadcast.
     QueryDef("a6_regional_stats",
-      (s, d) => ord(s, d)
+      (s, d) => Dashboard.regionalStats(ord(s, d)
         .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
         .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name").as("region"))
-        .agg(count(lit(1)).as("order_count"),
-          dsum(col("o_totalprice")).as("revenue")),
+        .select(col("r_name").as("region"), col("o_totalprice").as("total"))),
       Some("""SELECT r_name AS region, COUNT(*) AS order_count,
              |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
              |FROM orders JOIN customer ON o_custkey = c_custkey
@@ -202,12 +195,12 @@ object Relational {
              |JOIN region ON n_regionkey = r_regionkey
              |GROUP BY r_name""".stripMargin)),
 
-    // A7/P10: hourly stats (micro_batch_dashboard.py:127-133).
+    // A7/P10: hourly stats over the event stream.
     QueryDef("a7_hourly_stats",
-      (s, d) => Tables.events(s, d)
-        .groupBy(hour(col("ts")).cast("long").as("hour"))
-        .agg(count(lit(1)).as("event_count"),
-          dsum(col("value")).as("total_value")),
+      (s, d) => Dashboard.hourlyStats(Tables.events(s, d)
+          .select(col("ts").as("order_date"), col("value").as("total")))
+        .withColumnsRenamed(Map("order_count" -> "event_count",
+          "revenue" -> "total_value")),
       Some("""SELECT CAST(HOUR(ts) AS BIGINT) AS hour, COUNT(*) AS event_count,
              |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
              |FROM events GROUP BY 1""".stripMargin)),

@@ -1674,11 +1674,15 @@ object Similarity {
   def storeIndex(s: SparkSession, dir: String): DataFrame = {
     val baseDf = s.read.parquet(dir)
       .select(col("vec_id"), col("v"), col("cell"))
-    if (StoreOps.list(s, s"$dir.ingest").exists(_.isDirectory))
+    if (hasTail(s, dir))
       baseDf.unionByName(s.read.parquet(s"$dir.ingest")
         .select(col("vec_id"), col("v"), col("cell")))
     else baseDf
   }
+
+  /** Whether the store has a streaming-ingest tail (batch subdirs). */
+  private def hasTail(s: SparkSession, dir: String): Boolean =
+    StoreOps.list(s, s"$dir.ingest").exists(_.isDirectory)
 
   /** The store's LIVE view — base + ingest tail minus tombstones; the
     * one derivation every serving verb (top-k or range, batch or
@@ -1705,14 +1709,17 @@ object Similarity {
     rangeCells(hashSample(live, "q", QueryCount), live, tau)
   }
 
-  /** Compaction: fold the streaming-ingest tail into the
-    * cell-partitioned base, then physically drop tombstoned rows,
-    * rewriting ONLY the cells that hold them (the Erasure
-    * copy-on-write device on the cell axis — untouched cell
-    * directories are never read or written), then clear the tombstone
-    * table. Idempotent on tombstones; returns rows removed. After
-    * compaction the serving read is tombstone-free and tail-free, and
-    * results are unchanged by construction.
+  /** Compaction: make the serving read tombstone-free and tail-free,
+    * with results unchanged by construction; returns rows removed.
+    *  - With a streaming-ingest tail, the live view (base + tail minus
+    *    tombstones) is staged as a whole new store and swapped in
+    *    (StoreOps), and the `.ingest` and `.tombstones` dirs retire
+    *    with the old generation in the same swap, so ivfRecover
+    *    repairs a crash at any step.
+    *  - Without one, tombstoned rows drop cell by cell, rewriting ONLY
+    *    the cells that hold them (the Erasure copy-on-write device on
+    *    the cell axis — untouched cell directories are never read or
+    *    written), then the tombstone table clears. Idempotent.
     *
     * CONCURRENCY CONTRACT (single-writer, offline): compaction
     * physically replaces files that live serve/ingest streams hold in
@@ -1720,21 +1727,22 @@ object Similarity {
     * would read deleted files. Stop serving and ingest, compact,
     * restart: the same static-side refresh semantics the delete path
     * already documents, and what SimilaritySpec's
-    * stop-compact-restart case asserts. A crash between the tail
-    * append and the tail delete leaves the tail duplicated in the
-    * base — re-run compaction is NOT safe then; recover by removing
-    * the `.ingest` dirs (the appended rows are already in the base).
+    * stop-compact-restart case asserts.
     */
   def ivfCompact(s: SparkSession, dir: String): Long = {
     import s.implicits._
-    if (StoreOps.list(s, s"$dir.ingest").exists(_.isDirectory)) {
-      s.read.parquet(s"$dir.ingest")
-        .select(col("vec_id"), col("v"), col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(dir)
-      StoreOps.delete(s, s"$dir.ingest")
+    val tombs = tombstones(s, dir)
+      .map(_.select("vec_id").distinct().localCheckpoint(false))
+    if (hasTail(s, dir)) {
+      val nRemoved = tombs.map(t => storeIndex(s, dir)
+        .join(t, Seq("vec_id"), "left_semi").count()).getOrElse(0L)
+      StoreOps.stage(s, dir)(
+        liveIndex(s, dir).write.partitionBy("cell").parquet(_))
+      StoreOps.swap(s, Seq(dir),
+        retire = Seq(s"$dir.tombstones", s"$dir.ingest"))
+      return nRemoved
     }
-    val tomb = tombstones(s, dir).getOrElse(return 0L)
-      .select("vec_id").distinct().localCheckpoint(false)
+    val tomb = tombs.getOrElse(return 0L)
     val idx = s.read.parquet(dir)
     val nRemoved = idx.join(tomb, Seq("vec_id"), "left_semi").count()
     val touched = idx.join(tomb, Seq("vec_id"), "left_semi")
@@ -1853,7 +1861,8 @@ object Similarity {
 
   /** V17 (round 9): crash recovery for every swap verb on the store,
     * as an executable verb. First StoreOps.recover brings the
-    * sidecars (and a rebuild's cells) to a committed generation; then
+    * sidecars (and a rebuild's or a tail fold's cells) to a committed
+    * generation; then
     * every `cell=` directory the `.codebook` sidecar does not
     * reference is deleted. Those are the swap verbs' debris: new cells
     * of an uncommitted split/retrain, or the retired cells of a
@@ -1863,11 +1872,15 @@ object Similarity {
     * the number of cell directories removed.
     */
   def ivfRecover(s: SparkSession, dir: String): Long = {
-    // a staged cell dir marks a whole-store rebuild, whose staged codes
-    // already fold the tombstones — finishing it retires them
-    StoreOps.recover(s, storeGroup(dir),
+    // a staged cell dir marks a whole-store rewrite (a rebuild or a
+    // tail fold), whose staged rows already fold the tombstones and the
+    // tail — finishing it retires both. A tail fold swaps the cell dir
+    // alone: past its commit the live sidecar stands beside a missing
+    // dir, which no sidecar swap leaves (it renames the sidecar last).
+    val fold = StoreOps.exists(s, s"$dir.codebook") && !StoreOps.exists(s, dir)
+    StoreOps.recover(s, if (fold) Seq(dir) else storeGroup(dir),
       if (StoreOps.exists(s, StoreOps.stagePath(dir)))
-        Seq(s"$dir.tombstones") else Nil)
+        Seq(s"$dir.tombstones", s"$dir.ingest") else Nil)
     val orphans = orphanCells(s, dir)
     orphans.foreach(c => StoreOps.delete(s, s"$dir/cell=$c"))
     orphans.size.toLong
@@ -2015,8 +2028,7 @@ object Similarity {
     // checkpoint when the store already has an ingest tail; a
     // checkpoint-less stream over a tail-free store (one-shot
     // backfills, tests) can only create batch dirs, never clobber.
-    val tailHasBatches =
-      StoreOps.list(s, s"$dir.ingest").exists(_.isDirectory)
+    val tailHasBatches = hasTail(s, dir)
     // a FRESH checkpoint restarts batchIds at 0 exactly like no
     // checkpoint — resuming over a tail requires the stream's OWN
     // checkpoint. Ownership is gated on the checkpoint's offsets/

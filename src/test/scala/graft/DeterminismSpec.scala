@@ -95,7 +95,6 @@ class DeterminismSpec extends SparkSpec {
     "mix_epoch_plan",         // integer temperature shares + caps
     "txt_ppl_buckets",        // milli-nat score cuts + bucket sums
     "o6_topk_perkey",         // native two-phase per-key top-k heaps
-    "ml_recommendations_topk", // native cut under the scoring join
     "ts_ewma",                // kernel-sum explode + integer division
     "sim_rp_recall",          // ±1-projection brute top-k vs baseline
     "j11_bloom_prefilter",    // sketch prefilter + exact verify join

@@ -212,15 +212,28 @@ class RecommendSpec extends SparkSpec {
     intercept[IllegalArgumentException](Recommend.serveTopN(recs, 51))
   }
 
-  test("native-topk recommender is row-identical to the window form") {
+  test("userSimilarity is itemSimilarity of the transposed relation") {
     val inter = Recommend
-      .interactions(spark, "/root/testdata/sf0.001").localCheckpoint(false)
-    val sim = Recommend.itemSimilarity(inter).localCheckpoint(false)
-    val window = Recommend.recommend(inter, sim)
-    val native = Recommend.recommendTopKNative(inter, sim)
-    assert(native.count() === window.count())
-    assert(native.except(window).isEmpty && window.except(native).isEmpty,
-      "native per-key top-k diverged from the rank window")
+      .interactionsItemCapped(spark, "/root/testdata/sf0.001").localCheckpoint(false)
+    val usim = Recommend.userSimilarity(inter)
+    val viaItems = Recommend.itemSimilarity(inter.select(
+        col("item_id").as("user_id"), col("user_id").as("item_id")))
+      .select(col("i").as("u"), col("j").as("v"), col("co"), col("cos"))
+    assert(usim.count() > 0 && usim.count() === viaItems.count())
+    assert(usim.except(viaItems).isEmpty && viaItems.except(usim).isEmpty,
+      "user-user cosine diverged from the transposed item-item cosine")
+  }
+
+  test("Graph.itemEdges is the item co-count cut at minCo") {
+    val inter = Recommend
+      .interactionsCapped(spark, "/root/testdata/sf0.001").localCheckpoint(false)
+    for (m <- Seq(2, 3)) {
+      val edges = Graph.itemEdges(inter, m.toLong)
+      val sim = Recommend.itemSimilarity(inter, m, 0.0).select("i", "j")
+      assert(edges.count() > 0 && edges.count() === sim.count(), s"minCo $m")
+      assert(edges.except(sim).isEmpty && sim.except(edges).isEmpty,
+        s"minCo $m: edges diverged from the similarity pairs")
+    }
   }
 
   test("content similarity: blocks on (brand, type), ranks by size proximity") {

@@ -181,6 +181,17 @@ class StoreCrashSpec extends SparkSpec {
       r => Similarity.ivfRecover(spark, s"$r/i"))
   }
 
+  test("ivfCompact tail fold: every crash point recovers and replays; " +
+    "the tail and tombstones retire with the old generation") {
+    enumerate("fold", "delete i") { r =>
+      Similarity.ivfBuild(spark, s"$r/i", vecs.filter($"vec_id" < 20))
+      Similarity.ingestBatchWrite(Similarity.storeCodebook(spark, s"$r/i"),
+        vecs.filter($"vec_id" >= 20), s"$r/i", 0L)
+      Similarity.ivfDelete(spark, s"$r/i", Seq(3L, 21L))
+    }(r => Similarity.ivfCompact(spark, s"$r/i"))(
+      r => Similarity.ivfRecover(spark, s"$r/i"))
+  }
+
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog today"),
     (2L, "the quick brown fox jumps over the lazy dog again"),
