@@ -18,7 +18,12 @@ object Functions {
     * the single result back to double. Oracle equivalent:
     * `CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE)`.
     */
-  def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+  def dsum(c: Column): Column = decimalSum(c).cast("double")
+
+  /** `dsum` before its cast: the exact DECIMAL sum, for a caller that
+    * sums the partial sums again before the one cast to double.
+    */
+  def decimalSum(c: Column): Column = sum(c.cast(DecimalType(18, 2)))
 
   /** Exact sum for derived monetary expressions that need more scale
     * (e.g. price*(1-discount)). Oracle: DECIMAL(18,6).

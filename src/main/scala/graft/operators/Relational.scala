@@ -3,7 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import graft.functions.Functions._
 import graft.streaming.Dashboard
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,6 +25,20 @@ object Relational {
 
   private def li(s: SparkSession, d: String) = Tables.lineitem(s, d)
   private def ord(s: SparkSession, d: String) = Tables.orders(s, d)
+
+  /** Dashboard table `table` of `df` read as orders: the given order
+    * columns, every other one a typed NULL, every row a valid status.
+    */
+  private def dashboard(table: String, df: DataFrame,
+                        cols: (String, Column)*): DataFrame = {
+    val shape = Seq("customer_id" -> "string", "product_name" -> "string",
+      "category" -> "string", "region" -> "string",
+      "order_date" -> "timestamp", "total" -> "double", "quantity" -> "double")
+    val named = cols.toMap
+    Dashboard.allMetrics(df.select(shape.map { case (c, t) =>
+      named.getOrElse(c, lit(null).cast(t)).as(c)
+    } :+ lit(Dashboard.ValidStatuses.head).as("status"): _*)).toMap.apply(table)
+  }
 
   /** J11: bloom-prefiltered selective join. The urgent-priority order
     * keys are collapsed to a broadcast bloom sketch (one distributed
@@ -141,14 +155,15 @@ object Relational {
              |GROUP BY p_type""".stripMargin)),
 
     // A3–A7: the five dashboard tables (micro_batch_dashboard.py:95-133)
-    // through the production Dashboard functions: each reads a TPC-H
-    // projection renamed to the order shape and renames its outputs
-    // back, so the oracle checks the code the dashboards run. avg =
-    // exact-sum/count so both engines divide identical operands; the
-    // top-k is a TakeOrderedAndProject with a key tie-break.
+    // through the production pass: each feeds Dashboard.allMetrics a
+    // TPC-H projection renamed to the order shape and selects its table,
+    // renaming its outputs back, so the oracle checks the code the
+    // dashboards run. avg = exact-sum/count so both engines divide
+    // identical operands; the top-k is a TakeOrderedAndProject with a
+    // key tie-break.
     QueryDef("a3_dashboard_metrics",
-      (s, d) => Dashboard.overallMetrics(ord(s, d).select(
-        col("o_totalprice").as("total"), col("o_custkey").as("customer_id"))),
+      (s, d) => dashboard("overall_metrics", ord(s, d),
+        "total" -> col("o_totalprice"), "customer_id" -> col("o_custkey")),
       Some("""SELECT COUNT(*) AS total_orders,
              |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_revenue,
              |COUNT(DISTINCT o_custkey) AS unique_customers,
@@ -156,9 +171,9 @@ object Relational {
              |FROM orders""".stripMargin)),
 
     QueryDef("a4_top_products",
-      (s, d) => Dashboard.topProducts(li(s, d).select(
-          col("l_partkey").as("product_name"), col("l_quantity").as("quantity"),
-          col("l_extendedprice").as("total")))
+      (s, d) => dashboard("top_products", li(s, d),
+          "product_name" -> col("l_partkey"), "quantity" -> col("l_quantity"),
+          "total" -> col("l_extendedprice"))
         .withColumnsRenamed(Map("product_name" -> "l_partkey",
           "quantity_sold" -> "total_quantity")),
       Some("""SELECT l_partkey, COUNT(*) AS order_count,
@@ -169,10 +184,10 @@ object Relational {
 
     // A5 over the brand dim.
     QueryDef("a5_brand_stats",
-      (s, d) => Dashboard.categoryStats(li(s, d)
-          .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-          .select(col("p_brand").as("category"), col("l_extendedprice").as("total"),
-            col("l_quantity").as("quantity")))
+      (s, d) => dashboard("category_stats", li(s, d)
+          .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey")),
+          "category" -> col("p_brand"), "total" -> col("l_extendedprice"),
+          "quantity" -> col("l_quantity"))
         .withColumnsRenamed(Map("category" -> "p_brand",
           "quantity_sold" -> "total_quantity")),
       Some("""SELECT p_brand, COUNT(*) AS order_count,
@@ -183,11 +198,11 @@ object Relational {
 
     // A6: customer→nation→region chain, dims broadcast.
     QueryDef("a6_regional_stats",
-      (s, d) => Dashboard.regionalStats(ord(s, d)
+      (s, d) => dashboard("regional_stats", ord(s, d)
         .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
         .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-        .select(col("r_name").as("region"), col("o_totalprice").as("total"))),
+        .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey")),
+        "region" -> col("r_name"), "total" -> col("o_totalprice")),
       Some("""SELECT r_name AS region, COUNT(*) AS order_count,
              |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
              |FROM orders JOIN customer ON o_custkey = c_custkey
@@ -197,8 +212,8 @@ object Relational {
 
     // A7/P10: hourly stats over the event stream.
     QueryDef("a7_hourly_stats",
-      (s, d) => Dashboard.hourlyStats(Tables.events(s, d)
-          .select(col("ts").as("order_date"), col("value").as("total")))
+      (s, d) => dashboard("hourly_stats", Tables.events(s, d),
+          "order_date" -> col("ts"), "total" -> col("value"))
         .withColumnsRenamed(Map("order_count" -> "event_count",
           "revenue" -> "total_value")),
       Some("""SELECT CAST(HOUR(ts) AS BIGINT) AS hour, COUNT(*) AS event_count,

@@ -1719,7 +1719,11 @@ object Similarity {
     *  - Without one, tombstoned rows drop cell by cell, rewriting ONLY
     *    the cells that hold them (the Erasure copy-on-write device on
     *    the cell axis — untouched cell directories are never read or
-    *    written), then the tombstone table clears. Idempotent.
+    *    written): each touched cell is staged whole minus its dead
+    *    rows (an emptied cell stages an empty file) and the cells swap
+    *    in as one StoreOps group, lowest id first, with `.tombstones`
+    *    retired in the same swap; ivfRecover finishes or drops it.
+    *    Idempotent.
     *
     * CONCURRENCY CONTRACT (single-writer, offline): compaction
     * physically replaces files that live serve/ingest streams hold in
@@ -1747,21 +1751,31 @@ object Similarity {
     val nRemoved = idx.join(tomb, Seq("vec_id"), "left_semi").count()
     val touched = idx.join(tomb, Seq("vec_id"), "left_semi")
       .select("cell").distinct().as[Long].collect().sorted.toSeq
-    if (touched.nonEmpty) {
-      val remaining = idx.filter(col("cell").isin(touched: _*))
-        .join(tomb, Seq("vec_id"), "left_anti")
-        .localCheckpoint() // materialize off the files being replaced
-      val keptCells = remaining.select("cell").distinct()
-        .as[Long].collect().toSet
-      remaining.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell").parquet(dir)
-      touched.filterNot(keptCells)
-        .foreach(c => StoreOps.delete(s, s"$dir/cell=$c"))
+    if (touched.isEmpty) {
+      StoreOps.delete(s, s"$dir.tombstones")
+      return 0L
     }
-    StoreOps.delete(s, s"$dir.tombstones")
+    val remaining = idx.filter(col("cell").isin(touched: _*))
+      .join(tomb, Seq("vec_id"), "left_anti")
+      .localCheckpoint() // materialize off the files being replaced
+    touched.foreach(c => StoreOps.stage(s, cellDir(dir, c))(
+      remaining.filter(col("cell") === c).drop("cell").write.parquet(_)))
+    StoreOps.swap(s, touched.map(cellDir(dir, _)),
+      retire = Seq(s"$dir.tombstones"))
     nRemoved
   }
+
+  /** Cell `c`'s directory in store `dir`. */
+  private def cellDir(dir: String, c: Long): String = s"$dir/cell=$c"
+
+  /** The cells of `dir` with a staged rewrite (ivfCompact's tombstone
+    * swap), in ascending id order — the swap's group order.
+    */
+  private def stagedCells(s: SparkSession, dir: String): Seq[Long] =
+    StoreOps.list(s, dir).map(_.getPath.getName)
+      .filter(n => n.startsWith(".cell=") && n.endsWith("._tmp"))
+      .map(_.stripPrefix(".cell=").stripSuffix("._tmp").toLong)
+      .sorted
 
   /** V15's APPLY half: physically split the persisted store's
     * oversized cells (the sim_ivf_split_cells decision re-derived
@@ -1881,6 +1895,12 @@ object Similarity {
     StoreOps.recover(s, if (fold) Seq(dir) else storeGroup(dir),
       if (StoreOps.exists(s, StoreOps.stagePath(dir)))
         Seq(s"$dir.tombstones", s"$dir.ingest") else Nil)
+    // staged cells mark a tombstone rewrite; its lowest cell is the
+    // group's first dir (renamed in last), so the stages left always
+    // name the commit dir
+    val cells = stagedCells(s, dir)
+    if (cells.nonEmpty) StoreOps.recover(s, cells.map(cellDir(dir, _)),
+      Seq(s"$dir.tombstones"))
     val orphans = orphanCells(s, dir)
     orphans.foreach(c => StoreOps.delete(s, s"$dir/cell=$c"))
     orphans.size.toLong

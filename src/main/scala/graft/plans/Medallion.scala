@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.operators.{Cleaning, Par, Recommend}
 import graft.functions.Functions._
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -148,15 +148,19 @@ object ModelRegistry {
             candidate.precisionAt10 > b.precisionAt10)
     }
 
+  /** Write a version's two tables; the writes are independent, so
+    * they overlap.
+    */
   def save(spark: SparkSession, registryDir: String, version: String,
            sim: DataFrame, m: Metrics): Unit = {
-    sim.write.mode(SaveMode.Overwrite)
-      .parquet(s"$registryDir/version=$version/item_similarity")
     import spark.implicits._
-    Seq((version, m.coverage, m.precisionAt10))
+    val metrics = Seq((version, m.coverage, m.precisionAt10))
       .toDF("version", "coverage", "precision_at_10")
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$registryDir/version=$version/metrics")
+    Par.run2(
+      () => sim.write.mode(SaveMode.Overwrite)
+        .parquet(s"$registryDir/version=$version/item_similarity"),
+      () => metrics.write.mode(SaveMode.Overwrite)
+        .parquet(s"$registryDir/version=$version/metrics"))
   }
 
   /** Promote: atomically repoint the production alias (tmp+rename);
@@ -187,19 +191,25 @@ object ModelRegistry {
     }
 
   /** Train→evaluate→conditionally-register, the reference's ML tail
-    * (C2/C4) on any interactions frame.
+    * (C2/C4) on any interactions frame. The similarity model is
+    * materialized once and serves the evaluation and the save alike
+    * (daily_pipeline.py:361-533 trains one matrix); the gate's three
+    * reads are independent and overlap.
     */
   def trainEvalRegister(spark: SparkSession, interactions: DataFrame,
                         registryDir: String, version: String): Boolean = {
     val train = Recommend.trainSet(interactions)
     val eval_ = Recommend.evalSet(interactions)
-    val sim = Recommend.itemSimilarity(train)
+    val sim = Recommend.itemSimilarity(train).localCheckpoint(true)
     val recs = Recommend.recommend(train, sim)
-    val cov = Recommend.coverage(train, eval_).head()
-    val prec = Recommend.precisionAtK(recs, eval_).head()
+    val Seq(cov: Row, prec: Row, best: Option[Metrics @unchecked]) =
+      Par.run[Any](Seq(
+        () => Recommend.coverage(train, eval_).head(),
+        () => Recommend.precisionAtK(recs, eval_).head(),
+        () => productionMetrics(spark, registryDir)))
     val m = Metrics(cov.getAs[Double]("overall_coverage"),
       prec.getAs[Double]("avg_precision"))
-    val better = isBetter(m, productionMetrics(spark, registryDir))
+    val better = isBetter(m, best)
     if (better) {
       save(spark, registryDir, version, sim, m)
       promote(registryDir, version)

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.Functions._
+import org.apache.spark.sql.types.StructType
+import graft.functions.Functions.decimalSum
 import graft.plans.StoreOps
 
 /** The five dashboard metric tables (SURVEY §2.4 A3–A7; reference
@@ -74,45 +75,60 @@ object Dashboard {
   def validOrders(orders: DataFrame): DataFrame =
     orders.filter(col("status").isin(ValidStatuses: _*))
 
-  def overallMetrics(orders: DataFrame): DataFrame =
-    orders.agg(
-      count(lit(1)).as("total_orders"),
-      dsum(col("total")).as("total_revenue"),
-      countDistinct(col("customer_id")).as("unique_customers"))
-      .withColumn("avg_order_value",
-        col("total_revenue") / col("total_orders"))
+  /** The key of each grouping set, in `allMetrics`' set order. */
+  private val Keys =
+    Seq("product_name", "category", "region", "hour", "customer_id")
 
-  def topProducts(orders: DataFrame, k: Int = 10): DataFrame =
-    orders.groupBy(col("product_name"))
-      .agg(count(lit(1)).as("order_count"),
-        dsum(col("quantity")).as("quantity_sold"),
-        dsum(col("total")).as("revenue"))
-      .orderBy(col("revenue").desc, col("product_name"))
-      .limit(k)
-
-  def categoryStats(orders: DataFrame): DataFrame =
-    orders.groupBy(col("category"))
-      .agg(count(lit(1)).as("order_count"),
-        dsum(col("total")).as("revenue"),
-        dsum(col("quantity")).as("quantity_sold"))
-
-  def regionalStats(orders: DataFrame): DataFrame =
-    orders.groupBy(col("region"))
-      .agg(count(lit(1)).as("order_count"),
-        dsum(col("total")).as("revenue"))
-
-  def hourlyStats(orders: DataFrame): DataFrame =
-    orders.groupBy(hour(col("order_date")).cast("long").as("hour"))
-      .agg(count(lit(1)).as("order_count"),
-        dsum(col("total")).as("revenue"))
-
+  /** The five metric tables from one pass over the valid orders: one
+    * GROUPING SETS aggregate by each key alone, counting rows and
+    * summing `total` and `quantity` exactly (`decimalSum`; the cast to
+    * double comes per table), materialized once.
+    * Each table is a projection of its set's rows, picked by
+    * `grouping_id`; `overall_metrics` folds the customer set, whose
+    * non-NULL keys are the distinct customers. Names, column order,
+    * types and nullability are those of one aggregate per table.
+    */
   def allMetrics(orders: DataFrame): Seq[(String, DataFrame)] = {
     val v = validOrders(orders)
+      .withColumn("hour", hour(col("order_date")).cast("long"))
+    val sets = v.groupingSets(Keys.map(k => Seq(col(k))), Keys.map(col): _*)
+      .agg(grouping_id().as("gid"), count(lit(1)).as("order_count"),
+        decimalSum(col("total")).as("revenue"),
+        decimalSum(col("quantity")).as("quantity_sold"))
+      .localCheckpoint(true)
+
+    // grouping_id sets the bit of every key outside the row's set,
+    // the first key's highest. The set's keys are its source's, so a
+    // key the source never leaves NULL is declared non-null again.
+    def set(k: String): DataFrame = {
+      val all = (1 << Keys.size) - 1
+      val rows = sets.filter(
+        col("gid") === all - (1 << (Keys.size - 1 - Keys.indexOf(k))))
+      if (v.schema(k).nullable) rows
+      else rows.sparkSession.createDataFrame(rows.rdd, StructType(
+        rows.schema.map(f => if (f.name == k) f.copy(nullable = false) else f)))
+    }
+    def money(c: String) = col(c).cast("double").as(c)
+
     Seq(
-      "overall_metrics" -> overallMetrics(v),
-      "top_products" -> topProducts(v),
-      "category_stats" -> categoryStats(v),
-      "regional_stats" -> regionalStats(v),
-      "hourly_stats" -> hourlyStats(v))
+      // one task folds the customer set: no shuffle, so no extra job
+      "overall_metrics" -> set("customer_id").coalesce(1).agg(
+        coalesce(sum(col("order_count")), lit(0L)).as("total_orders"),
+        sum(col("revenue")).cast("double").as("total_revenue"),
+        count(col("customer_id")).as("unique_customers"))
+        .withColumn("avg_order_value",
+          col("total_revenue") / col("total_orders")),
+      "top_products" -> set("product_name")
+        .select(col("product_name"), col("order_count"),
+          money("quantity_sold"), money("revenue"))
+        .orderBy(col("revenue").desc, col("product_name"))
+        .limit(10),
+      "category_stats" -> set("category")
+        .select(col("category"), col("order_count"), money("revenue"),
+          money("quantity_sold")),
+      "regional_stats" -> set("region")
+        .select(col("region"), col("order_count"), money("revenue")),
+      "hourly_stats" -> set("hour")
+        .select(col("hour"), col("order_count"), money("revenue")))
   }
 }

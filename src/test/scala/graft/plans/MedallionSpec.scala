@@ -227,6 +227,110 @@ class MedallionSpec extends SparkSpec {
     assert(ModelRegistry.productionVersion(reg) === Some("v1"))
   }
 
+  /** The C4 fixture: 200 users over 13 items. */
+  private def c4Interactions =
+    (1L to 200L).flatMap(u =>
+      Seq((u, u % 13), (u, (u + 1) % 13), (u, (u * 7) % 13)))
+      .toDF("user_id", "item_id")
+
+  test("C4: a promoting trainEvalRegister builds the similarity " +
+    "self-join once") {
+    import graft.operators.Recommend
+    // a filter is never pruned away, so it counts every read of the
+    // interactions; an RDD source keeps the optimizer from folding it
+    val reads = spark.sparkContext.longAccumulator("interaction row reads")
+    val seen = udf { (_: Long) => reads.add(1); true }
+    val inter = spark.createDataFrame(c4Interactions.rdd, c4Interactions.schema)
+      .filter(seen(col("user_id")))
+    def scans(f: => Any): Long = { val r0 = reads.sum; f; reads.sum - r0 }
+    val train = Recommend.trainSet(inter)
+    val eval_ = Recommend.evalSet(inter)
+    var sim: org.apache.spark.sql.DataFrame = null
+    val once = scans { sim = Recommend.itemSimilarity(train).localCheckpoint(true) }
+    val gate = scans {
+      Recommend.coverage(train, eval_).head()
+      Recommend.precisionAtK(Recommend.recommend(train, sim), eval_).head()
+    }
+    assert(once > 0 && gate > 0)
+    val reg = java.nio.file.Files.createTempDirectory("regonce").toString
+    var promoted = false
+    assert(scans { promoted = ModelRegistry.trainEvalRegister(spark, inter, reg, "v1") }
+      === once + gate, "the similarity is derived more than once")
+    assert(promoted)
+  }
+
+  /** One registry cycle with every read in sequence and the similarity
+    * derived for the evaluation and again for the save: the cycle
+    * trainEvalRegister shortens, kept as its reference.
+    */
+  private def sequentialCycle(inter: org.apache.spark.sql.DataFrame,
+                              reg: String, version: String): Boolean = {
+    import graft.operators.Recommend
+    import ModelRegistry._
+    val train = Recommend.trainSet(inter)
+    val eval_ = Recommend.evalSet(inter)
+    val sim = Recommend.itemSimilarity(train)
+    val cov = Recommend.coverage(train, eval_).head()
+    val prec = Recommend.precisionAtK(Recommend.recommend(train, sim), eval_).head()
+    val m = Metrics(cov.getAs[Double]("overall_coverage"),
+      prec.getAs[Double]("avg_precision"))
+    val better = isBetter(m, productionMetrics(spark, reg))
+    if (better) {
+      sim.write.parquet(s"$reg/version=$version/item_similarity")
+      Seq((version, m.coverage, m.precisionAt10))
+        .toDF("version", "coverage", "precision_at_10")
+        .write.parquet(s"$reg/version=$version/metrics")
+      promote(reg, version)
+    }
+    better
+  }
+
+  test("C4: trainEvalRegister writes what the sequential cycle writes " +
+    "(flags, pointer, rows, file counts, parquet footers)") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    def table(dir: String): (Int, Seq[String], Seq[String]) = {
+      val files = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head.toString), conf))
+      val schema = try reader.getFooter.getFileMetaData.getSchema
+      finally reader.close()
+      (files.length,
+        schema.getFields.asScala.toSeq.map(f =>
+          s"${f.getRepetition} ${f.asPrimitiveType.getPrimitiveTypeName} ${f.getName}"),
+        spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq)
+    }
+    def registry(reg: String): Map[String, (Int, Seq[String], Seq[String])] =
+      new java.io.File(reg).listFiles().filter(_.getName.startsWith("version="))
+        .flatMap(v => Seq("item_similarity", "metrics").map(t =>
+          s"${v.getName}/$t" -> table(s"$reg/${v.getName}/$t"))).toMap
+    val sf = graft.operators.Recommend.interactions(spark, "/root/testdata/sf0.001")
+    val fixtures = Seq(
+      "C4 fixture" -> c4Interactions,
+      "sf0.001" -> sf.localCheckpoint(true))
+    for ((label, inter) <- fixtures) {
+      // a first model on half the users, then the whole window twice
+      // (the repeat ties its own metrics and is kept out)
+      val windows = Seq(inter.filter(col("user_id") % 2 === 0), inter, inter)
+      val got = java.nio.file.Files.createTempDirectory("regnew").toString
+      val want = java.nio.file.Files.createTempDirectory("regseq").toString
+      val flags = windows.zipWithIndex.map { case (w, i) =>
+        (ModelRegistry.trainEvalRegister(spark, w, got, s"v${i + 1}"),
+          sequentialCycle(w, want, s"v${i + 1}"))
+      }
+      assert(flags.map(_._1) === flags.map(_._2), label)
+      assert(flags.head._1 && !flags.last._1, label)
+      assert(ModelRegistry.productionVersion(got) ===
+        ModelRegistry.productionVersion(want), label)
+      val g = registry(got)
+      assert(g === registry(want), label)
+      assert(g("version=v1/item_similarity")._3.nonEmpty, label)
+    }
+  }
+
   test("C4: a promote that cannot move the pointer throws and leaves " +
     "it unchanged") {
     val reg = java.nio.file.Files.createTempDirectory("regfail").toString

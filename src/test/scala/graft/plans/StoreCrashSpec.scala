@@ -192,6 +192,22 @@ class StoreCrashSpec extends SparkSpec {
       r => Similarity.ivfRecover(spark, s"$r/i"))
   }
 
+  test("ivfCompact tombstone rewrite: every crash point recovers and " +
+    "replays") {
+    // two cells lose a row and the third every row; the swap commits
+    // at the delete of the lowest touched cell
+    val dead = Seq(3L, 13L) ++ (18L to 23L)
+    val probe = tmpRoot("tombcells")
+    Similarity.ivfBuild(spark, s"$probe/i", vecs)
+    val first = spark.read.parquet(s"$probe/i")
+      .filter($"vec_id".isin(dead: _*)).select("cell").as[Long].collect().min
+    enumerate("tombstones", s"delete i/cell=$first") { r =>
+      Similarity.ivfBuild(spark, s"$r/i", vecs)
+      Similarity.ivfDelete(spark, s"$r/i", dead)
+    }(r => Similarity.ivfCompact(spark, s"$r/i"))(
+      r => Similarity.ivfRecover(spark, s"$r/i"))
+  }
+
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog today"),
     (2L, "the quick brown fox jumps over the lazy dog again"),
