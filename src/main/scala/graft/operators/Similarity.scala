@@ -1719,11 +1719,11 @@ object Similarity {
     *  - Without one, tombstoned rows drop cell by cell, rewriting ONLY
     *    the cells that hold them (the Erasure copy-on-write device on
     *    the cell axis — untouched cell directories are never read or
-    *    written): each touched cell is staged whole minus its dead
-    *    rows (an emptied cell stages an empty file) and the cells swap
-    *    in as one StoreOps group, lowest id first, with `.tombstones`
-    *    retired in the same swap; ivfRecover finishes or drops it.
-    *    Idempotent.
+    *    written): one write stages each touched cell whole minus its
+    *    dead rows (an emptied cell stages an empty dir) and the cells
+    *    swap in as one StoreOps group, lowest id first, with
+    *    `.tombstones` retired in the same swap; ivfRecover finishes or
+    *    drops it. Idempotent.
     *
     * CONCURRENCY CONTRACT (single-writer, offline): compaction
     * physically replaces files that live serve/ingest streams hold in
@@ -1755,11 +1755,20 @@ object Similarity {
       StoreOps.delete(s, s"$dir.tombstones")
       return 0L
     }
-    val remaining = idx.filter(col("cell").isin(touched: _*))
+    // one write stages every touched cell: it lands partitioned under a
+    // hidden root (live files are not replaced until the swap), each
+    // cell=c moves to its stage, and an emptied cell stages empty
+    val root = cellsStage(dir)
+    StoreOps.delete(s, root)
+    idx.filter(col("cell").isin(touched: _*))
       .join(tomb, Seq("vec_id"), "left_anti")
-      .localCheckpoint() // materialize off the files being replaced
-    touched.foreach(c => StoreOps.stage(s, cellDir(dir, c))(
-      remaining.filter(col("cell") === c).drop("cell").write.parquet(_)))
+      .write.partitionBy("cell").parquet(root)
+    touched.foreach(c => StoreOps.stage(s, cellDir(dir, c)) { tmp =>
+      val part = cellDir(root, c)
+      if (StoreOps.exists(s, part)) StoreOps.move(s, part, tmp)
+      else StoreOps.mkdirs(s, tmp)
+    })
+    StoreOps.delete(s, root)
     StoreOps.swap(s, touched.map(cellDir(dir, _)),
       retire = Seq(s"$dir.tombstones"))
     nRemoved
@@ -1767,6 +1776,11 @@ object Similarity {
 
   /** Cell `c`'s directory in store `dir`. */
   private def cellDir(dir: String, c: Long): String = s"$dir/cell=$c"
+
+  /** Where ivfCompact's tombstone rewrite writes its touched cells before
+    * they move to their stages; a dot-name, so reads of `dir` skip it.
+    */
+  private def cellsStage(dir: String): String = s"$dir/.cells._tmp"
 
   /** The cells of `dir` with a staged rewrite (ivfCompact's tombstone
     * swap), in ascending id order — the swap's group order.
@@ -1897,7 +1911,8 @@ object Similarity {
         Seq(s"$dir.tombstones", s"$dir.ingest") else Nil)
     // staged cells mark a tombstone rewrite; its lowest cell is the
     // group's first dir (renamed in last), so the stages left always
-    // name the commit dir
+    // name the commit dir. A leftover staging root predates the commit.
+    StoreOps.delete(s, cellsStage(dir))
     val cells = stagedCells(s, dir)
     if (cells.nonEmpty) StoreOps.recover(s, cells.map(cellDir(dir, _)),
       Seq(s"$dir.tombstones"))
@@ -1930,7 +1945,10 @@ object Similarity {
     * mode("append")s into the leftover debris dirs — silently
     * duplicating every vector in the new cells. With ivfRecover an
     * executable verb, a skipped recovery now fails loudly at entry
-    * instead of corrupting the store.
+    * instead of corrupting the store. The staged cells of an
+    * interrupted tombstone rewrite (ivfCompact) refuse too: a verb run
+    * beside them changes cells that recovery would later overwrite
+    * with the stale stages, retiring tombstones written since.
     */
   private def requireRecovered(s: SparkSession, dir: String,
                                verb: String): Unit = {
@@ -1942,6 +1960,13 @@ object Similarity {
         "an interrupted swap; a re-run would re-derive the same fresh " +
         "ids from the unchanged sidecar max and append duplicates into " +
         "them. Run ivfRecover first.")
+    val staged = stagedCells(s, dir)
+    require(staged.isEmpty,
+      s"refusing to $verb $dir: staged cells of an interrupted tombstone " +
+        s"rewrite exist (.cell=${staged.take(5).mkString("._tmp, .cell=")}" +
+        s"._tmp${if (staged.size > 5) ", ..." else ""}) — a later recovery " +
+        "would finish or drop that swap over this verb's cells and could " +
+        "bring deleted rows back. Run ivfRecover first.")
   }
 
   /** V17 (round 9): OFFLINE coarse-quantizer retrain on the persisted

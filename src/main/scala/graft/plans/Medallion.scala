@@ -193,14 +193,16 @@ object ModelRegistry {
   /** Train→evaluate→conditionally-register, the reference's ML tail
     * (C2/C4) on any interactions frame. The similarity model is
     * materialized once and serves the evaluation and the save alike
-    * (daily_pipeline.py:361-533 trains one matrix); the gate's three
-    * reads are independent and overlap.
+    * (daily_pipeline.py:361-533 trains one matrix): its checkpoint is
+    * lazy, so its last stage runs inside the precision read (the one
+    * gate read of `sim`) rather than as a job of its own, and the save
+    * re-reads it. The gate's three reads are independent and overlap.
     */
   def trainEvalRegister(spark: SparkSession, interactions: DataFrame,
                         registryDir: String, version: String): Boolean = {
     val train = Recommend.trainSet(interactions)
     val eval_ = Recommend.evalSet(interactions)
-    val sim = Recommend.itemSimilarity(train).localCheckpoint(true)
+    val sim = Recommend.itemSimilarity(train).localCheckpoint(false)
     val recs = Recommend.recommend(train, sim)
     val Seq(cov: Row, prec: Row, best: Option[Metrics @unchecked]) =
       Par.run[Any](Seq(

@@ -53,6 +53,9 @@ object StoreOps {
   def delete(s: SparkSession, p: String): Unit =
     if (exists(s, p)) fsOf(s, p).delete(new Path(p), true)
 
+  /** Create dir `p` and any missing parents. */
+  def mkdirs(s: SparkSession, p: String): Unit = fsOf(s, p).mkdirs(new Path(p))
+
   /** Checked rename — a rename that reports failure throws. */
   def move(s: SparkSession, from: String, to: String): Unit =
     require(fsOf(s, from).rename(new Path(from), new Path(to)),

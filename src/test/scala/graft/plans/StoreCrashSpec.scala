@@ -208,6 +208,31 @@ class StoreCrashSpec extends SparkSpec {
       r => Similarity.ivfRecover(spark, s"$r/i"))
   }
 
+  test("ivfApplySplit refuses the staged cells of a tombstone rewrite " +
+    "that crashed before its commit") {
+    val dead = Seq(3L, 13L) ++ (18L to 23L)
+    val compact: String => Unit = r => Similarity.ivfCompact(spark, s"$r/i")
+    def store(r: String): Unit = {
+      Similarity.ivfBuild(spark, s"fault://$r/i", vecs)
+      Similarity.ivfDelete(spark, s"fault://$r/i", dead)
+    }
+    val ref = tmpRoot("tombguard")
+    store(ref)
+    val (ok, ops) = armed(ref, Int.MaxValue)(compact)
+    ok.get
+    val commit = ops.indexWhere(_.startsWith(s"delete $ref/i/cell=")) + 1
+    val r = tmpRoot("tombguard")
+    store(r)
+    assert(armed(r, commit)(compact)._1.isFailure)
+    assert(new java.io.File(s"$r/i").list().exists(_.startsWith(".cell=")))
+    val e = intercept[IllegalArgumentException](
+      Similarity.ivfApplySplit(spark, s"fault://$r/i"))
+    assert(e.getMessage.contains("tombstone rewrite") &&
+      e.getMessage.contains("Run ivfRecover first"))
+    Similarity.ivfRecover(spark, s"fault://$r/i")
+    assert(Similarity.ivfApplySplit(spark, s"fault://$r/i") >= 0L)
+  }
+
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog today"),
     (2L, "the quick brown fox jumps over the lazy dog again"),

@@ -2,20 +2,22 @@
 """A/B the repo benchmark between two checkouts, in alternating pairs.
 
     python3 tools/ab.py --parent ../parent --change . --workload cf_retrain \\
-        --pairs 5 --seed 101 --out ab_runs.jsonl
+        --pairs 10 --seed 101 --out ab_runs.jsonl
 
-Pair i runs `perfbench/run.py --workload W --seed <seed+i>` once in each
-checkout, one after the other; the parent goes first in even pairs and
-the change in odd ones, so a drift of the box over the session does not
-favour one side. Each checkout builds its own program (perfbench caches
-the build per source hash under its own `.bench_build/`).
+Pair i runs `perfbench/run.py --workload W --seed <seed+i> --seconds S`
+once in each checkout, one after the other, S being BENCHMARK.json's
+`run_seconds`; the parent goes first in even pairs and the change in odd
+ones, so a drift of the machine over the pairs does not favour one side.
+Each checkout builds its own program (perfbench caches the build per
+source hash under its own `.bench_build/`).
 
 Every run's result line is appended to the JSONL file as it finishes,
-with its side, pair, seed and order. The summary prints, per metric, the
-medians and quartiles of both sides, change/parent of the medians, the
-pairs the change won (by the metric's `better` in BENCHMARK.json), and
-whether the median gap exceeds the parent's interquartile range. It
-lists every run that is not `correct` or has `failed > 0`.
+with its side, pair, seed, run length and order. The summary prints, per
+metric, the medians and quartiles of both sides, change/parent of the
+medians, the pairs the change won (by the metric's `better` in
+BENCHMARK.json), and whether the median gap exceeds the parent's
+interquartile range. It lists every run that is not `correct` or has
+`failed > 0`.
 
     python3 tools/ab.py --report ab_runs.jsonl [--workload W]
 
@@ -30,9 +32,9 @@ import sys
 import time
 
 
-def run_once(checkout, workload, seed, seconds, trace):
+def run_once(checkout, workload, seed, seconds):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+           "--seed", str(seed), "--seconds", str(seconds)]
     t0 = time.time()
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
@@ -46,10 +48,12 @@ def run_once(checkout, workload, seed, seconds, trace):
     return rec
 
 
-def directions(benchmark_json):
+def load_benchmark(benchmark_json):
+    """The run length and each metric's direction, from BENCHMARK.json."""
     with open(benchmark_json) as f:
         b = json.load(f)
-    return {m["name"]: m["better"] for m in b["end_to_end"] + b.get("per_layer", [])}
+    better = {m["name"]: m["better"] for m in b["end_to_end"] + b.get("per_layer", [])}
+    return b["run_seconds"], better
 
 
 def quartiles(xs):
@@ -93,16 +97,14 @@ def main():
     ap.add_argument("--parent", help="checkout of the parent commit")
     ap.add_argument("--change", help="checkout of the change")
     ap.add_argument("--workload")
-    ap.add_argument("--pairs", type=int, default=5)
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
-    ap.add_argument("--seconds", type=float, default=5)
-    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--out", help="JSONL file the runs are appended to")
     ap.add_argument("--report", help="summarize this JSONL file and exit")
     args = ap.parse_args()
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    better = directions(os.path.join(args.change or here, "BENCHMARK.json"))
+    seconds, better = load_benchmark(os.path.join(args.change or here, "BENCHMARK.json"))
     if args.report:
         with open(args.report) as f:
             recs = [json.loads(l) for l in f if l.strip()]
@@ -120,9 +122,9 @@ def main():
         seed = args.seed + i
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for pos, side in enumerate(order):
-            rec = run_once(getattr(args, side), args.workload, seed, args.seconds, args.trace)
+            rec = run_once(getattr(args, side), args.workload, seed, seconds)
             rec.update({"workload": args.workload, "side": side, "pair": i, "seed": seed,
-                        "first": pos == 0})
+                        "seconds": seconds, "first": pos == 0})
             records.append(rec)
             with open(args.out, "a") as f:
                 f.write(json.dumps(rec) + "\n")
