@@ -992,23 +992,16 @@ object Dedup {
     * connected components over the near-dup pair graph, each doc
     * labeled with its cluster's min doc_id (the canonical survivor).
     * Min-label propagation with pointer jumping, iterated TO THE
-    * FIXPOINT (batched convergence checks — see labelComponents), so
-    * the result is the true CC regardless of topology; the oracle
-    * states the same mathematical object as a recursive reachability
-    * closure (ccFixSql). CcMaxRounds is a loud safety valve, not a
-    * semantic knob: near-dup components are shallow by construction
-    * (dup groups, not 64-hop chains), and a component that genuinely
-    * needs more than 64 relaxation rounds should fail the job, not
-    * ship wrong labels.
+    * FIXPOINT (see labelComponents), so the result is the true CC
+    * regardless of topology; the oracle states the same mathematical
+    * object as a recursive reachability closure (ccFixSql).
+    * CcMaxRounds is a loud safety valve on relaxation rounds (the
+    * seeded first round counts as one), not a semantic knob: near-dup
+    * components are shallow by construction (dup groups, not 64-hop
+    * chains), and a component that genuinely needs more than 64
+    * relaxation rounds should fail the job, not ship wrong labels.
     */
   val CcMaxRounds = 64
-
-  /** Rounds run lazily between convergence checks — each check is a
-    * driver action, and real cluster topologies converge in one
-    * batch, so batching keeps the per-round scheduling overhead the
-    * fixed-round design was built to avoid.
-    */
-  val CcBatch = 4
 
   def dedupClusters(docs: DataFrame, rounds: Int = CcMaxRounds): DataFrame =
     labelComponents(ngramJaccard(docs).select(col("i"), col("j")),
@@ -1180,9 +1173,12 @@ object Dedup {
     * FIXPOINT — at which point every label provably equals its
     * component's min id (labels never drop below it, and the min
     * vertex keeps its own id, so a converged constant-per-component
-    * labeling can only be the min). Rounds run in lazy batches of
-    * CcBatch with one convergence action per batch; `maxRounds` is a
-    * loud safety valve (require), not a semantic knob.
+    * labeling can only be the min). Round 1 is seeded as one
+    * aggregate over the edges; convergence is checked after it and
+    * then after lazy batches of 1, 2, 4, … rounds, so a shallow graph
+    * pays one check and a deep one O(log rounds) checks and at most
+    * twice the rounds it needs. `maxRounds` counts rounds, the seeded
+    * one included, and is a loud safety valve, not a semantic knob.
     *
     * WHY fixpoint, not a fixed ladder (round 11 continuation, change
     * note 49): the jump term doubles coverage only when the local
@@ -1204,7 +1200,7 @@ object Dedup {
     * failure rather than a silent wrong answer. That is the intended
     * trade; the failure message carries the unconverged-component
     * count and sample ids so the operator of a chain-heavy corpus
-    * knows to raise `maxRounds` (cost is O(diameter) batches on the
+    * knows to raise `maxRounds` (cost is O(diameter) rounds on the
     * edge subgraph only) rather than bisect a stack trace.
     */
   def labelComponents(pairs: DataFrame, universe: DataFrame,
@@ -1230,52 +1226,48 @@ object Dedup {
     // left-join the result back over the corpus, instead of dragging
     // every isolated doc through the rounds' shuffles. At 100 TB the
     // corpus is the scan; the edge subgraph is the near-dup fraction.
-    // Lazy checkpoints: each round's table still materializes exactly
-    // once (it is referenced thrice — union + edge join + jump join),
-    // and a whole CcBatch of rounds executes under ONE convergence
-    // action — the per-round driver round-trips were costing more
-    // than the per-round compute on the tiny subgraph.
-    var labels = edges.select(col("i").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
-      .localCheckpoint(false)
-    var converged = false
-    var spent = 0
+    // Round 1 from identity labels is one aggregate: its jump term is
+    // the identity, so label(v) = least(v, min over v's neighbours).
+    var labels = edges.groupBy(col("i"))
+      .agg(least(col("i"), min(col("j"))).as("label"))
+      .withColumnRenamed("i", "doc_id").localCheckpoint(false)
+    // fixpoint test on the CURRENT state alone (no confirming round):
+    // labels constant across every edge ⟺ constant per component ⟺
+    // the true CC labeling (the min vertex never loses its own id, so
+    // the component constant can only be the min)
+    def moving(l: DataFrame): DataFrame = edges
+      .join(l.as("li"), edges("i") === col("li.doc_id"))
+      .join(l.as("lj"), edges("j") === col("lj.doc_id"))
+      .filter(col("li.label") =!= col("lj.label"))
+    var spent = 1
+    var converged = maxRounds > 0 && moving(labels).isEmpty
+    // Later rounds run lazily (each table materializes once: it is
+    // referenced thrice — union + edge join + jump join) in batches
+    // that double the rounds spent, one convergence action per batch.
     while (!converged && spent < maxRounds) {
-      var next = labels
-      for (_ <- 1 to math.min(CcBatch, maxRounds - spent)) {
-        val viaEdge = edges.join(next, edges("j") === next("doc_id"))
+      val batch = math.min(spent, maxRounds - spent)
+      for (_ <- 1 to batch) {
+        val viaEdge = edges.join(labels, edges("j") === labels("doc_id"))
           .select(edges("i").as("doc_id"), col("label"))
         // label values are always ids of edge-incident vertices, so
         // the label-of-label lookup stays inside the subgraph
-        val viaJump = next.as("l")
-          .join(next.as("p"), col("l.label") === col("p.doc_id"))
+        val viaJump = labels.as("l")
+          .join(labels.as("p"), col("l.label") === col("p.doc_id"))
           .select(col("l.doc_id").as("doc_id"), col("p.label").as("label"))
-        next = next.unionByName(viaEdge).unionByName(viaJump)
+        labels = labels.unionByName(viaEdge).unionByName(viaJump)
           .groupBy(col("doc_id"))
           .agg(min(col("label")).as("label"))
           .localCheckpoint(false)
       }
-      spent += math.min(CcBatch, maxRounds - spent)
-      // fixpoint test on the CURRENT state alone (no confirming
-      // batch): labels constant across every edge ⟺ constant per
-      // component ⟺ the true CC labeling (the min vertex never loses
-      // its own id, so the component constant can only be the min)
-      converged = edges
-        .join(next.as("li"), edges("i") === col("li.doc_id"))
-        .join(next.as("lj"), edges("j") === col("lj.doc_id"))
-        .filter(col("li.label") =!= col("lj.label"))
-        .isEmpty
-      labels = next
+      spent += batch
+      converged = moving(labels).isEmpty
     }
     if (!converged) {
       // failure path only: name the components still moving (bounded
       // read — distinct min-side labels of the mismatched edges, a
       // handful of rows) so a chain-heavy corpus's operator can size
       // maxRounds instead of bisecting a bare require
-      val bad = edges
-        .join(labels.as("li"), edges("i") === col("li.doc_id"))
-        .join(labels.as("lj"), edges("j") === col("lj.doc_id"))
-        .filter(col("li.label") =!= col("lj.label"))
+      val bad = moving(labels)
         .select(least(col("li.label"), col("lj.label")).as("l"))
         .distinct()
         .localCheckpoint(false) // count + sample read the same rows
@@ -1288,7 +1280,7 @@ object Dedup {
           s"components; sample: $sample — these are transient labels, " +
           "not final component ids). A component's diameter exceeds " +
           "the safety valve; raise maxRounds for chain-shaped graphs " +
-          "(cost is O(diameter) batches on the edge subgraph).")
+          "(cost is O(diameter) rounds on the edge subgraph).")
     }
     universe
       .join(broadcast(labels), Seq("doc_id"), "left")

@@ -153,15 +153,17 @@ class PropertySpec extends SparkSpec {
     // REAL BUG: the former fixed 7-round ladder left a non-min label
     // on a 29-vertex graph (the jump only doubles coverage when the
     // local min-id chain points toward the component min), which
-    // drove the fixpoint rewrite — change note 49
+    // drove the fixpoint rewrite — change note 49. Self-pairs, both
+    // orientations and repeated pairs are generated too: the seeded
+    // first round aggregates straight over the raw edge list.
     val gGen = for {
       n <- Gen.choose(2, 36)
       m <- Gen.choose(0, n)
       es <- Gen.listOfN(m, for {
-        a <- Gen.choose(1, n - 1)
-        b <- Gen.choose(a + 1, n)
+        a <- Gen.choose(1, n)
+        b <- Gen.frequency(1 -> Gen.const(a), 5 -> Gen.choose(1, n))
       } yield (a.toLong, b.toLong))
-    } yield (n, es.distinct)
+    } yield (n, es ++ es.take(m / 3))
     val p = Prop.forAll(gGen) { case (n, edges) =>
       val universe = (1 to n).map(_.toLong).toDF("doc_id")
       val pairs =
@@ -503,22 +505,28 @@ class PropertySpec extends SparkSpec {
       .withMinSuccessfulTests(6).withInitialSeed(Seed(42L)).withWorkers(1), p)
   }
 
+  // A 256-vertex chain whose ids are SCRAMBLED along it (v ↦ 171·v
+  // mod 257, a bijection on 1..256) so min-label propagation cannot
+  // ride a monotone edge layout for free — the adversarial shape note
+  // 49 was about. Min-label + jump needs 10 rounds to label it.
+  private val chainN = 256
+  private val chainEdges = {
+    def p(v: Int): Long = (v.toLong * 171L) % 257L
+    (1 until chainN)
+      .map(v => (math.min(p(v), p(v + 1)), math.max(p(v), p(v + 1))))
+  }
+
   test("labelComponents: one large planted chain — exact, priced") {
     // the closure-price case change note 50 points at: a single
     // 256-vertex chain is the worst closure-to-edge ratio at fixed
     // component size — the ORACLE's recursive reachability would
     // materialize 256² = 65 536 rows against 255 edges (Σ size², the
     // documented ccFixSql bound), while the engine's fixpoint labels
-    // it exactly in O(log diameter) batched rounds, well inside the
-    // CcMaxRounds valve. Ids are SCRAMBLED along the chain (v ↦
-    // 171·v mod 257, a bijection on 1..256) so min-label propagation
-    // cannot ride a monotone edge layout for free — the adversarial
-    // shape note 49 was about.
-    val n = 256
-    def p(v: Int): Long = (v.toLong * 171L) % 257L
+    // it exactly in 10 rounds (convergence checked after rounds 1, 2,
+    // 4, 8 and 16), well inside the CcMaxRounds valve.
+    val n = chainN
     val universe = (1 to n).map(_.toLong).toDF("doc_id")
-    val edges = (1 until n)
-      .map(v => (math.min(p(v), p(v + 1)), math.max(p(v), p(v + 1))))
+    val edges = chainEdges
     val pairs = edges.toDF("i", "j")
     val got = Dedup.labelComponents(pairs, universe)
       .select("doc_id", "canonical_id").as[(Long, Long)].collect()
@@ -545,5 +553,32 @@ class PropertySpec extends SparkSpec {
     assert(closureRows == n.toLong * n, // one chain component → n² rows
       s"closure volume $closureRows — the Σ size² bound drifted")
     assert(edges.size == n - 1) // against 255 edges on the Spark side
+  }
+
+  test("labelComponents: the valve throws instead of returning labels") {
+    // the scrambled chain needs 10 rounds; at maxRounds = 2 the call
+    // itself must fail loudly, before any DataFrame is handed out
+    val universe = (1 to chainN).map(_.toLong).toDF("doc_id")
+    val e = intercept[IllegalStateException] {
+      Dedup.labelComponents(chainEdges.toDF("i", "j"), universe,
+        maxRounds = 2)
+    }
+    assert(e.getMessage.contains("did not converge within 2 rounds"),
+      e.getMessage)
+  }
+
+  test("labelComponents: maxRounds counts rounds, the seeded one included") {
+    val universe = (1L to 3L).toDF("doc_id")
+    def labels(pairs: Seq[(Long, Long)], maxRounds: Int): Map[Long, Long] =
+      Dedup.labelComponents(pairs.toDF("i", "j"), universe, maxRounds)
+        .select("doc_id", "canonical_id").as[(Long, Long)].collect().toMap
+    // a single pair converges in its first (seeded) round
+    assert(labels(Seq((1L, 2L)), 1) == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+    // the path 1–2–3 needs exactly two rounds: 3 reads 2 after round 1
+    val path = Seq((1L, 2L), (2L, 3L))
+    val e = intercept[IllegalStateException](labels(path, 1))
+    assert(e.getMessage.contains("did not converge within 1 rounds"),
+      e.getMessage)
+    assert(labels(path, 2) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 }

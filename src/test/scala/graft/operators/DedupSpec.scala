@@ -530,8 +530,9 @@ class DedupSpec extends SparkSpec {
   test("labelComponents converges a 64-doc chain (pointer jumping)") {
     // path graph 1-2-…-64: diameter 63. The fixpoint loop must reach
     // every vertex (on aligned chains the jump term doubles coverage
-    // per round, so this converges in few batches, well under the
-    // CcMaxRounds valve); every vertex must land on 1.
+    // per round, so this converges in 7 rounds, checked after rounds
+    // 1, 2, 4 and 8, well under the CcMaxRounds valve); every vertex
+    // must land on 1.
     val chain = (1L until 64L).map(k => (k, k + 1)).toDF("i", "j")
     val universe = (1L to 64L).toDF("doc_id")
     val labels = Dedup.labelComponents(chain, universe)
