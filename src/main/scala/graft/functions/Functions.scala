@@ -115,11 +115,17 @@ object Functions {
   // functions, so every content hash goes through md5 hex — identical
   // on both engines — and re-enters integer space via a 60-bit prefix
   // (15 hex chars < 2^63, so the BIGINT cast never overflows/signs).
-  // Oracle: CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT).
+  // Oracle: `hex60Sql`.
 
   /** 60-bit integer content hash of a string column. */
   def hex60(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
+
+  /** `hex60` in the oracle's SQL: the same 60-bit md5 prefix, so a key
+    * collision merges the same counts on both engines.
+    */
+  private[graft] def hex60Sql(x: String): String =
+    s"CAST(concat('0x', substr(md5($x),1,15)) AS BIGINT)"
 
   /** Largest 32-bit prime — the modulus of the minhash permutation
     * family. Reducing hex60 below 2^32 first keeps a_k*h + b_k within

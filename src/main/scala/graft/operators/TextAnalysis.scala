@@ -12,9 +12,13 @@ import org.apache.spark.sql.functions._
   * documents are order rows); these are the beyond-reference operators
   * a 100 TB corpus pipeline needs (builder brief, "text analysis").
   *
-  * All are per-row Column expressions — no shuffle, no UDF, fully
-  * whole-stage-codegen; a 1000-executor scan applies them at read
-  * bandwidth. Cross-engine float rule: every derived ratio is a
+  * The per-document scores (token stats, quality, language ID,
+  * fingerprints) are per-row Column expressions — no shuffle, no UDF,
+  * fully whole-stage-codegen; a 1000-executor scan applies them at read
+  * bandwidth. The corpus-model families — the n-gram LMs, BPE and
+  * unigram tokenizer training, span dedup and domain mixing — are not:
+  * they shuffle through aggregates and joins at vocabulary, document
+  * or source grain. Cross-engine float rule: every derived ratio is a
   * division of exact integer counts (identical doubles on any IEEE
   * engine), rounded only at emission.
   */
@@ -30,6 +34,34 @@ object TextAnalysis {
 
   private def hits(toks: Column, words: Seq[String]): Column =
     size(filter(toks, t => t.isin(words.map(lit(_)): _*)))
+
+  /** The lower-cased whitespace token array of `text`. */
+  private def lowTokens: Column = tokens(lower(col("text")))
+
+  /** `lowTokens` in the oracle's SQL. */
+  private val tokSql = "string_split_regex(trim(lower(text)),'\\s+')"
+
+  /** The oracle's per-row order-`n` gram list over the token list `t`
+    * (`gramArr`; DuckDB lists are 1-based and generate_series(1, 0) is
+    * empty).
+    */
+  private def gramsSql(n: Int): String =
+    s"""list_transform(
+       |    generate_series(1, greatest(len(t)-${n - 1}, 0)),
+       |    i -> ${(0 until n).map(k => if (k == 0) "t[i]" else s"t[i+$k]")
+                 .mkString(" || ' ' || ")})""".stripMargin
+
+  /** The oracle's held-out split (`heldoutSplit`): each doc's token
+    * list `t` and its split bucket `b` (train is `b < 8`).
+    */
+  private val heldoutSql =
+    s"""db AS (SELECT doc_id,
+       |    $tokSql AS t,
+       |    ((doc_id % 100003) * 31 + 7 * 97) % 10 AS b FROM documents)""".stripMargin
+
+  /** The oracle's quantized per-doc tail (`perDocNll`). */
+  private val avgNllSql =
+    "ROUND(FLOOR(CAST(SUM(q_nll) AS DOUBLE) / COUNT(*)) / 1000000.0, 6) AS avg_nll"
 
   /** Tokenization + size/shape stats per document. */
   def tokenStats(docs: DataFrame): DataFrame =
@@ -124,7 +156,7 @@ object TextAnalysis {
     */
   def bm25(docs: DataFrame, terms: Seq[String] = Bm25Terms,
            k1: Double = Bm25K1, b: Double = Bm25B): DataFrame = {
-    val t = tokens(lower(col("text")))
+    val t = lowTokens
     // checkpointed: the per-term HOF tf pass is the query's cost, and
     // base feeds both the 1-row corpus-stats aggregate and the final
     // scoring join — compute it once, not twice
@@ -152,6 +184,129 @@ object TextAnalysis {
         round(score, 6).as("bm25"): _*)
   }
 
+  // ---- the n-gram LM core ----
+  //
+  // The txt_* LM family (unigram, ppl buckets, bigram, trigram,
+  // interpolated, stupid-backoff and Kneser-Ney held-out) shares one
+  // definition of each decision below: the gram stream, the
+  // vocabulary-grain count with its derived context count, the
+  // held-out split and the quantized per-doc tail. Each query keeps
+  // its own grouping key, edge corrections and checkpoints.
+
+  /** Per-row order-`n` gram array over the token array `t`, one
+    * space-joined string per position (duplicates kept — these feed
+    * frequency counts, not set overlap). The sequence guard matters:
+    * Spark's `sequence(1, 0)` counts DOWN where DuckDB's
+    * generate_series is empty.
+    */
+  private def gramArr(n: Int): String = {
+    val words = (0 until n).map {
+      case 0 => "t[i-1]"
+      case 1 => "t[i]"
+      case k => s"t[i+${k - 1}]"
+    }
+    s"""CASE WHEN size(t) >= $n
+       |  THEN transform(sequence(1, size(t) - ${n - 1}),
+       |    i -> concat(${words.mkString(", ' ', ")}))
+       |  ELSE CAST(array() AS array<string>) END""".stripMargin
+  }
+
+  /** The order-`n` gram stream of a token frame (`t`, plus `doc_id`
+    * when present, which is kept): one row per gram position, hashed
+    * at scan to 60-bit keys so every shuffle downstream carries 8-byte
+    * longs — `gh` the gram, and each of `keys` a caller asks for:
+    * `ctxh` its leading n−1 words (the context), `sfxh` its trailing
+    * n−1 words, `fh` / `lh` its first / last word. The oracle hashes
+    * identically (`hex60Sql`), so a collision cannot cause a mismatch.
+    */
+  private def gramStream(toks: DataFrame, n: Int, keys: String*): DataFrame = {
+    val span = Map("ctxh" -> (1, n - 1), "sfxh" -> (2, n),
+      "fh" -> (1, 1), "lh" -> (n, n))
+    def words(k: String): Column = {
+      val (a, b) = span(k)
+      val ws = (a to b).map(i => s"split_part(g, ' ', $i)")
+      expr(if (ws.size == 1) ws.head else ws.mkString("concat(", ", ' ', ", ")"))
+    }
+    val keep = toks.columns.filter(_ == "doc_id").map(col).toSeq
+    toks.select(keep :+ explode(expr(gramArr(n))).as("g"): _*)
+      .select(keep ++ (hex60(col("g")).as("gh") +:
+        keys.map(k => hex60(words(k)).as(k))): _*)
+  }
+
+  /** Vocabulary-grain gram counts: one row per gram key `gh` with its
+    * count `c`. Each of `carry` is functionally determined by `gh`, so
+    * max() carries it exactly.
+    */
+  private def gramVocab(stream: DataFrame, carry: String*): DataFrame = {
+    val aggs = carry.map(k => max(col(k)).as(k)) :+ count(lit(1)).as("c")
+    stream.groupBy(col("gh")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Context counts `cctx` derived from a vocabulary table, not the
+    * stream: `ctxh` is functionally determined by the gram key, so this
+    * aggregate runs over |vocab| rows. `extra` adds context-grain
+    * aggregates.
+    */
+  private def ctxCount(vocab: DataFrame, extra: Column*): DataFrame =
+    vocab.groupBy(col("ctxh")).agg(sum(col("c")).as("cctx"), extra: _*)
+
+  /** Each gram's count `c` beside its context's count `cctx`, keyed on
+    * `gh` — one vocabulary-grain join, which AQE broadcasts when the
+    * vocabulary fits.
+    */
+  private def condTable(vocab: DataFrame, ctx: DataFrame): DataFrame =
+    vocab.join(ctx.select("ctxh", "cctx"), Seq("ctxh"))
+      .select("gh", "c", "cctx")
+
+  /** The 80/20 held-out split on the stable doc bucket (salt 7): the
+    * train and eval token frames, `t`, with `doc_id` on the eval side,
+    * the grain it is scored at.
+    */
+  private def heldoutSplit(docs: DataFrame): (DataFrame, DataFrame) = {
+    val b = bucket10(col("doc_id"), lit(7L))
+    (docs.filter(b < 8).select(lowTokens.as("t")),
+      docs.filter(b >= 8).select(col("doc_id"), lowTokens.as("t")))
+  }
+
+  /** Per-doc quantized NLL sums: each row's −ln p (`logp` is ln p) is
+    * rounded to micro-units BEFORE the per-doc sum (distributed
+    * double-sum order is engine-internal; quantized sums are exact
+    * integer arithmetic — same device as sim_centroids). Yields
+    * `doc_id`, the row count `n`, `extra` and `q_sum`.
+    */
+  private def nllSums(scored: DataFrame, logp: Column, n: String,
+                      extra: Column*): DataFrame =
+    scored.withColumn("q_nll", round(logp * -1000000.0d).cast("long"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as(n), extra :+ sum(col("q_nll")).as("q_sum"): _*)
+
+  /** floor(sum / n) micro-units as units, rounded to 6 places — an
+    * exact mean of quantized integers.
+    */
+  private def microMean(sum: Column, n: Column): Column =
+    round(floor(sum.cast("double") / n) / 1000000.0d, 6)
+
+  /** The quantized per-doc tail: `nllSums`, then `avg_nll` in place of
+    * `q_sum`.
+    */
+  private def perDocNll(scored: DataFrame, logp: Column, n: String,
+                        extra: Column*): DataFrame =
+    nllSums(scored, logp, n, extra: _*)
+      .withColumn("avg_nll", microMean(col("q_sum"), col(n)))
+      .drop("q_sum")
+
+  /** The corpus unigram LM's scored token stream and its ln p. Grouped
+    * on the token STRING, as the oracle groups: a hashed key could let
+    * a collision split the two engines.
+    */
+  private def unigramScored(docs: DataFrame): (DataFrame, Column) = {
+    val tok = docs.select(col("doc_id"), explode(lowTokens).as("tk"))
+    val vocab = tok.groupBy(col("tk")).agg(count(lit(1)).as("cnt"))
+    val total = vocab.agg(sum(col("cnt")).as("total"))
+    (tok.join(vocab, Seq("tk")).join(broadcast(total)),
+      log(col("cnt").cast("double") / col("total")))
+  }
+
   /** Per-doc cross-entropy under the corpus unigram LM — the
     * perplexity-style quality filter (high score = tokens the corpus
     * finds surprising = gibberish or off-distribution text; the
@@ -160,28 +315,11 @@ object TextAnalysis {
     *
     * Shape at scale: vocabulary aggregate (one groupBy on token),
     * token stream re-joins the vocab on the token key, per-doc
-    * aggregate. Determinism: each token's negative-log-prob is
-    * quantized to micro-units BEFORE the per-doc sum (distributed
-    * double-sum order is engine-internal; quantized sums are exact
-    * integer arithmetic — same device as sim_centroids).
+    * aggregate with the quantized tail (`perDocNll`).
     */
   def unigramLogprob(docs: DataFrame): DataFrame = {
-    val tok = docs.select(col("doc_id"),
-      explode(tokens(lower(col("text")))).as("tk"))
-    val vocab = tok.groupBy(col("tk")).agg(count(lit(1)).as("cnt"))
-    val total = vocab.agg(sum(col("cnt")).as("total"))
-    val scored = tok
-      .join(vocab, Seq("tk"))
-      .join(broadcast(total))
-      .withColumn("q_nll",
-        round(log(col("cnt").cast("double") / col("total")) * -1000000.0d)
-          .cast("long"))
-    scored.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("q_nll")).as("q_sum"))
-      .withColumn("avg_nll",
-        round(floor(col("q_sum").cast("double") / col("n_tokens"))
-          / 1000000.0d, 6))
-      .select(col("doc_id"), col("n_tokens"), col("avg_nll"))
+    val (scored, logp) = unigramScored(docs)
+    perDocNll(scored, logp, "n_tokens")
   }
 
   /** CCNet-style perplexity bucketing (arXiv:1911.00359): score every
@@ -196,18 +334,8 @@ object TextAnalysis {
     * bucketing device is identical.
     */
   def pplBuckets(docs: DataFrame): DataFrame = {
-    val tok = docs.select(col("doc_id"),
-      explode(tokens(lower(col("text")))).as("tk"))
-    val vocab = tok.groupBy(col("tk")).agg(count(lit(1)).as("cnt"))
-    val total = vocab.agg(sum(col("cnt")).as("total"))
-    val per = tok
-      .join(vocab, Seq("tk"))
-      .join(broadcast(total))
-      .withColumn("q_nll",
-        round(log(col("cnt").cast("double") / col("total")) * -1000000.0d)
-          .cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("q_nll")).as("q_sum"))
+    val (scored, logp) = unigramScored(docs)
+    val per = nllSums(scored, logp, "n_tokens")
       .withColumn("s", expr("q_sum div n_tokens div 1000"))
     val cuts = Stats.valueCuts(per, "s",
       Seq(1.0 / 3 -> "c1", 2.0 / 3 -> "c2"))
@@ -224,105 +352,40 @@ object TextAnalysis {
         expr("s_sum div n_docs").as("avg_score_milli"))
   }
 
-  /** Per-row bigram array over the token stream (duplicates kept —
-    * unlike shingles this feeds frequency counts, not set overlap).
-    * The sequence guard matters: Spark's `sequence(1, 0)` counts DOWN
-    * where DuckDB's generate_series is empty.
+  /** Self-scored order-`n` LM: P(gram) = c(gram) / c(context ·), both
+    * counts over the corpus gram stream, NLL averaged per document in
+    * the `countCol` column. One tokenize+hash pass, checkpointed: the
+    * vocabulary, its context derive and the scoring join all reuse it
+    * instead of re-running explode+md5. Docs with fewer than `n` tokens
+    * have no grams and drop out (identically on both engines).
     */
-  private val bigramArr =
-    """CASE WHEN size(t) >= 2
-      |  THEN transform(sequence(1, size(t) - 1),
-      |    i -> concat(t[i-1], ' ', t[i]))
-      |  ELSE CAST(array() AS array<string>) END""".stripMargin
+  private def selfLogprob(docs: DataFrame, n: Int,
+                          countCol: String): DataFrame = {
+    val grams = gramStream(docs.select(col("doc_id"), lowTokens.as("t")),
+      n, "ctxh").localCheckpoint(false)
+    val vocab = gramVocab(grams, "ctxh")
+    perDocNll(grams.join(condTable(vocab, ctxCount(vocab)), Seq("gh")),
+      log(col("c").cast("double") / col("cctx")), countCol)
+  }
 
   /** Per-doc cross-entropy under the corpus BIGRAM LM — the next rung
     * of the KenLM-style quality ladder above unigramLogprob:
-    * P(w2|w1) = c(w1 w2) / c(w1 ·), both counts taken over the corpus
-    * bigram stream, NLL averaged per document. Docs with fewer than 2
-    * tokens have no bigrams and drop out (identically on both
-    * engines).
+    * P(w2|w1) = c(w1 w2) / c(w1 ·) (`selfLogprob`).
     *
     * Shape at scale: two vocabulary aggregates (bigram, left-context),
     * stream re-joins on those keys, per-doc aggregate — the exact
-    * dataflow a sharded KenLM scoring pass has. Same micro-unit
-    * quantization as unigramLogprob so distributed sum order can't
-    * move the result.
+    * dataflow a sharded KenLM scoring pass has.
     */
-  def bigramLogprob(docs: DataFrame): DataFrame = {
-    // count/join keys are the 60-bit md5 hashes of the bigram and its
-    // left context, not the strings: the three shuffles carry 8-byte
-    // longs (hashing happens once, at scan; the oracle hashes
-    // identically, so collisions — ~n²/2⁶¹ — cannot cause a mismatch)
-    // One tokenize+hash pass, checkpointed: c2, c1 and the final scoring
-    // join all reuse it instead of re-running explode+md5 three times.
-    val bg = docs
-      .withColumn("t", tokens(lower(col("text"))))
-      .select(col("doc_id"), explode(expr(bigramArr)).as("bg"))
-      .select(col("doc_id"), hex60(col("bg")).as("bh"),
-        hex60(expr("split_part(bg, ' ', 1)")).as("w1h"))
-      .localCheckpoint(false)
-    // Vocabulary-grain model: count distinct bigrams once, then derive
-    // the left-context counts from THAT table (w1h is functionally
-    // determined by bh) — the second aggregate runs over |vocab| rows,
-    // not the corpus stream, and the scoring join collapses to one
-    // (AQE broadcasts it when the vocabulary fits).
-    val c2 = bg.groupBy(col("bh"))
-      .agg(max(col("w1h")).as("w1h"), count(lit(1)).as("c2"))
-    val c1 = c2.groupBy(col("w1h")).agg(sum(col("c2")).as("c1"))
-    bg.join(c2.join(c1, Seq("w1h")).select("bh", "c2", "c1"), Seq("bh"))
-      .withColumn("q_nll",
-        round(log(col("c2").cast("double") / col("c1")) * -1000000.0d)
-          .cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("q_nll")).as("q_sum"))
-      .withColumn("avg_nll",
-        round(floor(col("q_sum").cast("double") / col("n_bigrams"))
-          / 1000000.0d, 6))
-      .select(col("doc_id"), col("n_bigrams"), col("avg_nll"))
-  }
-
-  /** Per-row trigram array (duplicates kept, like bigramArr). */
-  private val trigramArr =
-    """CASE WHEN size(t) >= 3
-      |  THEN transform(sequence(1, size(t) - 2),
-      |    i -> concat(t[i-1], ' ', t[i], ' ', t[i+1]))
-      |  ELSE CAST(array() AS array<string>) END""".stripMargin
+  def bigramLogprob(docs: DataFrame): DataFrame =
+    selfLogprob(docs, 2, "n_bigrams")
 
   /** Per-doc cross-entropy under the corpus TRIGRAM LM — the order-3
     * rung of the quality ladder (unigram → bigram → interpolated →
-    * trigram): P(w3|w1 w2) = c(w1 w2 w3) / c(w1 w2 ·). Docs with
-    * fewer than 3 tokens have no trigrams and drop out (identically
-    * on both engines).
-    *
-    * Shape at scale: identical to bigramLogprob one order up — the
-    * context count is derived from the trigram vocabulary table
-    * (ctx hash is functionally determined by the trigram hash), so
-    * the second aggregate runs over |trigram vocab| rows, never the
-    * corpus stream, and all shuffles carry 8-byte hash keys.
+    * trigram): P(w3|w1 w2) = c(w1 w2 w3) / c(w1 w2 ·), the same
+    * dataflow as bigramLogprob one order up (`selfLogprob`).
     */
-  def trigramLogprob(docs: DataFrame): DataFrame = {
-    val tg = docs
-      .withColumn("t", tokens(lower(col("text"))))
-      .select(col("doc_id"), explode(expr(trigramArr)).as("tg"))
-      .select(col("doc_id"), hex60(col("tg")).as("th"),
-        hex60(expr(
-          "concat(split_part(tg, ' ', 1), ' ', split_part(tg, ' ', 2))"))
-          .as("ctxh"))
-      .localCheckpoint(false)
-    val c3 = tg.groupBy(col("th"))
-      .agg(max(col("ctxh")).as("ctxh"), count(lit(1)).as("c3"))
-    val cc = c3.groupBy(col("ctxh")).agg(sum(col("c3")).as("cctx"))
-    tg.join(c3.join(cc, Seq("ctxh")).select("th", "c3", "cctx"), Seq("th"))
-      .withColumn("q_nll",
-        round(log(col("c3").cast("double") / col("cctx")) * -1000000.0d)
-          .cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_trigrams"), sum(col("q_nll")).as("q_sum"))
-      .withColumn("avg_nll",
-        round(floor(col("q_sum").cast("double") / col("n_trigrams"))
-          / 1000000.0d, 6))
-      .select(col("doc_id"), col("n_trigrams"), col("avg_nll"))
-  }
+  def trigramLogprob(docs: DataFrame): DataFrame =
+    selfLogprob(docs, 3, "n_trigrams")
 
   val BpeMergeSteps = 10
 
@@ -386,7 +449,7 @@ object TextAnalysis {
     // codepoint semantics differ off the ASCII plane — the standard
     // BPE pretokenizer restriction, stated identically in the oracle
     var words = docs
-      .select(explode(tokens(lower(col("text")))).as("w"))
+      .select(explode(lowTokens).as("w"))
       .filter(col("w").rlike("^[a-z0-9]+$"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("s"), col("c"))
@@ -428,7 +491,7 @@ object TextAnalysis {
     val seg = bpeCore(docs, k)._2
       .select(regexp_replace(col("s"), " ", "").as("w"),
         size(split(col("s"), " ")).cast("long").as("n_sub"))
-    docs.select(col("doc_id"), explode(tokens(lower(col("text")))).as("w"))
+    docs.select(col("doc_id"), explode(lowTokens).as("w"))
       .filter(col("w").rlike("^[a-z0-9]+$"))
       .join(seg, Seq("w"))
       .groupBy(col("doc_id"))
@@ -463,7 +526,7 @@ object TextAnalysis {
         |seg AS (SELECT replace(s, ' ', '') AS w,
         |  CAST(len(string_split(s, ' ')) AS BIGINT) AS n_sub FROM w$k),
         |dw AS (SELECT doc_id, w FROM (
-        |    SELECT doc_id, unnest(string_split_regex(trim(lower(text)),'\\s+')) AS w
+        |    SELECT doc_id, unnest($tokSql) AS w
         |    FROM documents)
         |  WHERE regexp_matches(w, '^[a-z0-9]+$$'))
         |SELECT doc_id, COUNT(*) AS n_words,
@@ -475,12 +538,12 @@ object TextAnalysis {
   private def bpeLadderSql(k: Int): String = {
     val sb = new StringBuilder
     sb.append(
-      """WITH w0 AS MATERIALIZED (SELECT
-        |  trim(regexp_replace(w, '(.)', '\1 ', 'g')) AS s,
+      s"""WITH w0 AS MATERIALIZED (SELECT
+        |  trim(regexp_replace(w, '(.)', '\\1 ', 'g')) AS s,
         |  CAST(COUNT(*) AS BIGINT) AS c FROM (
-        |    SELECT unnest(string_split_regex(trim(lower(text)),'\s+')) AS w
+        |    SELECT unnest($tokSql) AS w
         |    FROM documents)
-        |  WHERE regexp_matches(w, '^[a-z0-9]+$') GROUP BY 1)""".stripMargin)
+        |  WHERE regexp_matches(w, '^[a-z0-9]+$$') GROUP BY 1)""".stripMargin)
     for (i <- 0 until k) {
       sb.append(s""",
         |pc$i AS MATERIALIZED (SELECT p, CAST(SUM(c) AS BIGINT) AS pc FROM (
@@ -548,7 +611,7 @@ object TextAnalysis {
     */
   private def uniViterbiCore(docs: DataFrame):
       (DataFrame, DataFrame, DataFrame) = {
-    val words = docs.select(explode(tokens(lower(col("text")))).as("w"))
+    val words = docs.select(explode(lowTokens).as("w"))
       .filter(col("w").rlike("^[a-z0-9]+$") &&
         length(col("w")) <= UniMaxWord)
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -673,7 +736,7 @@ object TextAnalysis {
     val sb = new StringBuilder
     sb.append(
       s"""WITH w AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM (
-         |    SELECT unnest(string_split_regex(trim(lower(text)),'\\s+')) AS w
+         |    SELECT unnest($tokSql) AS w
          |    FROM documents)
          |  WHERE regexp_matches(w, '^[a-z0-9]+$$') AND len(w) <= $UniMaxWord
          |  GROUP BY 1),
@@ -763,10 +826,10 @@ object TextAnalysis {
     */
   def collocations(docs: DataFrame, k: Int = CollocTopK,
                    minCount: Long = CollocMinCount): DataFrame = {
-    val toks = docs.withColumn("t", tokens(lower(col("text"))))
+    val toks = docs.withColumn("t", lowTokens)
       .select(col("t"))
       .localCheckpoint(false)
-    val big = toks.select(explode(expr(bigramArr)).as("bg"))
+    val big = toks.select(explode(expr(gramArr(2))).as("bg"))
       .groupBy(col("bg")).agg(count(lit(1)).as("c2"))
       .withColumn("w1h", hex60(expr("split_part(bg, ' ', 1)")))
       .withColumn("w2h", hex60(expr("split_part(bg, ' ', 2)")))
@@ -822,11 +885,8 @@ object TextAnalysis {
     */
   def backoffHeldout(docs: DataFrame): DataFrame = {
     val a2 = BackoffAlpha * BackoffAlpha
-    val withB = docs.withColumn("b", bucket10(col("doc_id"), lit(7L)))
-    val train = withB.filter(col("b") < 8)
-      .withColumn("t", tokens(lower(col("text"))))
-      .select(col("t")).localCheckpoint(false)
-    val evalDocs = withB.filter(col("b") >= 8)
+    val (trainToks, evalToks) = heldoutSplit(docs)
+    val train = trainToks.localCheckpoint(false)
 
     // ONE full-stream explode of the train split: the trigram stream,
     // hashed at scan to (trigram, leading-bigram, first-word) 8-byte
@@ -837,91 +897,63 @@ object TextAnalysis {
     // per doc, read off the checkpointed token arrays without another
     // stream explode. Counts are exact, so the scored values are
     // byte-identical to the three-explode form the oracle runs.
-    val trTg = train
-      .select(explode(expr(trigramArr)).as("tg"))
-      .select(hex60(col("tg")).as("th"),
-        hex60(expr(
-          "concat(split_part(tg, ' ', 1), ' ', split_part(tg, ' ', 2))"))
-          .as("ctxh"),
-        hex60(expr("split_part(tg, ' ', 1)")).as("w1h"))
-    val c3t = trTg.groupBy(col("th"))
-      .agg(max(col("ctxh")).as("ctxh"), max(col("w1h")).as("w1h"),
-        count(lit(1)).as("c3"))
+    val c3t = gramVocab(gramStream(train, 3, "ctxh", "fh"), "ctxh", "fh")
       .localCheckpoint(false) // vocab-grain: feeds cctx, c2, uni, tot
     // Context counts = leading-bigram sums over the trigram vocab
-    // (w1h is functionally determined by ctxh, so max() is exact).
-    val cc = c3t.groupBy(col("ctxh"))
-      .agg(max(col("w1h")).as("lwh"), sum(col("c3")).as("cctx"))
+    // (fh is functionally determined by ctxh, so max() is exact).
+    val cc = ctxCount(c3t, max(col("fh")).as("fh"))
       .localCheckpoint(false) // reused: c3tab join + bigram derivation
-    val c3tab = c3t
-      .join(cc.select(col("ctxh"), col("cctx")), Seq("ctxh"))
-      .select("th", "c3", "cctx")
+    val c3tab = condTable(c3t, cc)
+      .select(col("gh"), col("c").as("c3"), col("cctx"))
     // Full bigram counts = trigram-context sums + the per-doc final
     // bigram (also the ONLY bigram of 2-token docs, which have no
-    // trigrams at all).
+    // trigrams at all); a bigram's context is its first word.
     val edgeBg = train.filter(size(col("t")) >= 2)
       .select(
-        hex60(expr("concat(t[size(t)-2], ' ', t[size(t)-1])")).as("b23h"),
-        hex60(expr("t[size(t)-2]")).as("lwh"))
-      .groupBy(col("b23h"))
-      .agg(max(col("lwh")).as("lwh"), count(lit(1)).as("c"))
+        hex60(expr("concat(t[size(t)-2], ' ', t[size(t)-1])")).as("gh"),
+        hex60(expr("t[size(t)-2]")).as("ctxh"))
+      .groupBy(col("gh"))
+      .agg(max(col("ctxh")).as("ctxh"), count(lit(1)).as("c"))
     val c2t = cc
-      .select(col("ctxh").as("b23h"), col("lwh"), col("cctx").as("c"))
+      .select(col("ctxh").as("gh"), col("fh").as("ctxh"), col("cctx").as("c"))
       .unionByName(edgeBg)
-      .groupBy(col("b23h"))
-      .agg(max(col("lwh")).as("lwh"), sum(col("c")).as("c23"))
-    val c2tab = c2t
-      .join(c2t.groupBy(col("lwh")).agg(sum(col("c23")).as("cl2")),
-        Seq("lwh"))
-      .select("b23h", "c23", "cl2")
+      .groupBy(col("gh"))
+      .agg(max(col("ctxh")).as("ctxh"), sum(col("c")).as("c"))
+    val c2tab = condTable(c2t, ctxCount(c2t))
+      .select(col("gh").as("sfxh"), col("c").as("c23"), col("cctx").as("cl2"))
     // Unigram counts = trigram first-word sums + each doc's last two
     // tokens (or its only token); totals then read off the unigram
     // vocab table instead of a stream-grain countDistinct.
     val edgeUni = train.filter(size(col("t")) >= 1)
       .select(explode(
         expr("slice(t, -least(size(t), 2), least(size(t), 2))")).as("w"))
-      .select(hex60(col("w")).as("wh"))
-      .groupBy(col("wh")).agg(count(lit(1)).as("c"))
+      .select(hex60(col("w")).as("lh"))
+      .groupBy(col("lh")).agg(count(lit(1)).as("c"))
     val uni = c3t
-      .select(col("w1h").as("wh"), col("c3").as("c"))
+      .select(col("fh").as("lh"), col("c"))
       .unionByName(edgeUni)
-      .groupBy(col("wh")).agg(sum(col("c")).as("u3"))
+      .groupBy(col("lh")).agg(sum(col("c")).as("u3"))
       .localCheckpoint(false) // reused: scoring join + totals
     val tot = uni.agg(sum(col("u3")).as("n_total"),
       count(lit(1)).as("v_size"))
 
-    val ev = evalDocs.withColumn("t", tokens(lower(col("text"))))
-      .select(col("doc_id"), explode(expr(trigramArr)).as("tg"))
-      .select(col("doc_id"), hex60(col("tg")).as("th"),
-        hex60(expr(
-          "concat(split_part(tg, ' ', 2), ' ', split_part(tg, ' ', 3))"))
-          .as("b23h"),
-        hex60(expr("split_part(tg, ' ', 3)")).as("w3h"))
-    ev.join(c3tab, Seq("th"), "left")
-      .join(c2tab, Seq("b23h"), "left")
-      .join(uni.withColumnRenamed("wh", "w3h"), Seq("w3h"), "left")
+    val scored = gramStream(evalToks, 3, "sfxh", "lh")
+      .join(c3tab, Seq("gh"), "left")
+      .join(c2tab, Seq("sfxh"), "left")
+      .join(uni, Seq("lh"), "left")
       .crossJoin(broadcast(tot)) // 1-row totals
       .withColumn("backed",
         when(col("c3").isNotNull, 0)
           .when(col("c23").isNotNull, 1).otherwise(2))
-      .withColumn("q_nll", round(
-        when(col("c3").isNotNull,
-          log(col("c3").cast("double") / col("cctx")))
-          .when(col("c23").isNotNull,
-            log(lit(BackoffAlpha) * (col("c23").cast("double") / col("cl2"))))
-          .otherwise(log(lit(a2) *
-            ((coalesce(col("u3"), lit(0L)) + 1).cast("double") /
-              (col("n_total") + col("v_size") + 1))))
-          * -1000000.0d).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum((col("backed") >= 1).cast("long")).as("n_backoff"),
-        sum(col("q_nll")).as("q_sum"))
-      .withColumn("avg_nll",
-        round(floor(col("q_sum").cast("double") / col("n_trigrams"))
-          / 1000000.0d, 6))
-      .select(col("doc_id"), col("n_trigrams"), col("n_backoff"),
-        col("avg_nll"))
+    perDocNll(scored,
+      when(col("c3").isNotNull,
+        log(col("c3").cast("double") / col("cctx")))
+        .when(col("c23").isNotNull,
+          log(lit(BackoffAlpha) * (col("c23").cast("double") / col("cl2"))))
+        .otherwise(log(lit(a2) *
+          ((coalesce(col("u3"), lit(0L)) + 1).cast("double") /
+            (col("n_total") + col("v_size") + 1)))),
+      "n_trigrams", sum((col("backed") >= 1).cast("long")).as("n_backoff"))
   }
 
   val CoocWindow = 2
@@ -932,7 +964,7 @@ object TextAnalysis {
     * consumes, one ring out from collocations' adjacent-bigram PMI:
     * every token pairs with its neighbors at distances 1..window on
     * BOTH sides. Pairs come out of one per-row generator over the
-    * token array (offset-o pairs per offset, the bigramArr device —
+    * token array (offset-o pairs per offset, the gramArr device —
     * no positional self-join, which would shuffle the corpus once
     * per offset), direction symmetry is a unionByName before the
     * count, the count aggregate groups on 8-byte hashes at
@@ -948,7 +980,7 @@ object TextAnalysis {
          |      i -> struct(t[i] AS w, t[i + o] AS c))
          |    ELSE CAST(array() AS array<struct<w:string,c:string>>)
          |  END))""".stripMargin
-    val pr = docs.withColumn("t", tokens(lower(col("text"))))
+    val pr = docs.withColumn("t", lowTokens)
       .select(explode(expr(pairArr)).as("p"))
       .select(col("p.w").as("w"), col("p.c").as("c"))
       .localCheckpoint(false) // both directions of the union
@@ -983,56 +1015,34 @@ object TextAnalysis {
     * operand by the oracle.
     */
   def knHeldout(docs: DataFrame): DataFrame = {
-    val withB = docs.withColumn("b", bucket10(col("doc_id"), lit(7L)))
-    val train = withB.filter(col("b") < 8)
-      .withColumn("t", tokens(lower(col("text"))))
-    val evalDocs = withB.filter(col("b") >= 8)
-      .withColumn("t", tokens(lower(col("text"))))
-    val trBg = train.select(explode(expr(bigramArr)).as("bg"))
-      .select(hex60(col("bg")).as("bgh"),
-        hex60(expr("split_part(bg, ' ', 1)")).as("w1h"),
-        hex60(expr("split_part(bg, ' ', 2)")).as("w2h"))
-    // Bigram vocabulary — every other model table derives from it.
-    val c2t = trBg.groupBy(col("bgh"))
-      .agg(max(col("w1h")).as("w1h"), max(col("w2h")).as("w2h"),
-        count(lit(1)).as("c12"))
+    val (trainToks, evalToks) = heldoutSplit(docs)
+    // Bigram vocabulary — every other model table derives from it. A
+    // bigram's context is its first word: `cctx` is c1, `c` is c12.
+    val c2t = gramVocab(gramStream(trainToks, 2, "ctxh", "lh"), "ctxh", "lh")
       .localCheckpoint(false) // feeds left/right/totals + scoring join
-    val left = c2t.groupBy(col("w1h"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1f"))
-    val right = c2t.groupBy(col("w2h")).agg(count(lit(1)).as("n1b"))
+    val left = ctxCount(c2t, count(lit(1)).as("n1f"))
+    val right = c2t.groupBy(col("lh")).agg(count(lit(1)).as("n1b"))
     val tot = c2t.agg(count(lit(1)).as("n_types"),
-      countDistinct(col("w2h")).as("n_cont"))
-    val ev = evalDocs
-      .select(col("doc_id"), explode(expr(bigramArr)).as("bg"))
-      .select(col("doc_id"), hex60(col("bg")).as("bgh"),
-        hex60(expr("split_part(bg, ' ', 1)")).as("w1h"),
-        hex60(expr("split_part(bg, ' ', 2)")).as("w2h"))
+      countDistinct(col("lh")).as("n_cont"))
     val pc = (coalesce(col("n1b"), lit(0L)) + lit(1L)).cast("double") /
       (col("n_types") + col("n_cont") + lit(1L)).cast("double")
-    ev.join(c2t.select(col("bgh"), col("c12")), Seq("bgh"), "left")
-      .join(left, Seq("w1h"), "left")
-      .join(right, Seq("w2h"), "left")
+    val scored = gramStream(evalToks, 2, "ctxh", "lh")
+      .join(c2t.select(col("gh"), col("c")), Seq("gh"), "left")
+      .join(left, Seq("ctxh"), "left")
+      .join(right, Seq("lh"), "left")
       .crossJoin(broadcast(tot)) // 1-row totals
       .withColumn("pc", pc)
-      .withColumn("q_nll", round(
-        when(col("c1").isNotNull,
-          log((greatest(coalesce(col("c12"), lit(0L)).cast("double")
-            - lit(KnDiscount), lit(0.0d))
-            + lit(KnDiscount) * col("n1f").cast("double") * col("pc"))
-            / col("c1").cast("double")))
-          .otherwise(log(col("pc")))
-          * -1000000.0d).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("c1").isNull.cast("long")).as("n_unseen_ctx"),
-        sum((col("c1").isNotNull && col("c12").isNull).cast("long"))
-          .as("n_discounted_zero"),
-        sum(col("q_nll")).as("q_sum"))
-      .withColumn("avg_nll",
-        round(floor(col("q_sum").cast("double") / col("n_bigrams"))
-          / 1000000.0d, 6))
-      .select(col("doc_id"), col("n_bigrams"), col("n_unseen_ctx"),
-        col("n_discounted_zero"), col("avg_nll"))
+    perDocNll(scored,
+      when(col("cctx").isNotNull,
+        log((greatest(coalesce(col("c"), lit(0L)).cast("double")
+          - lit(KnDiscount), lit(0.0d))
+          + lit(KnDiscount) * col("n1f").cast("double") * col("pc"))
+          / col("cctx").cast("double")))
+        .otherwise(log(col("pc"))),
+      "n_bigrams",
+      sum(col("cctx").isNull.cast("long")).as("n_unseen_ctx"),
+      sum((col("cctx").isNotNull && col("c").isNull).cast("long"))
+        .as("n_discounted_zero"))
   }
 
   /** PII span patterns — the RE2 ∩ Java-regex common subset (char
@@ -1053,7 +1063,7 @@ object TextAnalysis {
     */
   def tokenEntropy(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      explode(tokens(lower(col("text")))).as("tok"))
+      explode(lowTokens).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("c"))
       .select(col("doc_id"), col("c"),
@@ -1146,8 +1156,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("q6")).as("sq"), sum(col("k")).as("n_keep"))
       .select(col("source"), col("lang"), col("n_docs"),
-        round(floor(col("sq").cast("double") / col("n_docs")) / 1000000.0d, 6)
-          .as("avg_quality"),
+        microMean(col("sq"), col("n_docs")).as("avg_quality"),
         col("n_keep"),
         round(col("n_keep").cast("double") / col("n_docs"), 6)
           .as("keep_rate"))
@@ -1174,8 +1183,8 @@ object TextAnalysis {
     */
   def repetition(docs: DataFrame): DataFrame =
     docs
-      .withColumn("t", tokens(lower(col("text"))))
-      .withColumn("bg", expr(bigramArr))
+      .withColumn("t", lowTokens)
+      .withColumn("bg", expr(gramArr(2)))
       .select(
         col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
@@ -1412,7 +1421,7 @@ object TextAnalysis {
     */
   def keywords(docs: DataFrame, k: Int = KeywordsK): DataFrame = {
     val tok = docs.select(col("doc_id"),
-      explode(tokens(lower(col("text")))).as("tk"))
+      explode(lowTokens).as("tk"))
     val tf = tok.groupBy(col("doc_id"), col("tk"))
       .agg(count(lit(1)).as("tf")).localCheckpoint(false)
     val df = tf.groupBy(col("tk")).agg(count(lit(1)).as("df"))
@@ -1452,7 +1461,7 @@ object TextAnalysis {
   def invertedIndex(docs: DataFrame, k: Int = PostingsK,
                     minDf: Long = PostingsMinDf): DataFrame = {
     val tf = docs.select(col("doc_id"),
-      explode(tokens(lower(col("text")))).as("term"))
+      explode(lowTokens).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
       .localCheckpoint(false) // stats aggregate + postings window
@@ -1496,9 +1505,9 @@ object TextAnalysis {
     */
   def phraseSearch(docsDf: DataFrame,
                    topDocs: Int = PhraseTopDocs): DataFrame = {
-    val tk = docsDf.select(col("doc_id"), tokens(lower(col("text"))).as("t"))
+    val tk = docsDf.select(col("doc_id"), lowTokens.as("t"))
       .localCheckpoint(false) // phrase pick + both posting sides
-    val top = tk.select(explode(expr(bigramArr)).as("phrase"))
+    val top = tk.select(explode(expr(gramArr(2))).as("phrase"))
       .groupBy(col("phrase")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("phrase")).limit(1)
       .select(col("phrase"),
@@ -1533,36 +1542,22 @@ object TextAnalysis {
     */
   def interpLogprob(docs: DataFrame,
                     lambda: Double = InterpLambda): DataFrame = {
-    val bg = docs
-      .withColumn("t", tokens(lower(col("text"))))
-      .select(col("doc_id"), explode(expr(bigramArr)).as("bg"))
-      .select(col("doc_id"), hex60(col("bg")).as("bh"),
-        hex60(expr("split_part(bg, ' ', 1)")).as("w1h"),
-        hex60(expr("split_part(bg, ' ', 2)")).as("w2h"))
-      .localCheckpoint(false)
+    val bg = gramStream(docs.select(col("doc_id"), lowTokens.as("t")),
+      2, "ctxh", "lh").localCheckpoint(false)
     val tok = docs
-      .select(explode(tokens(lower(col("text")))).as("w"))
-      .select(hex60(col("w")).as("wh"))
+      .select(explode(lowTokens).as("w"))
+      .select(hex60(col("w")).as("lh"))
       .localCheckpoint(false)
-    val uni = tok.groupBy(col("wh")).agg(count(lit(1)).as("u"))
+    val uni = tok.groupBy(col("lh")).agg(count(lit(1)).as("u"))
     val nTot = tok.agg(count(lit(1)).as("n_total"))
-    val c2 = bg.groupBy(col("bh"))
-      .agg(max(col("w1h")).as("w1h"), count(lit(1)).as("c2"))
-    val c1 = c2.groupBy(col("w1h")).agg(sum(col("c2")).as("c1"))
-    val vocab = c2.join(c1, Seq("w1h")).select("bh", "c2", "c1")
-    bg.join(vocab, Seq("bh"))
-      .join(uni.withColumnRenamed("wh", "w2h"), Seq("w2h"))
+    val vocab = gramVocab(bg, "ctxh")
+    val scored = bg.join(condTable(vocab, ctxCount(vocab)), Seq("gh"))
+      .join(uni, Seq("lh"))
       .crossJoin(broadcast(nTot)) // 1-row total
-      .withColumn("q_nll",
-        round(-log(lit(lambda) * (col("c2").cast("double") / col("c1"))
-          + lit(1.0d - lambda) * (col("u").cast("double") / col("n_total")))
-          * 1000000.0d).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("q_nll")).as("q_sum"))
-      .withColumn("avg_nll",
-        round(floor(col("q_sum").cast("double") / col("n_bigrams"))
-          / 1000000.0d, 6))
-      .select(col("doc_id"), col("n_bigrams"), col("avg_nll"))
+    perDocNll(scored,
+      log(lit(lambda) * (col("c").cast("double") / col("cctx"))
+        + lit(1.0d - lambda) * (col("u").cast("double") / col("n_total"))),
+      "n_bigrams")
   }
 
   val SpanDupMax = 0.3
@@ -1603,7 +1598,7 @@ object TextAnalysis {
     */
   private[graft] def spanWindows(docs: DataFrame, w: Int): DataFrame =
     docs.filter(length(trim(col("text"))) > 0)
-      .select(col("doc_id"), tokens(lower(col("text"))).as("t"))
+      .select(col("doc_id"), lowTokens.as("t"))
       .filter(size(col("t")) >= w)
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, size(t) - $w), p -> " +
@@ -1741,14 +1736,13 @@ object TextAnalysis {
     */
   private def spanWinSql(w: Int): String =
     s"""tk AS (SELECT doc_id,
-       |    string_split_regex(trim(lower(text)),'\\s+') AS t
+       |    $tokSql AS t
        |  FROM documents WHERE len(trim(text)) > 0),
        |wn AS (SELECT doc_id, t,
        |    unnest(generate_series(0, len(t) - $w)) AS s
        |  FROM tk WHERE len(t) >= $w),
        |wf AS (SELECT doc_id, s,
-       |    CAST(concat('0x', substr(md5(
-       |      array_to_string(t[s+1 : s+$w], ' ')),1,15)) AS BIGINT) AS fp
+       |    ${hex60Sql(s"\n      array_to_string(t[s+1 : s+$w], ' ')")} AS fp
        |  FROM wn)""".stripMargin
 
   private val spanMergeTailSql =
@@ -1857,7 +1851,7 @@ object TextAnalysis {
         count(lit(1)).as("n_spans"),
         coalesce(sum(col("span_tokens")), lit(0L)).as("dup_tokens"))
     val tot = docs.filter(length(trim(col("text"))) > 0)
-      .select(size(tokens(lower(col("text")))).cast("long").as("n"))
+      .select(size(lowTokens).cast("long").as("n"))
       .agg(sum(col("n")).as("total_tokens"))
     spans.crossJoin(tot) // 1 row × 1 row
       .withColumn("dup_ppm",
@@ -1899,7 +1893,7 @@ object TextAnalysis {
       .agg(collect_list(struct(col("span_start").as("s"),
         col("span_end").as("e"))).as("sp"))
     val tk = docs.filter(length(trim(col("text"))) > 0)
-      .select(col("doc_id"), tokens(lower(col("text"))).as("t"))
+      .select(col("doc_id"), lowTokens.as("t"))
     tk.join(spans, Seq("doc_id"), "left")
       .withColumn("sp", coalesce(col("sp"),
         expr("cast(array() as array<struct<s:bigint,e:bigint>>)")))
@@ -2089,9 +2083,9 @@ object TextAnalysis {
 
     QueryDef("txt_fingerprint",
       (s, d) => fingerprint(docs(s, d)),
-      Some("""SELECT doc_id,
-             |md5(lower(regexp_replace(trim(text),'\s+',' ','g'))) AS fp,
-             |CAST(concat('0x', substr(md5(lower(regexp_replace(trim(text),'\s+',' ','g'))),1,15)) AS BIGINT) AS fp_int
+      Some(s"""SELECT doc_id,
+             |md5(lower(regexp_replace(trim(text),'\\s+',' ','g'))) AS fp,
+             |${hex60Sql("lower(regexp_replace(trim(text),'\\s+',' ','g'))")} AS fp_int
              |FROM documents""".stripMargin)),
 
     // BPE-ish tokenizer: letter runs / digit runs / punctuation runs
@@ -2198,8 +2192,8 @@ object TextAnalysis {
 
     QueryDef("txt_unigram_logprob",
       (s, d) => unigramLogprob(docs(s, d)),
-      Some("""WITH tok AS (SELECT doc_id,
-             |    unnest(string_split_regex(trim(lower(text)),'\s+')) AS tk
+      Some(s"""WITH tok AS (SELECT doc_id,
+             |    unnest($tokSql) AS tk
              |  FROM documents),
              |vocab AS (SELECT tk, COUNT(*) AS cnt FROM tok GROUP BY 1),
              |tot AS (SELECT SUM(cnt) AS total FROM vocab),
@@ -2207,7 +2201,7 @@ object TextAnalysis {
              |    CAST(ROUND(ln(CAST(cnt AS DOUBLE) / total) * -1000000.0) AS BIGINT) AS q_nll
              |  FROM tok JOIN vocab USING (tk), tot)
              |SELECT doc_id, COUNT(*) AS n_tokens,
-             |ROUND(FLOOR(CAST(SUM(q_nll) AS DOUBLE) / COUNT(*)) / 1000000.0, 6) AS avg_nll
+             |$avgNllSql
              |FROM scored GROUP BY doc_id""".stripMargin)),
 
     QueryDef("txt_bm25",
@@ -2217,7 +2211,7 @@ object TextAnalysis {
         val k1p1 = s"${Bm25K1 + 1}"
         val oneMinusB = s"${1 - Bm25B}"
         val tfCols = terms.map(w =>
-          s"""CAST(len(list_filter(string_split_regex(trim(lower(text)),'\\s+'),
+          s"""CAST(len(list_filter($tokSql,
              |      x -> x = '$w')) AS BIGINT) AS tf_$w""".stripMargin)
           .mkString(",\n    ")
         val dfCols = terms.map(w =>
@@ -2230,7 +2224,7 @@ object TextAnalysis {
              |      / (CAST(sum_dl AS DOUBLE) / n_docs))))""".stripMargin)
           .mkString("\n  + ")
         s"""WITH base AS (SELECT doc_id,
-           |    CAST(len(string_split_regex(trim(lower(text)),'\\s+')) AS BIGINT) AS dl,
+           |    CAST(len($tokSql) AS BIGINT) AS dl,
            |    $tfCols
            |  FROM documents),
            |stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2260,8 +2254,8 @@ object TextAnalysis {
           .select(col("rank").cast("long").as("rank"),
             col("ngram"), col("n_docs"))
       },
-      Some("""WITH toks AS (SELECT doc_id,
-             |    string_split_regex(trim(lower(text)),'\s+') t FROM documents),
+      Some(s"""WITH toks AS (SELECT doc_id,
+             |    $tokSql t FROM documents),
              |sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
              |    generate_series(1, greatest(len(t)-2, 0)),
              |    i -> array_to_string(t[i:i+2], ' ')))) AS s
@@ -2290,44 +2284,38 @@ object TextAnalysis {
 
     QueryDef("txt_bigram_logprob",
       (s, d) => bigramLogprob(docs(s, d)),
-      Some("""WITH tk AS (SELECT doc_id,
-             |    string_split_regex(trim(lower(text)),'\s+') AS t FROM documents),
+      Some(s"""WITH tk AS (SELECT doc_id,
+             |    $tokSql AS t FROM documents),
              |b2 AS (SELECT doc_id,
-             |    CAST(concat('0x', substr(md5(bg),1,15)) AS BIGINT) AS bh,
-             |    CAST(concat('0x', substr(md5(split_part(bg, ' ', 1)),1,15)) AS BIGINT) AS w1h
+             |    ${hex60Sql("bg")} AS bh,
+             |    ${hex60Sql("split_part(bg, ' ', 1)")} AS w1h
              |  FROM (
-             |  SELECT doc_id, unnest(list_transform(
-             |    generate_series(1, greatest(len(t)-1, 0)),
-             |    i -> t[i] || ' ' || t[i+1])) AS bg FROM tk)),
+             |  SELECT doc_id, unnest(${gramsSql(2)}) AS bg FROM tk)),
              |c2 AS (SELECT bh, COUNT(*) AS c2 FROM b2 GROUP BY 1),
              |c1 AS (SELECT w1h, COUNT(*) AS c1 FROM b2 GROUP BY 1),
              |scored AS (SELECT doc_id,
              |    CAST(ROUND(ln(CAST(c2.c2 AS DOUBLE) / c1.c1) * -1000000.0) AS BIGINT) AS q_nll
              |  FROM b2 JOIN c2 USING (bh) JOIN c1 USING (w1h))
              |SELECT doc_id, COUNT(*) AS n_bigrams,
-             |ROUND(FLOOR(CAST(SUM(q_nll) AS DOUBLE) / COUNT(*)) / 1000000.0, 6) AS avg_nll
+             |$avgNllSql
              |FROM scored GROUP BY doc_id""".stripMargin)),
 
     QueryDef("txt_trigram_logprob",
       (s, d) => trigramLogprob(docs(s, d)),
-      Some("""WITH tk AS (SELECT doc_id,
-             |    string_split_regex(trim(lower(text)),'\s+') AS t FROM documents),
+      Some(s"""WITH tk AS (SELECT doc_id,
+             |    $tokSql AS t FROM documents),
              |t3 AS (SELECT doc_id,
-             |    CAST(concat('0x', substr(md5(tg),1,15)) AS BIGINT) AS th,
-             |    CAST(concat('0x', substr(md5(
-             |      split_part(tg, ' ', 1) || ' ' || split_part(tg, ' ', 2)
-             |    ),1,15)) AS BIGINT) AS ctxh
+             |    ${hex60Sql("tg")} AS th,
+             |    ${hex60Sql("\n      split_part(tg, ' ', 1) || ' ' || split_part(tg, ' ', 2)\n    ")} AS ctxh
              |  FROM (
-             |  SELECT doc_id, unnest(list_transform(
-             |    generate_series(1, greatest(len(t)-2, 0)),
-             |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS tg FROM tk)),
+             |  SELECT doc_id, unnest(${gramsSql(3)}) AS tg FROM tk)),
              |c3 AS (SELECT th, COUNT(*) AS c3 FROM t3 GROUP BY 1),
              |cc AS (SELECT ctxh, COUNT(*) AS cctx FROM t3 GROUP BY 1),
              |scored AS (SELECT doc_id,
              |    CAST(ROUND(ln(CAST(c3.c3 AS DOUBLE) / cc.cctx) * -1000000.0) AS BIGINT) AS q_nll
              |  FROM t3 JOIN c3 USING (th) JOIN cc USING (ctxh))
              |SELECT doc_id, COUNT(*) AS n_trigrams,
-             |ROUND(FLOOR(CAST(SUM(q_nll) AS DOUBLE) / COUNT(*)) / 1000000.0, 6) AS avg_nll
+             |$avgNllSql
              |FROM scored GROUP BY doc_id""".stripMargin)),
 
     QueryDef("txt_bpe_merges",
@@ -2355,41 +2343,31 @@ object TextAnalysis {
       (s, d) => backoffHeldout(docs(s, d)),
       Some {
         val a2 = BackoffAlpha * BackoffAlpha
-        val h = (x: String) =>
-          s"CAST(concat('0x', substr(md5($x),1,15)) AS BIGINT)"
-        s"""WITH db AS (SELECT doc_id,
-           |    string_split_regex(trim(lower(text)),'\\s+') AS t,
-           |    ((doc_id % 100003) * 31 + 7 * 97) % 10 AS b FROM documents),
-           |ttok AS (SELECT ${h("w")} AS wh FROM (
+        s"""WITH $heldoutSql,
+           |ttok AS (SELECT ${hex60Sql("w")} AS wh FROM (
            |  SELECT unnest(t) AS w FROM db WHERE b < 8)),
            |uni AS (SELECT wh, CAST(COUNT(*) AS BIGINT) AS u3 FROM ttok GROUP BY 1),
            |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
            |  CAST(COUNT(DISTINCT wh) AS BIGINT) AS v_size FROM ttok),
-           |tbg AS (SELECT ${h("bg")} AS b23h,
-           |    ${h("split_part(bg, ' ', 1)")} AS lwh FROM (
-           |  SELECT unnest(list_transform(
-           |    generate_series(1, greatest(len(t)-1, 0)),
-           |    i -> t[i] || ' ' || t[i+1])) AS bg FROM db WHERE b < 8)),
+           |tbg AS (SELECT ${hex60Sql("bg")} AS b23h,
+           |    ${hex60Sql("split_part(bg, ' ', 1)")} AS lwh FROM (
+           |  SELECT unnest(${gramsSql(2)}) AS bg FROM db WHERE b < 8)),
            |c2t AS (SELECT b23h, MAX(lwh) AS lwh,
            |  CAST(COUNT(*) AS BIGINT) AS c23 FROM tbg GROUP BY 1),
            |cl AS (SELECT lwh, CAST(SUM(c23) AS BIGINT) AS cl2 FROM c2t GROUP BY 1),
            |c2tab AS (SELECT b23h, c23, cl2 FROM c2t JOIN cl USING (lwh)),
-           |ttg AS (SELECT ${h("tg")} AS th,
-           |    ${h("split_part(tg, ' ', 1) || ' ' || split_part(tg, ' ', 2)")} AS ctxh
-           |  FROM (SELECT unnest(list_transform(
-           |    generate_series(1, greatest(len(t)-2, 0)),
-           |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS tg
+           |ttg AS (SELECT ${hex60Sql("tg")} AS th,
+           |    ${hex60Sql("split_part(tg, ' ', 1) || ' ' || split_part(tg, ' ', 2)")} AS ctxh
+           |  FROM (SELECT unnest(${gramsSql(3)}) AS tg
            |  FROM db WHERE b < 8)),
            |c3t AS (SELECT th, MAX(ctxh) AS ctxh,
            |  CAST(COUNT(*) AS BIGINT) AS c3 FROM ttg GROUP BY 1),
            |cc AS (SELECT ctxh, CAST(SUM(c3) AS BIGINT) AS cctx FROM c3t GROUP BY 1),
            |c3tab AS (SELECT th, c3, cctx FROM c3t JOIN cc USING (ctxh)),
-           |ev AS (SELECT doc_id, ${h("tg")} AS th,
-           |    ${h("split_part(tg, ' ', 2) || ' ' || split_part(tg, ' ', 3)")} AS b23h,
-           |    ${h("split_part(tg, ' ', 3)")} AS w3h
-           |  FROM (SELECT doc_id, unnest(list_transform(
-           |    generate_series(1, greatest(len(t)-2, 0)),
-           |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS tg
+           |ev AS (SELECT doc_id, ${hex60Sql("tg")} AS th,
+           |    ${hex60Sql("split_part(tg, ' ', 2) || ' ' || split_part(tg, ' ', 3)")} AS b23h,
+           |    ${hex60Sql("split_part(tg, ' ', 3)")} AS w3h
+           |  FROM (SELECT doc_id, unnest(${gramsSql(3)}) AS tg
            |  FROM db WHERE b >= 8)),
            |scored AS (SELECT doc_id,
            |  CASE WHEN c3 IS NOT NULL THEN 0
@@ -2404,24 +2382,18 @@ object TextAnalysis {
            |  LEFT JOIN uni ON ev.w3h = uni.wh, tot)
            |SELECT doc_id, COUNT(*) AS n_trigrams,
            |CAST(SUM(CASE WHEN backed >= 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_backoff,
-           |ROUND(FLOOR(CAST(SUM(q_nll) AS DOUBLE) / COUNT(*)) / 1000000.0, 6) AS avg_nll
+           |$avgNllSql
            |FROM scored GROUP BY 1""".stripMargin
       }),
 
     QueryDef("txt_kn_heldout",
       (s, d) => knHeldout(docs(s, d)),
       Some {
-        val h = (x: String) =>
-          s"CAST(concat('0x', substr(md5($x),1,15)) AS BIGINT)"
-        s"""WITH db AS (SELECT doc_id,
-           |    string_split_regex(trim(lower(text)),'\\s+') AS t,
-           |    ((doc_id % 100003) * 31 + 7 * 97) % 10 AS b FROM documents),
-           |tbg AS (SELECT ${h("bg")} AS bgh,
-           |    ${h("split_part(bg, ' ', 1)")} AS w1h,
-           |    ${h("split_part(bg, ' ', 2)")} AS w2h FROM (
-           |  SELECT unnest(list_transform(
-           |    generate_series(1, greatest(len(t)-1, 0)),
-           |    i -> t[i] || ' ' || t[i+1])) AS bg FROM db WHERE b < 8)),
+        s"""WITH $heldoutSql,
+           |tbg AS (SELECT ${hex60Sql("bg")} AS bgh,
+           |    ${hex60Sql("split_part(bg, ' ', 1)")} AS w1h,
+           |    ${hex60Sql("split_part(bg, ' ', 2)")} AS w2h FROM (
+           |  SELECT unnest(${gramsSql(2)}) AS bg FROM db WHERE b < 8)),
            |c2t AS (SELECT bgh, MAX(w1h) AS w1h, MAX(w2h) AS w2h,
            |  CAST(COUNT(*) AS BIGINT) AS c12 FROM tbg GROUP BY 1),
            |lft AS (SELECT w1h, CAST(SUM(c12) AS BIGINT) AS c1,
@@ -2429,12 +2401,10 @@ object TextAnalysis {
            |rgt AS (SELECT w2h, CAST(COUNT(*) AS BIGINT) AS n1b FROM c2t GROUP BY 1),
            |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_types,
            |  CAST(COUNT(DISTINCT w2h) AS BIGINT) AS n_cont FROM c2t),
-           |ev AS (SELECT doc_id, ${h("bg")} AS bgh,
-           |    ${h("split_part(bg, ' ', 1)")} AS w1h,
-           |    ${h("split_part(bg, ' ', 2)")} AS w2h
-           |  FROM (SELECT doc_id, unnest(list_transform(
-           |    generate_series(1, greatest(len(t)-1, 0)),
-           |    i -> t[i] || ' ' || t[i+1])) AS bg FROM db WHERE b >= 8)),
+           |ev AS (SELECT doc_id, ${hex60Sql("bg")} AS bgh,
+           |    ${hex60Sql("split_part(bg, ' ', 1)")} AS w1h,
+           |    ${hex60Sql("split_part(bg, ' ', 2)")} AS w2h
+           |  FROM (SELECT doc_id, unnest(${gramsSql(2)}) AS bg FROM db WHERE b >= 8)),
            |scored AS (SELECT doc_id,
            |  CASE WHEN c1 IS NULL THEN 1 ELSE 0 END AS unseen,
            |  CASE WHEN c1 IS NOT NULL AND c12 IS NULL THEN 1 ELSE 0 END AS dzero,
@@ -2451,7 +2421,7 @@ object TextAnalysis {
            |SELECT doc_id, COUNT(*) AS n_bigrams,
            |CAST(SUM(unseen) AS BIGINT) AS n_unseen_ctx,
            |CAST(SUM(dzero) AS BIGINT) AS n_discounted_zero,
-           |ROUND(FLOOR(CAST(SUM(q_nll) AS DOUBLE) / COUNT(*)) / 1000000.0, 6) AS avg_nll
+           |$avgNllSql
            |FROM scored GROUP BY 1""".stripMargin
       }),
 
@@ -2460,9 +2430,7 @@ object TextAnalysis {
     QueryDef("txt_window_cooc",
       (s, d) => windowCooc(docs(s, d)),
       Some {
-        val h = (x: String) =>
-          s"CAST(concat('0x', substr(md5($x),1,15)) AS BIGINT)"
-        s"""WITH tk AS (SELECT string_split_regex(trim(lower(text)),'\\s+') AS t
+        s"""WITH tk AS (SELECT $tokSql AS t
            |  FROM documents),
            |pr AS (SELECT p['w'] AS w, p['c'] AS c FROM (
            |  SELECT unnest(flatten(list_transform(
@@ -2470,7 +2438,7 @@ object TextAnalysis {
            |    list_transform(generate_series(1, greatest(len(t) - o, 0)),
            |      i -> {'w': t[i], 'c': t[i + o]})))) AS p FROM tk)),
            |bi AS (SELECT w, c FROM pr UNION ALL SELECT c AS w, w AS c FROM pr),
-           |cnt AS (SELECT ${h("w")} AS wh, ${h("c")} AS ch,
+           |cnt AS (SELECT ${hex60Sql("w")} AS wh, ${hex60Sql("c")} AS ch,
            |    MAX(w) AS w, MAX(c) AS c, CAST(COUNT(*) AS BIGINT) AS n_cooc
            |  FROM bi GROUP BY 1, 2)
            |SELECT w, c, n_cooc FROM cnt
@@ -2480,25 +2448,19 @@ object TextAnalysis {
     QueryDef("txt_collocations",
       (s, d) => collocations(docs(s, d)),
       Some {
-        // join keys hashed exactly like the Spark side (hex60), so a
-        // collision merges the same counts on both engines
-        val h = (x: String) =>
-          s"CAST(concat('0x', substr(md5($x),1,15)) AS BIGINT)"
-        s"""WITH tk AS (SELECT string_split_regex(trim(lower(text)),'\\s+') AS t
+        s"""WITH tk AS (SELECT $tokSql AS t
            |  FROM documents),
            |tot AS (SELECT CAST(SUM(len(t)) AS BIGINT) AS n1,
            |    CAST(SUM(greatest(len(t)-1, 0)) AS BIGINT) AS n2 FROM tk),
-           |uni AS (SELECT ${h("w")} AS wh, COUNT(*) AS c1 FROM
+           |uni AS (SELECT ${hex60Sql("w")} AS wh, COUNT(*) AS c1 FROM
            |  (SELECT unnest(t) AS w FROM tk) GROUP BY 1),
-           |bgs AS (SELECT unnest(list_transform(
-           |    generate_series(1, greatest(len(t)-1, 0)),
-           |    i -> t[i] || ' ' || t[i+1])) AS bg FROM tk),
+           |bgs AS (SELECT unnest(${gramsSql(2)}) AS bg FROM tk),
            |c2t AS (SELECT bg, COUNT(*) AS c2 FROM bgs GROUP BY 1
            |  HAVING COUNT(*) >= $CollocMinCount),
            |sp AS (SELECT bg, c2, split_part(bg,' ',1) AS w1,
            |    split_part(bg,' ',2) AS w2,
-           |    ${h("split_part(bg,' ',1)")} AS w1h,
-           |    ${h("split_part(bg,' ',2)")} AS w2h FROM c2t),
+           |    ${hex60Sql("split_part(bg,' ',1)")} AS w1h,
+           |    ${hex60Sql("split_part(bg,' ',2)")} AS w2h FROM c2t),
            |j AS (SELECT w1, w2, c2,
            |  CAST(ROUND(ln((c2*1.0/n2)/((a.c1*1.0/n1)*(b.c1*1.0/n1))) * 1000000)
            |    AS BIGINT) AS q
@@ -2512,7 +2474,7 @@ object TextAnalysis {
     QueryDef("txt_inverted_index",
       (s, d) => invertedIndex(docs(s, d)),
       Some(s"""WITH tok AS (SELECT doc_id,
-              |    unnest(string_split_regex(trim(lower(text)),'\\s+')) AS term
+              |    unnest($tokSql) AS term
               |  FROM documents),
               |tf AS (SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
               |  FROM tok GROUP BY 1, 2),
@@ -2532,7 +2494,7 @@ object TextAnalysis {
     QueryDef("txt_keywords",
       (s, d) => keywords(docs(s, d)),
       Some(s"""WITH tok AS (SELECT doc_id,
-              |    unnest(string_split_regex(trim(lower(text)),'\\s+')) AS tk
+              |    unnest($tokSql) AS tk
               |  FROM documents),
               |tf AS (SELECT doc_id, tk, CAST(COUNT(*) AS BIGINT) AS tf
               |  FROM tok GROUP BY 1, 2),
@@ -2553,16 +2515,14 @@ object TextAnalysis {
     QueryDef("txt_interp_logprob",
       (s, d) => interpLogprob(docs(s, d)),
       Some(s"""WITH tk AS (SELECT doc_id,
-              |    string_split_regex(trim(lower(text)),'\\s+') AS t FROM documents),
+              |    $tokSql AS t FROM documents),
               |b2 AS (SELECT doc_id,
-              |    CAST(concat('0x', substr(md5(bg),1,15)) AS BIGINT) AS bh,
-              |    CAST(concat('0x', substr(md5(split_part(bg, ' ', 1)),1,15)) AS BIGINT) AS w1h,
-              |    CAST(concat('0x', substr(md5(split_part(bg, ' ', 2)),1,15)) AS BIGINT) AS w2h
+              |    ${hex60Sql("bg")} AS bh,
+              |    ${hex60Sql("split_part(bg, ' ', 1)")} AS w1h,
+              |    ${hex60Sql("split_part(bg, ' ', 2)")} AS w2h
               |  FROM (
-              |  SELECT doc_id, unnest(list_transform(
-              |    generate_series(1, greatest(len(t)-1, 0)),
-              |    i -> t[i] || ' ' || t[i+1])) AS bg FROM tk)),
-              |toks AS (SELECT CAST(concat('0x', substr(md5(w),1,15)) AS BIGINT) AS wh
+              |  SELECT doc_id, unnest(${gramsSql(2)}) AS bg FROM tk)),
+              |toks AS (SELECT ${hex60Sql("w")} AS wh
               |  FROM (SELECT unnest(t) AS w FROM tk)),
               |uni AS (SELECT wh, CAST(COUNT(*) AS BIGINT) AS u FROM toks GROUP BY 1),
               |ntot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM toks),
@@ -2576,16 +2536,14 @@ object TextAnalysis {
               |  FROM b2 JOIN c2 USING (bh) JOIN c1 ON c2.w1h = c1.w1h
               |  JOIN uni ON b2.w2h = uni.wh, ntot)
               |SELECT doc_id, COUNT(*) AS n_bigrams,
-              |ROUND(FLOOR(CAST(SUM(q_nll) AS DOUBLE) / COUNT(*)) / 1000000.0, 6) AS avg_nll
+              |$avgNllSql
               |FROM scored GROUP BY doc_id""".stripMargin)),
 
     QueryDef("txt_repetition",
       (s, d) => repetition(docs(s, d)),
       Some(s"""WITH tk AS (SELECT doc_id,
-              |    string_split_regex(trim(lower(text)),'\\s+') AS t FROM documents),
-              |b AS (SELECT doc_id, t, list_transform(
-              |    generate_series(1, greatest(len(t)-1, 0)),
-              |    i -> t[i] || ' ' || t[i+1]) AS bg FROM tk),
+              |    $tokSql AS t FROM documents),
+              |b AS (SELECT doc_id, t, ${gramsSql(2)} AS bg FROM tk),
               |m AS (SELECT doc_id,
               |  CAST(len(t) AS BIGINT) AS n_tokens,
               |  CAST(list_max(list_transform(list_distinct(t),
@@ -2662,8 +2620,8 @@ object TextAnalysis {
 
     QueryDef("txt_ppl_buckets",
       (s, d) => pplBuckets(docs(s, d)),
-      Some("""WITH tok AS (SELECT doc_id,
-             |    unnest(string_split_regex(trim(lower(text)),'\s+')) AS tk
+      Some(s"""WITH tok AS (SELECT doc_id,
+             |    unnest($tokSql) AS tk
              |  FROM documents),
              |vocab AS (SELECT tk, COUNT(*) AS cnt FROM tok GROUP BY 1),
              |tot AS (SELECT SUM(cnt) AS total FROM vocab),
@@ -2763,7 +2721,6 @@ object TextAnalysis {
       (s, d) => corpusGate(docs(s, d)),
       Some {
         val toks = "string_split_regex(trim(text),'\\s+')"
-        val toksL = "string_split_regex(trim(lower(text)),'\\s+')"
         val g = "GREATEST(en_hits,de_hits,fr_hits,es_hits)"
         s"""WITH q AS (SELECT doc_id,
            |  ROUND(CAST(len(list_distinct($toks)) AS DOUBLE) / len($toks) * 0.5
@@ -2772,9 +2729,9 @@ object TextAnalysis {
            |  FROM documents),
            |qq AS (SELECT doc_id, quality,
            |  CAST(quality >= 0.4 AS INT) AS q_keep FROM q),
-           |rb AS (SELECT doc_id, $toksL AS t,
-           |    list_transform(generate_series(1, greatest(len($toksL)-1, 0)),
-           |      i -> $toksL[i] || ' ' || $toksL[i+1]) AS bg
+           |rb AS (SELECT doc_id, $tokSql AS t,
+           |    list_transform(generate_series(1, greatest(len($tokSql)-1, 0)),
+           |      i -> $tokSql[i] || ' ' || $tokSql[i+1]) AS bg
            |  FROM documents),
            |rm AS (SELECT doc_id,
            |  ROUND(CAST(list_max(list_transform(list_distinct(t),
@@ -3015,8 +2972,8 @@ object TextAnalysis {
 
     QueryDef("txt_entropy",
       (s, d) => tokenEntropy(docs(s, d)),
-      Some("""WITH tk AS (SELECT doc_id,
-             |    unnest(string_split_regex(trim(lower(text)),'\s+')) AS tok
+      Some(s"""WITH tk AS (SELECT doc_id,
+             |    unnest($tokSql) AS tok
              |  FROM documents),
              |c AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c
              |  FROM tk GROUP BY 1, 2),
@@ -3125,8 +3082,7 @@ object TextAnalysis {
       (s, d) => curriculumOrder(docs(s, d)),
       Some(s"""WITH $bandPreludeSql,
               |ord AS (SELECT doc_id, band,
-              |    CAST(concat('0x', substr(md5(concat('cur',
-              |      CAST(doc_id AS VARCHAR))),1,15)) AS BIGINT) AS h
+              |    ${hex60Sql("concat('cur',\n      CAST(doc_id AS VARCHAR))")} AS h
               |  FROM b)
               |SELECT doc_id, band, h AS shuffle_key,
               |CAST(ROW_NUMBER() OVER (ORDER BY band DESC, h, doc_id) - 1
@@ -3137,8 +3093,7 @@ object TextAnalysis {
       (s, d) => qualityBands(docs(s, d)),
       Some(s"""WITH $bandPreludeSql,
               |k AS (SELECT band, n_tokens,
-              |    CAST(CAST(concat('0x', substr(md5(concat('qb',
-              |      CAST(doc_id AS VARCHAR))),1,15)) AS BIGINT)
+              |    CAST(${hex60Sql("concat('qb',\n      CAST(doc_id AS VARCHAR))")}
               |      % 4294967291 % 100
               |      < CASE band ${BandRates.toSeq.sortBy(_._1)
                        .map { case (bb, r) => s"WHEN $bb THEN $r" }
@@ -3155,7 +3110,7 @@ object TextAnalysis {
       Some(s"""WITH tok AS (SELECT doc_id, CAST(lang = 'en' AS INT) tgt,
               |    unnest(string_split_regex(trim(text),'\\s+')) AS w FROM documents),
               |tb AS (SELECT doc_id, tgt,
-              |    CAST(concat('0x', substr(md5(w),1,15)) AS BIGINT)
+              |    ${hex60Sql("w")}
               |      % 4294967291 % $DsirBuckets AS b
               |  FROM tok),
               |cb AS (SELECT b, CAST(COUNT(*) AS BIGINT) ccnt,
@@ -3233,11 +3188,9 @@ object TextAnalysis {
     QueryDef("txt_phrase_search",
       (s, d) => phraseSearch(docs(s, d)),
       Some(s"""WITH tk AS (SELECT doc_id,
-              |    string_split_regex(trim(lower(text)),'\\s+') AS t
+              |    $tokSql AS t
               |  FROM documents),
-              |bgs AS (SELECT doc_id, unnest(list_transform(
-              |    generate_series(1, greatest(len(t)-1, 0)),
-              |    i -> t[i] || ' ' || t[i+1])) AS phrase FROM tk),
+              |bgs AS (SELECT doc_id, unnest(${gramsSql(2)}) AS phrase FROM tk),
               |top AS (SELECT phrase, COUNT(*) AS c FROM bgs
               |  GROUP BY 1 ORDER BY c DESC, phrase LIMIT 1)
               |SELECT b.phrase, b.doc_id, CAST(COUNT(*) AS BIGINT) AS hits
@@ -3439,8 +3392,7 @@ object TextAnalysis {
         sum(round(col("quality") * lit(1000000.0d)).cast("long"))
           .as("q_sum"))
       .select(col("bin"), col("n_docs"), col("n_pos"),
-        round(floor(col("q_sum").cast("double") / col("n_docs"))
-          / 1000000.0d, 6).as("avg_score"),
+        microMean(col("q_sum"), col("n_docs")).as("avg_score"),
         round(col("n_pos") * lit(1000000.0d) / col("n_docs")).cast("long")
           .as("pos_rate_ppm"))
   }
@@ -3493,7 +3445,7 @@ object TextAnalysis {
     */
   def heapsLaw(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"),
-      explode(tokens(lower(col("text")))).as("tk"))
+      explode(lowTokens).as("tk"))
     // ONE corpus explode: both grains derive from the (doc, term)
     // matrix — far smaller than the token stream — so the scan and
     // the explode run once, not once per aggregate.
@@ -3600,8 +3552,8 @@ object TextAnalysis {
        |  FROM q, cuts)""".stripMargin
 
   private lazy val heapsLawSql: String =
-    """WITH tok AS (SELECT doc_id,
-      |    unnest(string_split_regex(trim(lower(text)),'\s+')) AS tk
+    s"""WITH tok AS (SELECT doc_id,
+      |    unnest($tokSql) AS tk
       |  FROM documents),
       |f AS (SELECT tk, MIN(doc_id) AS fd FROM tok GROUP BY 1),
       |pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS ntok
@@ -3638,7 +3590,7 @@ object TextAnalysis {
     */
   def zipfFit(docs: DataFrame, topK: Int = ZipfHead): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val tok = docs.select(explode(tokens(lower(col("text")))).as("tk"))
+    val tok = docs.select(explode(lowTokens).as("tk"))
     val freq = tok.groupBy(col("tk")).agg(count(lit(1)).as("cnt"))
     val top = freq.orderBy(col("cnt").desc, col("tk")).limit(topK)
     val ranked = top.withColumn("rank",
@@ -3669,7 +3621,7 @@ object TextAnalysis {
 
   private lazy val zipfFitSql: String =
     s"""WITH tok AS (SELECT
-       |    unnest(string_split_regex(trim(lower(text)),'\\s+')) AS tk
+       |    unnest($tokSql) AS tk
        |  FROM documents),
        |freq AS (SELECT tk, CAST(COUNT(*) AS BIGINT) AS cnt
        |  FROM tok GROUP BY 1),

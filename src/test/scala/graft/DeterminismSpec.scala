@@ -22,6 +22,8 @@ class DeterminismSpec extends SparkSpec {
     "dedup_minhash_lsh",      // banded candidates + verify
     "graph_pagerank",         // 5 integer iterations
     "txt_interp_logprob",     // quantized average
+    "txt_unigram_logprob",    // string-keyed vocab join + quantized sum
+    "txt_bigram_logprob",     // hash-keyed vocab-grain context derive
     "sim_knn_sq8_rerank",     // two-stage retrieval
     "e3_transitions",         // lag sequence + ratio
     "u4_train_test_split",    // hash-bucket split

@@ -389,6 +389,34 @@ class PlanSpec extends SparkSpec {
     "mix_curriculum"        // valueCuts band grain + pid-grain offsets
   )
 
+  test("LM family: no cartesian product, and the per-doc scoring " +
+    "aggregate combines map-side (partial + final)") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    Seq("txt_unigram_logprob", "txt_ppl_buckets", "txt_bigram_logprob",
+      "txt_trigram_logprob", "txt_interp_logprob", "txt_backoff_heldout",
+      "txt_kn_heldout").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, d).queryExecution
+        .executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.inputPlan
+          case p => p
+        }
+      assert(!plan.toString.contains("CartesianProduct"),
+        s"$name plans a cartesian product")
+      // the doc_id-keyed aggregate that sums the quantized q_nll
+      val modes = plan.collect {
+        case h: HashAggregateExec
+          if h.groupingExpressions.map(_.name) == Seq("doc_id") &&
+            h.aggregateExpressions.exists(
+              _.aggregateFunction.references.exists(_.name == "q_nll")) =>
+          h.aggregateExpressions.map(_.mode).toSet
+      }
+      assert(modes.contains(Set(Partial)) && modes.contains(Set(Final)),
+        s"$name: per-doc scoring aggregate modes $modes")
+    }
+  }
+
   test("single-partition windows run only over bounded-grain inputs " +
     "(whitelisted, audited)") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}

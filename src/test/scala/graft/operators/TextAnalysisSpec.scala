@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 
 case class TDoc(doc_id: Long, text: String, lang: String)
 
@@ -156,6 +157,41 @@ class TextAnalysisSpec extends SparkSpec {
     // doc 2 contains the split-context trigrams, so it is strictly
     // more surprising than doc 1's (which also shares 'a b' context)
     assert(out(2L)._3 > out(1L)._3)
+  }
+
+  test("interp logprob at lambda 1 is the bigram LM, row for row") {
+    // 1.0·x + 0.0·y = x exactly in IEEE, and every bigram's second word
+    // is in the unigram table, so the unigram join drops no bigram
+    val corpus = Seq(
+      TDoc(1, "x y x y x y", "en"),
+      TDoc(2, "x y x q", "en"),
+      TDoc(3, "a b c a b d", "en"),
+      TDoc(4, "solo", "en")).toDF()
+    def rows(df: DataFrame): Seq[(Long, Long, Double)] =
+      df.select("doc_id", "n_bigrams", "avg_nll")
+        .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    val bigram = rows(TextAnalysis.bigramLogprob(corpus))
+    assert(bigram.map(_._1) === Seq(1L, 2L, 3L))
+    assert(rows(TextAnalysis.interpLogprob(corpus, lambda = 1.0)) === bigram)
+  }
+
+  test("ppl buckets partition exactly the docs the unigram LM scores") {
+    // doc i: 10 − i shared words and i words of its own, so the
+    // per-doc score rises with i and the thirds are all populated
+    val corpus = (1 to 9).map { i =>
+      TDoc(i, (Seq.fill(10 - i)("the") ++ (1 to i).map(k => s"r${i}x$k"))
+        .mkString(" "), "en")
+    }.toDF()
+    val scored = TextAnalysis.unigramLogprob(corpus)
+      .select("doc_id", "n_tokens").as[(Long, Long)].collect()
+    val buckets = TextAnalysis.pplBuckets(corpus)
+      .select("bucket", "n_docs", "n_tokens", "avg_score_milli")
+      .as[(String, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    assert(buckets.keySet === Set("head", "middle", "tail"))
+    assert(buckets.values.map(_._2).sum === scored.length.toLong)
+    assert(buckets.values.map(_._3).sum === scored.map(_._2).sum)
+    assert(buckets("head")._4 <= buckets("middle")._4)
+    assert(buckets("middle")._4 <= buckets("tail")._4)
   }
 
   test("backoff heldout: each backoff level fires, unseen scores worse") {
